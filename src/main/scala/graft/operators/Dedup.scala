@@ -7,20 +7,23 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
 
-/** Deduplication operators for document corpora.
-  *
-  * All variants follow the shuffle-minimal shapes that survive a 100 TB
-  * corpus on a real cluster:
-  *   - exact: one hash-groupBy on a 128-bit fingerprint (no text shuffle —
-  *     only (fingerprint, id) pairs move);
-  *   - MinHash/LSH: signature → band buckets → per-bucket candidate
-  *     pairs → Jaccard verification. Only ids+signatures shuffle; text is
-  *     never moved. Bucket skew is bounded because band values are
-  *     hashes (uniform); AQE handles residual skew;
-  *   - SimHash: 64-bit signature, near-dup = small Hamming distance,
-  *     candidates generated by band-of-bits buckets;
-  *   - n-gram Jaccard: exact set similarity via explode + equi-join on
-  *     shingle (the scalable form of pairwise set intersection).
+/** Deduplication operators for document and media corpora, in the
+  * shuffle-minimal shapes that survive a 100 TB corpus on a real
+  * cluster:
+  *   - exact: one hash-groupBy on a 128-bit fingerprint (only
+  *     (fingerprint, id) pairs move, never text);
+  *   - near-dup — MinHash, SimHash, perceptual Hamming, two-lane,
+  *     temporal, span-temporal and region signatures: each operator is
+  *     one call to the private banded-candidate core [[bandJoin]] plus
+  *     its own verify step. The core bands the signatures into buckets,
+  *     caps mega-buckets, joins on the bucket (self form: one reused
+  *     plan, id1 < id2; cross form: index × batch only), filters on the
+  *     score ahead of the dedup exchange and deduplicates the pairs, so
+  *     the candidate policy lives in one place. Only ids and signatures
+  *     shuffle; text and media never move;
+  *   - n-gram Jaccard and contamination: exact set similarity via
+  *     explode + equi-join on shingle hashes, under the same cap;
+  *   - span removal, clustering and incremental new-row filters.
   */
 object Dedup {
 
@@ -51,38 +54,9 @@ object Dedup {
       .select(col("id"), Text.minhashSignature(col("shingles"), k).as("sig"))
   }
 
-  /** LSH candidate pairs from MinHash signatures: split the signature
-    * into `bands` bands of `k/bands` rows; docs sharing any band value
-    * become a candidate pair (id1 < id2). Returned distinct.
-    *
-    * Buckets larger than `maxBucketSize` are dropped before the
-    * self-join: a mega-bucket means that band value carries almost no
-    * information (ubiquitous shingles), while contributing O(c²) pairs —
-    * the cap bounds total candidate work at any corpus size.
-    */
-  /** When true (default), candidate pairs are deduplicated across bands
-    * BEFORE being returned. Callers that follow with their own cheap
-    * filter+distinct can pass `dedup = false` to skip the expensive
-    * full-candidate distinct.
-    */
-  def minhashCandidates(sigs: DataFrame, k: Int = 32, bands: Int = 8,
-      maxBucketSize: Int = 256, dedup: Boolean = true): DataFrame = {
-    val rowsPerBand = k / bands
-    val banded = sigs.select(col("id"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b)))
-      .as(Seq("band", "bucket")))
-    val bounded = capBuckets(banded, Seq("band", "bucket"), maxBucketSize)
-    val l = bounded.as("l")
-    val r = bounded.as("r")
-    val pairs = l.join(r, col("l.band") === col("r.band") &&
-        col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"))
-    if (dedup) pairs.distinct() else pairs
-  }
-
   /** Drop rows belonging to (keys)-groups larger than `cap` — the
-    * mega-bucket guard shared by all LSH candidate generators.
+    * mega-bucket guard of [[bandJoin]] and the shingle-frequency cap of
+    * [[ngramJaccardPairs]] / [[crossCorpusOverlap]].
     *
     * Implemented as a partial-aggregating `groupBy(keys).count` plus a
     * semi-join, NOT a `COUNT(*) OVER (PARTITION BY keys)` window: the
@@ -94,7 +68,7 @@ object Dedup {
     * moves only once and never sorts. Shuffle volume is what dominates
     * LSH candidate generation at scale.
     */
-  private[operators] def capBuckets(df: DataFrame, keys: Seq[String],
+  private def capBuckets(df: DataFrame, keys: Seq[String],
       cap: Int): DataFrame = {
     val ok = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c"))
       .filter(col("__c") <= cap)
@@ -102,74 +76,201 @@ object Dedup {
     df.join(ok, keys, "left_semi")
   }
 
-  /** Full MinHash near-dedup, two-stage verification:
-    *   1. ESTIMATE Jaccard per candidate pair from the signatures
-    *      themselves (matching minhash components / k) — k long compares,
-    *      no shingle materialization. Pairs estimating far below the
-    *      threshold are dropped.
-    *   2. EXACT Jaccard (array_intersect over shingle sets) only for the
-    *      survivors.
-    * At scale stage 1 eliminates the vast majority of candidate pairs at
-    * ~1% of the cost of an exact intersection; the looser stage-1 cut
-    * (threshold/2) keeps the miss probability for true near-dups small.
+  /** The banded-candidate core: banding, bucket cap, bucket join, the
+    * score filter and the pair dedup, in one place for every near-dup
+    * operator.
+    *
+    * Each side is exploded into one row per band — `band` is an array
+    * of bucket values evaluated per row, posexploded into (band, block)
+    * next to the `carry` columns — and capped by [[capBuckets]] on
+    * `keys`. Rows sharing every key column are candidates:
+    *   - self form (`batch = None`): both join sides are the SAME capped
+    *     plan (one exchange, reused) joined with l.id < r.id;
+    *   - cross form: index × batch collisions only, no within-side
+    *     pair. The index side is always capped (it is the unbounded one
+    *     at scale); `capBatch` caps the batch side too.
+    * Output is (id1, id2, score...) with id1 from the index side;
+    * `score` columns read the sides as `l.<col>` / `r.<col>`. `keep`
+    * filters AHEAD of the dedup exchange: a pair colliding in several
+    * bands yields duplicate rows with identical deterministic scores,
+    * so filter-then-distinct equals distinct-then-filter while the
+    * exchange moves only survivors (39.9k → 241 rows on x8c at sf0.1).
+    * `dedup = false` leaves the band-duplicated rows to the caller —
+    * MinHash defers its distinct past the signature-estimate cut.
     */
-  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 32, bands: Int = 8, shingleSize: Int = 3,
-      threshold: Double = 0.8, exactVerify: Boolean = true): DataFrame = {
-    // ONE tokenize+shingle pass over the text: the distinct shingle-hash
-    // sets serve BOTH the signatures (minhash_from_hashes is
-    // bit-identical to the string-shingle signature — same XXH64 per
-    // shingle) and, when exactVerify, the verification stage below.
-    // Shingling is the CPU-dominant stage of the whole pipeline; the
-    // previous shape paid it twice.
-    // trackedPersist: repeat callers (the DocStream micro-batch loop)
-    // release exactly these intermediates via Graft.cacheScope instead
-    // of a session-wide clearCache; plain persist outside any scope.
-    // ONE combined (id, set, sig) cache (was two chained persists —
-    // the sigs cache's materialization was a second barrier reading the
-    // first cache): consumers column-prune the cached batches
-    // (optimization round 17, guide §1.2/§5).
-    val base = graft.Graft.trackedPersist(
-      graft.Graft.ensureParallelism(df)
-        .select(col(idCol).as("id"),
-          array_distinct(call_function("word_shingle_hashes",
-            col(textCol), lit(shingleSize))).as("set"))
-        .filter(size(col("set")) > 0)
-        .withColumn("sig",
-          call_function("minhash_from_hashes", col("set"), lit(k))))
-    val hashSets = base.select(col("id"), col("set"))
-    val sigs = base.select(col("id"), col("sig"))
-    // Raw (band-duplicated) pairs: the distinct is deferred until AFTER
-    // the signature-estimate cut — deduplicating the few survivors is
-    // far cheaper than deduplicating the full candidate stream, and the
-    // estimate itself is a native k-long compare (~free).
-    val cands = minhashCandidates(sigs, k, bands, dedup = false)
-    val stage1Cut = if (exactVerify) threshold / 2 else threshold
+  private def bandJoin(index: DataFrame, batch: Option[DataFrame],
+      carry: Seq[String], band: Column, cap: Int,
+      keys: Seq[String] = Seq("band", "block"), capBatch: Boolean = false,
+      score: Seq[Column] = Nil, keep: Option[Column] = None,
+      dedup: Boolean = true): DataFrame = {
+    def banded(df: DataFrame): DataFrame =
+      df.select(carry.map(col) :+ posexplode(band).as(Seq("band", "block")): _*)
+    val l = capBuckets(banded(index), keys, cap)
+    val r = batch.fold(l)(b =>
+      if (capBatch) capBuckets(banded(b), keys, cap) else banded(b))
+    val collide = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+    val pairs = l.as("l")
+      .join(r.as("r"),
+        if (batch.isEmpty) collide && col("l.id") < col("r.id") else collide)
+      .select(Seq(col("l.id").as("id1"), col("r.id").as("id2")) ++ score: _*)
+    val kept = keep.fold(pairs)(pairs.filter)
+    if (dedup) kept.distinct() else kept
+  }
+
+  /** Cross-form output names: (id1, id2) → (index_id, batch_id). */
+  private def asCross(pairs: DataFrame): DataFrame =
+    pairs.withColumnsRenamed(Map("id1" -> "index_id", "id2" -> "batch_id"))
+
+  /** The self form's signatures, persisted: banding, the cap's count
+    * side and the verify arrays all read them, and the signature
+    * computation is the plan's only CPU-heavy stage. trackedPersist,
+    * not a bare persist: micro-batch callers (the stream gates) wrap
+    * each batch in Graft.cacheScope and drain tracked intermediates at
+    * batch end; a plain persist would accrete one orphaned cached frame
+    * per micro-batch. Cross forms read their inputs once per consumer
+    * and persist nothing.
+    */
+  private def selfSide(index: DataFrame, batch: Option[DataFrame]): DataFrame =
+    if (batch.isEmpty) graft.Graft.trackedPersist(index) else index
+
+  /** Bucket values of a 64-bit `sig` cut into `bands` equal blocks
+    * (64/bands bits each). Pigeonhole: a pair at Hamming distance
+    * d <= bands - 1 has at least one clean block, so banded Hamming
+    * recall is EXACT whenever the radius is <= bands - 1 and no bucket
+    * hit the cap.
+    */
+  private def hammingBand(bands: Int): Column = {
+    require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
+    val blockBits = 64 / bands
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
+        .bitwiseAND(lit((1L << blockBits) - 1)))
+  }
+
+  /** Two-lane SimHash bucket values: 8 × 16-bit blocks, bands 0–3 from
+    * `siga`, 4–7 from `sigb`. The first four are exactly
+    * `hammingBand(4)` over siga, which is what lets one banding pass
+    * serve both lanes in [[simhashNearDupsAgreement]].
+    */
+  private def twoLaneBand: Column =
+    transform(sequence(lit(0), lit(7)), b =>
+      when(b < 4,
+        call_function("shiftright", col("siga"), b.cast("int") * 16))
+        .otherwise(call_function("shiftright", col("sigb"),
+          (b.cast("int") - 4) * 16))
+        .bitwiseAND(lit(0xFFFFL)))
+
+  /** MinHash bucket values: the signature cut into `bands` slices of
+    * k/bands components, each slice hashed with its band number. */
+  private def minhashBand(k: Int, bands: Int): Column = {
+    val rowsPerBand = k / bands
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))
+  }
+
+  /** MinHash's (id, set, sig) frame — ONE tokenize+shingle pass: the
+    * distinct shingle-hash sets serve both the signature
+    * (minhash_from_hashes is bit-identical to the string-shingle
+    * signature — same XXH64 per shingle) and the exact verify.
+    * Shingling is the CPU-dominant stage of the pipeline. One combined
+    * cache (two chained persists made the second materialization a
+    * barrier reading the first); consumers column-prune the cached
+    * batches (optimization round 17, guide §1.2/§5). trackedPersist:
+    * the DocStream micro-batch loop drains it through Graft.cacheScope.
+    */
+  private def minhashSets(df: DataFrame, idCol: String, textCol: String,
+      k: Int, shingleSize: Int): DataFrame =
+    graft.Graft.trackedPersist(shingleSets(df, idCol, textCol, shingleSize)
+      .withColumn("sig",
+        call_function("minhash_from_hashes", col("set"), lit(k))))
+
+  /** Per-doc distinct `shingleSize`-token shingle HASHES (id, set) —
+    * 8 B per shingle, so text never moves past the scan. Docs with no
+    * shingle are dropped. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int): DataFrame =
+    graft.Graft.ensureParallelism(df)
+      .select(col(idCol).as("id"),
+        array_distinct(call_function("word_shingle_hashes",
+          col(textCol), lit(shingleSize))).as("set"))
+      .filter(size(col("set")) > 0)
+
+  /** MinHash two-stage verification of band-duplicated candidates
+    * (id1, id2) against the [[minhashSets]] frames of their sides:
+    *   1. ESTIMATE Jaccard from the signatures (matching components / k
+    *      — k long compares, no shingle materialization), cut at
+    *      threshold/2, then the deferred distinct: deduplicating the few
+    *      survivors is far cheaper than deduplicating the full candidate
+    *      stream;
+    *   2. EXACT Jaccard (array_intersect over the 64-bit shingle-hash
+    *      sets — 8 B per shingle instead of the string, ~5× less join
+    *      volume; equal to the string-set value up to intra-pair
+    *      collision P ≈ |set|²/2^64 ≈ 1e-15) for the survivors only.
+    * Stage 1 drops the vast majority of candidates at ~1% of the cost
+    * of an exact intersection; the loose threshold/2 cut keeps the miss
+    * probability for true near-dups small.
+    */
+  private def minhashVerify(cands: DataFrame, left: DataFrame,
+      right: DataFrame, k: Int, threshold: Double): DataFrame = {
     val estimated = cands
-      .join(sigs.select(col("id").as("id1"), col("sig").as("sig1")), "id1")
-      .join(sigs.select(col("id").as("id2"), col("sig").as("sig2")), "id2")
+      .join(left.select(col("id").as("id1"), col("sig").as("sig1")), "id1")
+      .join(right.select(col("id").as("id2"), col("sig").as("sig2")), "id2")
       .withColumn("est", Text.minhashEstimate(col("sig1"), col("sig2"), k))
-      .filter(col("est") >= stage1Cut)
+      .filter(col("est") >= threshold / 2)
       .select("id1", "id2", "est")
       .distinct()
-    if (!exactVerify)
-      // signature estimate IS the similarity (Spark ML MinHashLSH
-      // semantics) — no shingle re-materialization at all
-      return estimated.select(col("id1"), col("id2"), col("est").as("jaccard"))
-    // Exact verification over the SAME cached hash sets (8 B per shingle
-    // instead of the string): verification is shuffle-bound and the hash
-    // sets cut the two per-side joins' volume ~5×. Jaccard over 64-bit
-    // hash sets equals the string-set value (intra-pair collision
-    // P ≈ |set|²/2^64 ≈ 1e-15).
-    val sets = hashSets
-    val j = estimated.select("id1", "id2")
-      .join(sets.select(col("id").as("id1"), col("set").as("set1")), "id1")
-      .join(sets.select(col("id").as("id2"), col("set").as("set2")), "id2")
+      .select("id1", "id2")
+    exactJaccard(estimated, left, right, threshold)
+  }
+
+  /** EXACT Jaccard of candidate pairs (id1, id2) over the (id, set)
+    * shingle-hash sets of their sides, kept at >= `threshold`. */
+  private def exactJaccard(pairs: DataFrame, left: DataFrame,
+      right: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .join(left.select(col("id").as("id1"), col("set").as("set1")), "id1")
+      .join(right.select(col("id").as("id2"), col("set").as("set2")), "id2")
       .withColumn("inter", size(array_intersect(col("set1"), col("set2"))))
       .withColumn("uni", size(col("set1")) + size(col("set2")) - col("inter"))
       .withColumn("jaccard", col("inter").cast("double") /
         greatest(col("uni"), lit(1)).cast("double"))
-    j.filter(col("jaccard") >= threshold).select("id1", "id2", "jaccard")
+      .filter(col("jaccard") >= threshold)
+      .select("id1", "id2", "jaccard")
+
+  /** Full MinHash near-dedup: [[minhashSets]] → banding of the
+    * signature into `bands` bands of k/bands components (capped at 256
+    * docs per bucket: a mega-bucket means the band value carries almost
+    * no information while contributing O(c²) pairs) → [[minhashVerify]].
+    * Output (id1, id2, jaccard) with id1 < id2 and EXACT Jaccard >=
+    * `threshold`.
+    */
+  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
+      k: Int = 32, bands: Int = 8, shingleSize: Int = 3,
+      threshold: Double = 0.8): DataFrame = {
+    val sets = minhashSets(df, idCol, textCol, k, shingleSize)
+    minhashVerify(bandJoin(sets, None, Seq("id"), minhashBand(k, bands), 256,
+      dedup = false), sets, sets, k, threshold)
+  }
+
+  /** Cross-corpus [[minhashNearDups]]: (index_id, batch_id, jaccard)
+    * with EXACT Jaccard >= `threshold` — the incremental production
+    * shape (a new crawl against the indexed corpus). The [[bandJoin]]
+    * cross form generates index × batch candidates only, so the index's
+    * self-similarity (typically most near-dup pairs — it was deduped
+    * once already) costs nothing; within-batch dedup is a separate
+    * batch-local step (x18/x28). Unlike the Hamming-family cross forms,
+    * BOTH sides are capped, bounding any band value's cross product at
+    * cap².
+    */
+  def minhashNearDupsCross(index: DataFrame, batch: DataFrame,
+      idCol: String, textCol: String, k: Int = 32, bands: Int = 8,
+      shingleSize: Int = 3, threshold: Double = 0.8,
+      maxBucketSize: Int = 256): DataFrame = {
+    val iSets = minhashSets(index, idCol, textCol, k, shingleSize)
+    val bSets = minhashSets(batch, idCol, textCol, k, shingleSize)
+    asCross(minhashVerify(bandJoin(iSets, Some(bSets), Seq("id"),
+      minhashBand(k, bands), maxBucketSize, capBatch = true, dedup = false),
+      iSets, bSets, k, threshold))
   }
 
   /** SimHash near-dup candidate pairs: 62-bit signature over
@@ -192,60 +293,39 @@ object Dedup {
     hammingNearDupsSig(sigs, maxHamming, maxBucketSize, bands = 4)
   }
 
+  private def hammingPairs(index: DataFrame, batch: Option[DataFrame],
+      maxHamming: Int, cap: Int, bands: Int): DataFrame = {
+    val band = hammingBand(bands)
+    bandJoin(selfSide(index, batch), batch, Seq("id", "sig"), band, cap,
+      score = Seq(Text.hamming64(col("l.sig"), col("r.sig")).as("hamming")),
+      keep = Some(col("hamming") <= maxHamming))
+  }
+
   /** Banded Hamming near-dup pairs over PRECOMPUTED 64-bit signatures —
     * the machinery behind [[simhashNearDups]] (text) and m11's
-    * perceptual image dHash, factored so any 64-bit similarity-
-    * preserving signature feeds the same bucket-join. Input: (id, sig);
-    * output: (id1, id2, hamming) with id1 < id2 and hamming <=
-    * `maxHamming`.
+    * perceptual image dHash: any 64-bit similarity-preserving signature
+    * feeds the same [[bandJoin]]. Input: (id, sig); output: (id1, id2,
+    * hamming) with id1 < id2 and hamming <= `maxHamming`.
     *
-    * The signature is cut into `bands` equal blocks (64/bands bits);
-    * candidates are pairs sharing any (band, block) bucket, verified by
-    * exact Hamming distance. Pigeonhole: a pair at distance d <= bands-1
-    * has at least one clean block, so recall is EXACT (not
-    * probabilistic) whenever maxHamming <= bands - 1 and no bucket hit
-    * the df-cap — m11 runs bands=8/radius-7 on that contract (so its
-    * DuckDB oracle can demand the complete pair set), while the text
-    * default (bands=4, 16-bit blocks, radius 3) keeps the same
-    * guarantee with production bucket cardinality (2^16 values/band;
-    * 8-bit blocks would mega-bucket a large corpus).
+    * Candidates share a (band, block) bucket of [[hammingBand]]; recall
+    * is pigeonhole-exact whenever maxHamming <= bands - 1 — m11 runs
+    * bands=8/radius-7 on that contract (so its DuckDB oracle can demand
+    * the complete pair set), while the text default (bands=4, 16-bit
+    * blocks, radius 3) keeps the same guarantee with production bucket
+    * cardinality (2^16 values/band; 8-bit blocks would mega-bucket a
+    * large corpus).
     */
-  def hammingNearDupsSig(sigs0: DataFrame, maxHamming: Int = 3,
-      maxBucketSize: Int = 256, bands: Int = 4): DataFrame = {
-    require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
-    val blockBits = 64 / bands
-    // persist the (id, sig) projection: the bucket-cap count side and the
-    // self-join side otherwise each re-run the signature computation over
-    // the raw input (the plan's only CPU-heavy stage; cache is 16 B/doc).
-    // trackedPersist, not a bare persist: micro-batch callers
-    // (MediaStream.ingestBatch) wrap each batch in Graft.cacheScope and
-    // drain tracked intermediates at batch end — a plain persist here
-    // would accrete one orphaned cached frame per micro-batch forever.
-    val sigs = graft.Graft.trackedPersist(sigs0, StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sigs.select(col("id"), col("sig"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
-          .bitwiseAND(lit((1L << blockBits) - 1))))
-      .as(Seq("band", "block")))
-    // no persist: the l/r sides of the self-join are the same capped
-    // plan and reuse its shuffle (ReusedExchange)
-    val banded = capBuckets(banded0, Seq("band", "block"), maxBucketSize)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    // Radius filter AHEAD of the dedup exchange (guide §2.3, the v21
-    // precedent): duplicate candidate rows (same pair colliding in
-    // several bands) carry the identical deterministic hamming, so
-    // filtering first then deduplicating equals the old
-    // distinct-then-filter — and the exchange now moves only
-    // within-radius survivors instead of the full collision stream
-    // (39.9k → 241 rows measured on x8c at sf0.1).
-    l.join(r, col("l.band") === col("r.band") &&
-        col("l.block") === col("r.block") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"),
-        Text.hamming64(col("l.sig"), col("r.sig")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+  def hammingNearDupsSig(sigs: DataFrame, maxHamming: Int = 3,
+      maxBucketSize: Int = 256, bands: Int = 4): DataFrame =
+    hammingPairs(sigs, None, maxHamming, maxBucketSize, bands)
+
+  /** The [[bandJoin]] cross form of [[hammingNearDupsSig]] (the
+    * streaming perceptual-dedup ingest): (index_id, batch_id, hamming),
+    * index side capped. */
+  def hammingNearDupsSigCross(index: DataFrame, batch: DataFrame,
+      maxHamming: Int = 3, maxBucketSize: Int = 256,
+      bands: Int = 4): DataFrame =
+    asCross(hammingPairs(index, Some(batch), maxHamming, maxBucketSize, bands))
 
   /** Wide-signature SimHash near-dups: TWO independent 62-bit lanes
     * (124 signature bits total), banded into 8×16-bit blocks (4 per
@@ -276,141 +356,121 @@ object Dedup {
           col("sig2").getItem(1).as("sigb")),
       maxHamming, maxBucketSize)
 
+  private def laneAHamming: Column = Text.hamming64(col("l.siga"), col("r.siga"))
+  private def wideHamming: Column =
+    laneAHamming + Text.hamming64(col("l.sigb"), col("r.sigb"))
+
   /** [[simhashNearDups128]] over PRECOMPUTED two-lane signatures —
     * input (id, siga, sigb). Factored out so callers that already hold
     * the signature frame (x35's dedup-agreement audit shares one
     * signature scan across its lanes) skip the text pass entirely.
     */
-  def simhashNearDups128Sig(sigs0: DataFrame,
-      maxHamming: Int = 32, maxBucketSize: Int = 256): DataFrame = {
-    val sigs = graft.Graft.trackedPersist( // see simhashNearDups
-      sigs0, StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sigs.select(col("id"), col("siga"), col("sigb"), posexplode(
-      transform(sequence(lit(0), lit(7)), b =>
-        when(b < 4,
-          call_function("shiftright", col("siga"), b.cast("int") * 16))
-          .otherwise(call_function("shiftright", col("sigb"),
-            (b.cast("int") - 4) * 16))
-          .bitwiseAND(lit(0xFFFFL))))
-      .as(Seq("band", "block")))
-    val banded = capBuckets(banded0, Seq("band", "block"), maxBucketSize)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    // radius filter ahead of the dedup exchange — see hammingNearDupsSig
-    l.join(r, col("l.band") === col("r.band") &&
-        col("l.block") === col("r.block") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"),
-        (Text.hamming64(col("l.siga"), col("r.siga")) +
-          Text.hamming64(col("l.sigb"), col("r.sigb"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+  def simhashNearDups128Sig(sigs: DataFrame,
+      maxHamming: Int = 32, maxBucketSize: Int = 256): DataFrame =
+    bandJoin(selfSide(sigs, None), None, Seq("id", "siga", "sigb"),
+      twoLaneBand, maxBucketSize, score = Seq(wideHamming.as("hamming")),
+      keep = Some(col("hamming") <= maxHamming))
 
-  /** BOTH SimHash lanes' near-dup pair sets from ONE banding/cap/join
-    * pass — the dedup-agreement audit's shape (x35). Input
-    * (id, siga, sigb); output (lane, id1, id2) with lane ∈ {'a',
-    * 'wide'}: 'a' = lane-A radius `maxHammingA` pairs (exactly
-    * [[hammingNearDupsSig]] over siga, bands = 4), 'wide' = two-lane
-    * summed-radius `maxHammingWide` pairs (exactly
-    * [[simhashNearDups128Sig]]).
+  /** BOTH SimHash lanes' near-dup pair sets from ONE [[bandJoin]] pass
+    * — the dedup-agreement audit's shape (x35). Input (id, siga, sigb);
+    * output (lane, id1, id2) with lane ∈ {'a', 'wide'}: 'a' = lane-A
+    * radius `maxHammingA` pairs (exactly [[hammingNearDupsSig]] over
+    * siga, bands = 4), 'wide' = two-lane summed-radius `maxHammingWide`
+    * pairs (exactly [[simhashNearDups128Sig]]).
     *
-    * Exactness: the wide lane's 8×16-bit banding (bands 0–3 = siga
-    * blocks, 4–7 = sigb blocks) CONTAINS the radius-A lane's 4×16-bit
-    * banding as its first four bands — same band ids, same block
-    * values — so the merged stream's (band, block) groups for band < 4
-    * are row-identical to the single-lane banding and ONE df-cap
-    * yields both lanes' capped streams exactly. The A lane keeps pairs
-    * colliding in a band < 4 with hamming(siga) ≤ maxHammingA; the
-    * wide lane keeps pairs colliding anywhere with summed hamming ≤
-    * maxHammingWide — bit-identical to running the two pipelines
-    * independently (TextDedupSpec pins this), at half the
-    * banding/cap/join stages, and the self-join's exchanges are shared
-    * between the two output branches (optimization round 17, guide
-    * §2.4). Radius filters run ahead of each dedup exchange (the
-    * hammingNearDupsSig rule).
+    * Exactness: [[twoLaneBand]]'s bands 0–3 are lane A's 4×16-bit
+    * banding — same band ids, same block values — so the (band, block)
+    * groups for band < 4 are row-identical to the single-lane banding
+    * and ONE cap yields both lanes' capped streams exactly. The A lane
+    * keeps pairs colliding in a band < 4 within `maxHammingA`; the wide
+    * lane keeps pairs colliding anywhere within `maxHammingWide` —
+    * bit-identical to the two independent pipelines (TextDedupSpec pins
+    * this) at half the banding/cap/join stages, and the self-join's
+    * exchanges are shared between the two output branches (optimization
+    * round 17, guide §2.4). Each lane filters ahead of its own dedup
+    * exchange, the [[bandJoin]] rule.
     */
-  def simhashNearDupsAgreement(sigs0: DataFrame, maxHammingA: Int = 3,
+  def simhashNearDupsAgreement(sigs: DataFrame, maxHammingA: Int = 3,
       maxHammingWide: Int = 32, maxBucketSize: Int = 256): DataFrame = {
-    val sigs = graft.Graft.trackedPersist(sigs0, StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sigs.select(col("id"), col("siga"), col("sigb"), posexplode(
-      transform(sequence(lit(0), lit(7)), b =>
-        when(b < 4,
-          call_function("shiftright", col("siga"), b.cast("int") * 16))
-          .otherwise(call_function("shiftright", col("sigb"),
-            (b.cast("int") - 4) * 16))
-          .bitwiseAND(lit(0xFFFFL))))
-      .as(Seq("band", "block")))
-    val banded = capBuckets(banded0, Seq("band", "block"), maxBucketSize)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val joined = l.join(r, col("l.band") === col("r.band") &&
-        col("l.block") === col("r.block") && col("l.id") < col("r.id"))
-      .select(col("l.band").as("band"),
-        col("l.id").as("id1"), col("r.id").as("id2"),
-        Text.hamming64(col("l.siga"), col("r.siga")).as("ha"),
-        (Text.hamming64(col("l.siga"), col("r.siga")) +
-          Text.hamming64(col("l.sigb"), col("r.sigb"))).as("hw"))
-    val laneA = joined
-      .filter(col("band") < 4 && col("ha") <= maxHammingA)
-      .select(lit("a").as("lane"), col("id1"), col("id2"))
-      .distinct()
-    val wide = joined
-      .filter(col("hw") <= maxHammingWide)
-      .select(lit("wide").as("lane"), col("id1"), col("id2"))
-      .distinct()
-    laneA.unionByName(wide)
+    val joined = bandJoin(selfSide(sigs, None), None,
+      Seq("id", "siga", "sigb"), twoLaneBand, maxBucketSize,
+      score = Seq(col("l.band").as("band"), laneAHamming.as("ha"),
+        wideHamming.as("hw")),
+      dedup = false)
+    def lane(name: String, keep: Column): DataFrame =
+      joined.filter(keep)
+        .select(lit(name).as("lane"), col("id1"), col("id2"))
+        .distinct()
+    lane("a", col("band") < 4 && col("ha") <= maxHammingA)
+      .unionByName(lane("wide", col("hw") <= maxHammingWide))
   }
 
-  /** Cross-corpus banded Hamming pairs over precomputed 64-bit
-    * signatures: candidates are INDEX×BATCH bucket collisions only (no
-    * within-side pairs — the [[minhashNearDupsCross]] shape for the
-    * Hamming domain, used by the streaming perceptual-dedup ingest).
-    * Inputs are (id, sig) frames; output (index_id, batch_id, hamming)
-    * with hamming <= `maxHamming`. The df-cap applies to the index side
-    * (the unbounded one at scale); same pigeonhole-exact recall rule as
-    * [[hammingNearDupsSig]] when maxHamming <= bands - 1.
+  /** Banded Hamming pairs verified against per-asset signature arrays —
+    * the temporal, span-temporal and region families. `slotted` bands
+    * on (slot, band, block), so a pair must collide on the SAME slot;
+    * otherwise on (band, block) across rows. `arrays` builds (id, arr)
+    * per side and `score` compares two assets' arrays; pairs scoring <=
+    * `maxHamming` are kept as (id1, id2, <name>). Per-asset state is
+    * bounded (k slots, R regions, S spans × k slots) and only
+    * (id, slot/region, 8 B sig) rows shuffle — media never leaves its
+    * scan.
     */
-  def hammingNearDupsSigCross(index: DataFrame, batch: DataFrame,
-      maxHamming: Int = 3, maxBucketSize: Int = 256,
-      bands: Int = 4): DataFrame = {
-    require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
-    val blockBits = 64 / bands
-    def banded(df: DataFrame): DataFrame =
-      df.select(col("id"), col("sig"), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
-            .bitwiseAND(lit((1L << blockBits) - 1))))
-        .as(Seq("band", "block")))
-    val l = capBuckets(banded(index), Seq("band", "block"), maxBucketSize)
-      .as("l")
-    val r = banded(batch).as("r")
-    // radius filter ahead of the dedup exchange — see hammingNearDupsSig
-    l.join(r, col("l.band") === col("r.band") &&
-        col("l.block") === col("r.block"))
-      .select(col("l.id").as("index_id"), col("r.id").as("batch_id"),
-        Text.hamming64(col("l.sig"), col("r.sig")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+  private def arrayPairs(index: DataFrame, batch: Option[DataFrame],
+      maxHamming: Int, cap: Int, bands: Int, slotted: Boolean, name: String)(
+      arrays: DataFrame => DataFrame,
+      score: (Column, Column) => Column): DataFrame = {
+    val band = hammingBand(bands)
+    val sigs = selfSide(index, batch)
+    val (carry, keys) =
+      if (slotted) (Seq("id", "slot", "sig"), Seq("slot", "band", "block"))
+      else (Seq("id", "sig"), Seq("band", "block"))
+    bandJoin(sigs, batch, carry, band, cap, keys)
+      .join(arrays(sigs).select(col("id").as("id1"), col("arr").as("a1")), "id1")
+      .join(arrays(batch.getOrElse(sigs))
+        .select(col("id").as("id2"), col("arr").as("a2")), "id2")
+      .withColumn(name, score(col("a1"), col("a2")))
+      .filter(col(name) <= maxHamming)
+      .select(col("id1"), col("id2"), col(name))
   }
+
+  /** A group's (slot, sig) rows as a slot-ordered array. */
+  private def slotList: Column =
+    sort_array(collect_list(struct(col("slot"), col("sig"))))
+
+  /** Worst aligned slot of two slot arrays. zip_with pads the shorter
+    * side with nulls; a null (padded slot or null signature) scores 65
+    * (> any real distance), so it surfaces as a non-match instead of
+    * array_max silently skipping it. */
+  private def slotMax(a: Column, b: Column): Column =
+    array_max(zip_with(a, b, (x, y) =>
+      coalesce(Text.hamming64(x.getField("sig"), y.getField("sig")), lit(65L))))
+
+  /** Minimum of `f` over the cross product of two arrays. */
+  private def crossMin(a: Column, b: Column)(f: (Column, Column) => Column): Column =
+    array_min(flatten(transform(a, x => transform(b, y => f(x, y))))).cast("long")
+
+  private def temporalPairs(index: DataFrame, batch: Option[DataFrame],
+      maxHamming: Int, cap: Int, bands: Int): DataFrame =
+    arrayPairs(index, batch, maxHamming, cap, bands, slotted = true,
+      "max_hamming")(_.groupBy(col("id")).agg(slotList.as("arr")),
+      (a, b) => when(size(a) === size(b), slotMax(a, b)))
 
   /** Banded Hamming near-dup pairs over MULTI-SLOT 64-bit signatures —
     * the temporal extension of [[hammingNearDupsSig]] for video
     * (m14: one [[graft.operators.Multimodal.videoDHash]] frame hash
     * per sampled slot). Input: (id, slot, sig); output: (id1, id2)
-    * with id1 < id2, for pairs where EVERY aligned slot is within
-    * `maxHamming` — the whole-clip near-dup semantic (a re-encode /
-    * rescale of the same clip perturbs every frame a little; unrelated
-    * clips differ a lot in at least one frame — measured on the m14
-    * corpus: planted re-encode pairs' worst slot ≤ 8 bits, unrelated
-    * pairs' worst slot ≥ 25). Since round 14 the upstream
-    * [[graft.operators.Multimodal.videoDHash]] samples slots at fixed
-    * fractions of DURATION and always emits k of them, so re-encodes
-    * at a DIFFERENT FRAME RATE (the m18 frame-duplicated upsample)
-    * align slot-for-slot on content time and land here like any other
-    * re-encode; the equal-slot-count guard below is then trivially
-    * satisfied for that producer and remains only for direct callers
-    * feeding genuinely differing slot counts (different k — different
-    * signatures, never comparable).
+    * with id1 < id2, for pairs with equal slot counts where EVERY
+    * aligned slot is within `maxHamming` — the whole-clip near-dup
+    * semantic (a re-encode / rescale of the same clip perturbs every
+    * frame a little; unrelated clips differ a lot in at least one frame
+    * — measured on the m14 corpus: planted re-encode pairs' worst slot
+    * ≤ 8 bits, unrelated pairs' worst slot ≥ 25). Since round 14 the
+    * upstream [[graft.operators.Multimodal.videoDHash]] samples slots
+    * at fixed fractions of DURATION and always emits k of them, so
+    * re-encodes at a DIFFERENT FRAME RATE (the m18 frame-duplicated
+    * upsample) align slot-for-slot on content time; the equal-slot-count
+    * guard remains for direct callers feeding differing slot counts
+    * (different k — different signatures, never comparable).
     *
     * Candidates are (slot, band, block) bucket collisions — a pair
     * must collide on the SAME slot, so buckets stay small. Pigeonhole
@@ -420,89 +480,20 @@ object Dedup {
     * demand the complete pair set. The default bands=16 (4-bit blocks)
     * buys the radius-15 pigeonhole at fixture bucket cardinality;
     * production keeps wider blocks at a tighter radius (the
-    * hammingNearDupsSig trade). At scale only (id, slot, 8-byte sig)
-    * rows shuffle (frames never leave their scan), and the per-asset
-    * signature array is bounded at k slots.
+    * hammingNearDupsSig trade).
     */
-  def temporalNearDupsSig(sigs0: DataFrame, maxHamming: Int = 15,
-      maxBucketSize: Int = 256, bands: Int = 16): DataFrame = {
-    require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
-    val blockBits = 64 / bands
-    // trackedPersist: the banding side and the per-asset array side both
-    // read the signatures; micro-batch callers drain it at scope exit
-    val sigs = graft.Graft.trackedPersist(sigs0, StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sigs.select(col("id"), col("slot"), col("sig"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
-          .bitwiseAND(lit((1L << blockBits) - 1))))
-      .as(Seq("band", "block")))
-    val banded = capBuckets(banded0, Seq("slot", "band", "block"), maxBucketSize)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val cands = l.join(r, col("l.slot") === col("r.slot") &&
-        col("l.band") === col("r.band") &&
-        col("l.block") === col("r.block") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"))
-      .distinct()
-    // per-asset slot-ordered signature arrays (bounded at k slots each)
-    val arrs = sigs.groupBy(col("id"))
-      .agg(sort_array(collect_list(struct(col("slot"), col("sig")))).as("fr"))
-    cands
-      .join(arrs.select(col("id").as("id1"), col("fr").as("fr1")), "id1")
-      .join(arrs.select(col("id").as("id2"), col("fr").as("fr2")), "id2")
-      .filter(size(col("fr1")) === size(col("fr2")))
-      .withColumn("n_close", size(filter(
-        zip_with(col("fr1"), col("fr2"),
-          (a, b) => Text.hamming64(a.getField("sig"), b.getField("sig"))),
-        h => h <= lit(maxHamming))))
-      .filter(col("n_close") === size(col("fr1")))
+  def temporalNearDupsSig(sigs: DataFrame, maxHamming: Int = 15,
+      maxBucketSize: Int = 256, bands: Int = 16): DataFrame =
+    temporalPairs(sigs, None, maxHamming, maxBucketSize, bands)
       .select(col("id1"), col("id2"))
-  }
 
-  /** Cross-corpus temporal Hamming pairs over MULTI-SLOT signatures:
-    * candidates are INDEX×BATCH (slot, band, block) bucket collisions
-    * only (no within-side pairs — the [[hammingNearDupsSigCross]]
-    * shape lifted to the temporal domain, for the streaming video
-    * ingest). Inputs are (id, slot, sig) frames; output (index_id,
-    * batch_id, max_hamming) for pairs with equal slot counts whose
-    * EVERY aligned slot is within `maxHamming` (max_hamming = the
-    * worst slot — the verification score). The df-cap applies to the
-    * index side (the unbounded one at scale); pigeonhole-exact recall
-    * under maxHamming <= bands - 1, the [[temporalNearDupsSig]] rule.
-    */
+  /** The [[bandJoin]] cross form of [[temporalNearDupsSig]] (the
+    * streaming video ingest): (index_id, batch_id, max_hamming), where
+    * max_hamming is the worst aligned slot; index side capped. */
   def temporalNearDupsSigCross(index: DataFrame, batch: DataFrame,
       maxHamming: Int = 15, maxBucketSize: Int = 256,
-      bands: Int = 16): DataFrame = {
-    require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
-    val blockBits = 64 / bands
-    def banded(df: DataFrame): DataFrame =
-      df.select(col("id"), col("slot"), col("sig"), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
-            .bitwiseAND(lit((1L << blockBits) - 1))))
-        .as(Seq("band", "block")))
-    def arrs(df: DataFrame): DataFrame =
-      df.groupBy(col("id"))
-        .agg(sort_array(collect_list(struct(col("slot"), col("sig")))).as("fr"))
-    val l = capBuckets(banded(index), Seq("slot", "band", "block"),
-      maxBucketSize).as("l")
-    val r = banded(batch).as("r")
-    val cands = l.join(r, col("l.slot") === col("r.slot") &&
-        col("l.band") === col("r.band") && col("l.block") === col("r.block"))
-      .select(col("l.id").as("index_id"), col("r.id").as("batch_id"))
-      .distinct()
-    cands
-      .join(arrs(index).select(col("id").as("index_id"), col("fr").as("fr1")),
-        "index_id")
-      .join(arrs(batch).select(col("id").as("batch_id"), col("fr").as("fr2")),
-        "batch_id")
-      .filter(size(col("fr1")) === size(col("fr2")))
-      .withColumn("max_hamming", array_max(
-        zip_with(col("fr1"), col("fr2"),
-          (a, b) => Text.hamming64(a.getField("sig"), b.getField("sig")))))
-      .filter(col("max_hamming") <= maxHamming)
-      .select(col("index_id"), col("batch_id"), col("max_hamming"))
-  }
+      bands: Int = 16): DataFrame =
+    asCross(temporalPairs(index, Some(batch), maxHamming, maxBucketSize, bands))
 
   /** Banded Hamming near-dup pairs over SPAN-FAMILY MULTI-SLOT
     * signatures — [[temporalNearDupsSig]]'s all-aligned-slots rule
@@ -521,57 +512,25 @@ object Dedup {
     * EXACT at maxHamming ≤ bands − 1: the minimizing span pair's slot
     * 0 is within the radius, has a clean block, and both rows land in
     * that (slot=0, band, block) bucket. Per-asset verify state is
-    * bounded at S·k hashes (≤ S²·k popcounts per candidate); only
-    * (id, span, slot, 8 B) rows shuffle — frames never leave the scan.
-    * The S× band-row and ≤S² candidate-volume factors are the m17
-    * patch-hash trade restated in time; production uses wider blocks
-    * at a tighter radius (the hammingNearDupsSig bucket-cardinality
-    * trade).
+    * bounded at S·k hashes (≤ S²·k popcounts per candidate). The S×
+    * band-row and ≤S² candidate-volume factors are the m17 patch-hash
+    * trade restated in time; production uses wider blocks at a tighter
+    * radius (the hammingNearDupsSig bucket-cardinality trade).
     */
-  def spanTemporalNearDupsSig(sigs0: DataFrame, maxHamming: Int = 15,
-      maxBucketSize: Int = 256, bands: Int = 16): DataFrame = {
-    require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
-    val blockBits = 64 / bands
-    // trackedPersist: banding and the per-asset array side both read
-    // the signatures (the temporalNearDupsSig rule)
-    val sigs = graft.Graft.trackedPersist(sigs0, StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sigs.select(col("id"), col("slot"), col("sig"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
-          .bitwiseAND(lit((1L << blockBits) - 1))))
-      .as(Seq("band", "block")))
-    val banded = capBuckets(banded0, Seq("slot", "band", "block"), maxBucketSize)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val cands = l.join(r, col("l.slot") === col("r.slot") &&
-        col("l.band") === col("r.band") &&
-        col("l.block") === col("r.block") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"))
-      .distinct()
-    // per-asset span arrays of slot-ordered signatures (bounded at S
-    // spans × k slots each)
-    val spanArrs = sigs.groupBy(col("id"), col("span"))
-      .agg(sort_array(collect_list(struct(col("slot"), col("sig")))).as("fr"))
-    val arrs = spanArrs.groupBy(col("id"))
-      .agg(collect_list(col("fr")).as("sps"))
-    cands
-      .join(arrs.select(col("id").as("id1"), col("sps").as("sps1")), "id1")
-      .join(arrs.select(col("id").as("id2"), col("sps").as("sps2")), "id2")
-      // zip_with pads the shorter side with nulls when a caller
-      // violates the every-span-carries-exactly-k-slots contract;
-      // coalesce the null hamming to 65 (> any real distance) so the
-      // violation surfaces as a non-match instead of array_max
-      // silently skipping it and understating the span-pair maximum
-      .withColumn("min_hamming", array_min(flatten(
-        transform(col("sps1"), a =>
-          transform(col("sps2"), b =>
-            array_max(zip_with(a, b, (x, y) =>
-              coalesce(Text.hamming64(x.getField("sig"),
-                y.getField("sig")), lit(65L))))))))
-        .cast("long"))
-      .filter(col("min_hamming") <= maxHamming)
-      .select(col("id1"), col("id2"), col("min_hamming"))
-  }
+  def spanTemporalNearDupsSig(sigs: DataFrame, maxHamming: Int = 15,
+      maxBucketSize: Int = 256, bands: Int = 16): DataFrame =
+    arrayPairs(sigs, None, maxHamming, maxBucketSize, bands, slotted = true,
+      "min_hamming")(
+      // per-asset span arrays of slot-ordered signatures
+      _.groupBy(col("id"), col("span")).agg(slotList.as("fr"))
+        .groupBy(col("id")).agg(collect_list(col("fr")).as("arr")),
+      crossMin(_, _)(slotMax))
+
+  private def regionPairs(index: DataFrame, batch: Option[DataFrame],
+      maxHamming: Int, cap: Int, bands: Int): DataFrame =
+    arrayPairs(index, batch, maxHamming, cap, bands, slotted = false,
+      "min_hamming")(_.groupBy(col("id")).agg(collect_list(col("sig")).as("arr")),
+      crossMin(_, _)(Text.hamming64))
 
   /** Banded Hamming near-dup pairs over MULTI-REGION 64-bit signatures
     * — the CROP-ROBUST extension of [[hammingNearDupsSig]] (m17: one
@@ -592,90 +551,24 @@ object Dedup {
     * Pigeonhole recall stays EXACT when maxHamming ≤ bands - 1: the
     * minimizing region pair has a clean block, both rows land in that
     * (band, block) bucket, and the pair is a candidate. Per-asset
-    * verify state is bounded at R region hashes (R=7 — the flatten
-    * cross product is ≤ 49 popcounts per candidate); only (id, region,
-    * 8-byte sig) rows shuffle, pixels never leave the scan. Production
-    * keeps 16-bit bands at a tighter radius (the hammingNearDupsSig
+    * verify state is bounded at R region hashes (R=7 — the cross
+    * product is ≤ 49 popcounts per candidate). Production keeps 16-bit
+    * bands at a tighter radius (the hammingNearDupsSig
     * bucket-cardinality trade) — R× the rows per band of the
     * single-hash path, the standard patch-hash cost.
     */
-  def regionNearDupsSig(sigs0: DataFrame, maxHamming: Int = 7,
-      maxBucketSize: Int = 256, bands: Int = 8): DataFrame = {
-    require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
-    val blockBits = 64 / bands
-    // trackedPersist: banding and the per-asset array side both read
-    // the signatures (the temporalNearDupsSig rule)
-    val sigs = graft.Graft.trackedPersist(sigs0, StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sigs.select(col("id"), col("sig"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
-          .bitwiseAND(lit((1L << blockBits) - 1))))
-      .as(Seq("band", "block")))
-    val banded = capBuckets(banded0, Seq("band", "block"), maxBucketSize)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val cands = l.join(r, col("l.band") === col("r.band") &&
-        col("l.block") === col("r.block") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"))
-      .distinct()
-    // per-asset region-hash arrays (bounded at R region rows each)
-    val arrs = sigs.groupBy(col("id"))
-      .agg(collect_list(col("sig")).as("rs"))
-    cands
-      .join(arrs.select(col("id").as("id1"), col("rs").as("rs1")), "id1")
-      .join(arrs.select(col("id").as("id2"), col("rs").as("rs2")), "id2")
-      .withColumn("min_hamming", array_min(flatten(
-        transform(col("rs1"), a =>
-          transform(col("rs2"), b => Text.hamming64(a, b)))))
-        .cast("long"))
-      .filter(col("min_hamming") <= maxHamming)
-      .select(col("id1"), col("id2"), col("min_hamming"))
-  }
+  def regionNearDupsSig(sigs: DataFrame, maxHamming: Int = 7,
+      maxBucketSize: Int = 256, bands: Int = 8): DataFrame =
+    regionPairs(sigs, None, maxHamming, maxBucketSize, bands)
 
-  /** Cross-corpus region-window Hamming pairs: candidates are
-    * INDEX×BATCH (band, block) bucket collisions only — the
-    * [[hammingNearDupsSigCross]] shape lifted to the multi-region
-    * domain (for the streaming CROP gate: a cropped repost of an
-    * indexed image matches through the region cross product where the
-    * single-hash gate is blind). Inputs are (id, sig) frames with one
-    * row per region window; output (index_id, batch_id, min_hamming)
-    * for pairs whose MINIMUM Hamming over the region cross product is
-    * within `maxHamming`. The df-cap applies to the index side (the
-    * unbounded one at scale); same region-free banding and
-    * pigeonhole-exact recall rule as [[regionNearDupsSig]].
-    */
+  /** The [[bandJoin]] cross form of [[regionNearDupsSig]] (the
+    * streaming CROP gate: a cropped repost of an indexed image matches
+    * through the region cross product where the single-hash gate is
+    * blind): (index_id, batch_id, min_hamming), index side capped. */
   def regionNearDupsSigCross(index: DataFrame, batch: DataFrame,
       maxHamming: Int = 7, maxBucketSize: Int = 256,
-      bands: Int = 8): DataFrame = {
-    require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
-    val blockBits = 64 / bands
-    def banded(df: DataFrame): DataFrame =
-      df.select(col("id"), col("sig"), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
-            .bitwiseAND(lit((1L << blockBits) - 1))))
-        .as(Seq("band", "block")))
-    def arrs(df: DataFrame): DataFrame =
-      df.groupBy(col("id")).agg(collect_list(col("sig")).as("rs"))
-    val l = capBuckets(banded(index), Seq("band", "block"), maxBucketSize)
-      .as("l")
-    val r = banded(batch).as("r")
-    val cands = l.join(r, col("l.band") === col("r.band") &&
-        col("l.block") === col("r.block"))
-      .select(col("l.id").as("index_id"), col("r.id").as("batch_id"))
-      .distinct()
-    cands
-      .join(arrs(index).select(col("id").as("index_id"), col("rs").as("rs1")),
-        "index_id")
-      .join(arrs(batch).select(col("id").as("batch_id"), col("rs").as("rs2")),
-        "batch_id")
-      .withColumn("min_hamming", array_min(flatten(
-        transform(col("rs1"), a =>
-          transform(col("rs2"), b => Text.hamming64(a, b)))))
-        .cast("long"))
-      .filter(col("min_hamming") <= maxHamming)
-      .select(col("index_id"), col("batch_id"), col("min_hamming"))
-  }
+      bands: Int = 8): DataFrame =
+    asCross(regionPairs(index, Some(batch), maxHamming, maxBucketSize, bands))
 
   /** Exact n-gram Jaccard for pairs above `threshold`, two-stage:
     *
@@ -701,10 +594,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, threshold: Double = 0.5,
       maxDocFreq: Int = 1000): DataFrame = {
-    val sets = graft.Graft.ensureParallelism(df).select(col(idCol).as("id"),
-      array_distinct(call_function("word_shingle_hashes",
-        col(textCol), lit(shingleSize))).as("set"))
-      .filter(size(col("set")) > 0)
+    val sets = shingleSets(df, idCol, textCol, shingleSize)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val exploded = sets.select(col("id"), explode(col("set")).as("sh"))
     // The capped exploded stream is deliberately NOT persisted
@@ -749,14 +639,7 @@ object Dedup {
         (col("sz1") + col("sz2") - col("__mi")).cast("double") >= threshold)
       .select("id1", "id2")
     // Exact verification (full sets) only for pairs that can still pass.
-    bounded
-      .join(sets.select(col("id").as("id1"), col("set").as("set1")), "id1")
-      .join(sets.select(col("id").as("id2"), col("set").as("set2")), "id2")
-      .withColumn("inter", size(array_intersect(col("set1"), col("set2"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("set1")) + size(col("set2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id1", "id2", "jaccard")
+    exactJaccard(bounded, sets, sets, threshold)
   }
 
   /** Boilerplate span removal — the within-document half of dedup
@@ -784,12 +667,7 @@ object Dedup {
     // Two-seed XXH64 window fingerprint (see windowFingerprints): 16
     // fixed bytes on the wire instead of a 32-char md5 hex string, no
     // digest/hex per shingle (optimization round 17, guide §2.3/§4.1).
-    val shing = df
-      .select(col(idCol).as("id"),
-        posexplode(call_function("word_window_fp128",
-          col(textCol), lit(shingleSize))).as(Seq("i", "fp")))
-      .select(col("id"), col("i"),
-        col("fp").getField("f1").as("f1"), col("fp").getField("f2").as("f2"))
+    val shing = windowFingerprints(df, idCol, textCol, shingleSize)
     val hiDf = shing.select("id", "f1", "f2").distinct()
       .groupBy("f1", "f2").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
@@ -800,7 +678,7 @@ object Dedup {
     // distinct exchange first (guide §2.4; optimization round 17).
     val covered = shing.join(hiDf, Seq("f1", "f2"))
       .select(col("id"),
-        explode(sequence(col("i") + 1, col("i") + lit(shingleSize))).as("p"))
+        explode(sequence(col("b"), col("b") + lit(shingleSize - 1))).as("p"))
       .groupBy("id").agg(collect_set(col("p")).as("cov"))
     base.join(covered, Seq("id"), "left")
       .select(col("id"),
@@ -831,11 +709,7 @@ object Dedup {
   def crossCorpusOverlap(train: DataFrame, eval: DataFrame,
       idCol: String, textCol: String, shingleSize: Int = 3,
       minShared: Int = 2, maxDocFreq: Int = 1000): DataFrame = {
-    def sets(df: DataFrame) =
-      graft.Graft.ensureParallelism(df).select(col(idCol).as("id"),
-        array_distinct(call_function("word_shingle_hashes",
-          col(textCol), lit(shingleSize))).as("set"))
-        .filter(size(col("set")) > 0)
+    def sets(df: DataFrame) = shingleSets(df, idCol, textCol, shingleSize)
     // capBuckets consumes the exploded train stream TWICE (the df-count
     // aggregate and the semi-join left side), and shingle hashing is the
     // CPU-dominant stage — so the train side is persisted. Round 16
@@ -1031,76 +905,6 @@ object Dedup {
     definitelyNew.unionByName(verified)
   }
 
-  /** Cross-corpus MinHash near-dups: (index_id, batch_id, jaccard) pairs
-    * with EXACT Jaccard >= `threshold`, candidates generated by banding
-    * ACROSS the two sides only — the incremental production shape (a new
-    * crawl against the indexed corpus). Unlike running `minhashNearDups`
-    * on the union, no within-side pair is ever generated: the band join
-    * is index-side × batch-side, so indexed-corpus self-similarity
-    * (typically the overwhelming majority of near-dup pairs — the index
-    * has already been deduped once) costs nothing here. Within-batch
-    * dedup is a separate batch-local step (x18/x28).
-    *
-    * Same two-stage verification as `minhashNearDups` (signature
-    * estimate at threshold/2, exact hashed-shingle Jaccard for
-    * survivors), same per-side bucket cap (bounding any band value's
-    * cross product at cap²), one tokenize pass per side.
-    */
-  def minhashNearDupsCross(index: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String, k: Int = 32, bands: Int = 8,
-      shingleSize: Int = 3, threshold: Double = 0.8,
-      maxBucketSize: Int = 256): DataFrame = {
-    def prep(df: DataFrame): (DataFrame, DataFrame) = {
-      // trackedPersist: see minhashNearDups — micro-batch callers drain
-      // these through Graft.cacheScope, batch callers keep plain persist.
-      // ONE combined (id, set, sig) cache per side (was two chained
-      // persists): the signature derives from the hash sets in the same
-      // pass, consumers column-prune the cached batches (set for verify,
-      // sig for banding/estimate), and each side pays one
-      // materialization barrier instead of two (optimization round 17,
-      // guide §1.2/§5).
-      val both = graft.Graft.trackedPersist(
-        graft.Graft.ensureParallelism(df)
-          .select(col(idCol).as("id"),
-            array_distinct(call_function("word_shingle_hashes",
-              col(textCol), lit(shingleSize))).as("set"))
-          .filter(size(col("set")) > 0)
-          .withColumn("sig",
-            call_function("minhash_from_hashes", col("set"), lit(k))))
-      (both.select(col("id"), col("set")),
-        both.select(col("id"), col("sig")))
-    }
-    val (iSets, iSigs) = prep(index)
-    val (bSets, bSigs) = prep(batch)
-    val rowsPerBand = k / bands
-    def banded(sigs: DataFrame): DataFrame = sigs.select(col("id"), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b)))
-      .as(Seq("band", "bucket")))
-    val ib = capBuckets(banded(iSigs), Seq("band", "bucket"), maxBucketSize)
-    val bb = capBuckets(banded(bSigs), Seq("band", "bucket"), maxBucketSize)
-    // band-duplicated candidates; distinct deferred past the estimate
-    // cut, exactly like minhashNearDups
-    val cands = ib.as("l").join(bb.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket"))
-      .select(col("l.id").as("iid"), col("r.id").as("bid"))
-    val estimated = cands
-      .join(iSigs.select(col("id").as("iid"), col("sig").as("sig1")), "iid")
-      .join(bSigs.select(col("id").as("bid"), col("sig").as("sig2")), "bid")
-      .withColumn("est", Text.minhashEstimate(col("sig1"), col("sig2"), k))
-      .filter(col("est") >= threshold / 2)
-      .select("iid", "bid").distinct()
-    estimated
-      .join(iSets.select(col("id").as("iid"), col("set").as("set1")), "iid")
-      .join(bSets.select(col("id").as("bid"), col("set").as("set2")), "bid")
-      .withColumn("inter", size(array_intersect(col("set1"), col("set2"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("set1")) + size(col("set2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("iid").as("index_id"), col("bid").as("batch_id"),
-        col("jaccard"))
-  }
-
   /** Every `width`-token window of every document, fingerprinted:
     * (id, b, f1, f2) where `b` is the 1-based start position and
     * (f1, f2) a two-seed XXH64 128-bit-class fingerprint of the
@@ -1156,22 +960,24 @@ object Dedup {
     val dupF = wins.groupBy("f1", "f2")
       .agg(min(col("id")).as("__mn"), max(col("id")).as("__mx"))
       .filter(col("__mn") =!= col("__mx")).select("f1", "f2")
-    val dup = wins.join(dupF, Seq("f1", "f2"))
-      .select(col("id"), col("b"), (col("b") + lit(width - 1)).as("e"))
+    mergeSpans(wins.join(dupF, Seq("f1", "f2")), width)
+      .select(col("id"), col("s").cast("long").as("span_start"),
+        col("e").cast("long").as("span_end"),
+        (col("e") - col("s") + 1).cast("long").as("span_tokens"))
+  }
+
+  /** Gaps-and-islands merge of per-document `width`-token windows
+    * (id, b) into maximal disjoint spans (id, g, s, e). */
+  private def mergeSpans(wins: DataFrame, width: Int): DataFrame = {
     val byPos = Window.partitionBy("id").orderBy("b")
-    val preceding =
-      byPos.rowsBetween(Window.unboundedPreceding, -1)
-    dup
+    val preceding = byPos.rowsBetween(Window.unboundedPreceding, -1)
+    wins.select(col("id"), col("b"), (col("b") + lit(width - 1)).as("e"))
       .withColumn("newSpan",
         when(col("b") > coalesce(max(col("e")).over(preceding), lit(-1L)) + 1,
           1).otherwise(0))
       .withColumn("g", sum(col("newSpan")).over(byPos))
       .groupBy(col("id"), col("g"))
-      .agg(min(col("b")).as("span_start"), max(col("e")).as("span_end"))
-      .select(col("id"), col("span_start").cast("long").as("span_start"),
-        col("span_end").cast("long").as("span_end"),
-        (col("span_end") - col("span_start") + 1).cast("long")
-          .as("span_tokens"))
+      .agg(min(col("b")).as("s"), max(col("e")).as("e"))
   }
 
   /** Keep-first-occurrence duplicate-span REMOVAL (the apply side of
@@ -1215,16 +1021,7 @@ object Dedup {
     // maximal disjoint spans exactly like dupSpans
     val removedWins = wins.join(keeper, Seq("f1", "f2"))
       .filter(struct(col("id"), col("b")) =!= col("keep"))
-      .select(col("id"), col("b"), (col("b") + lit(width - 1)).as("e"))
-    val byPos = Window.partitionBy("id").orderBy("b")
-    val preceding = byPos.rowsBetween(Window.unboundedPreceding, -1)
-    val spans = removedWins
-      .withColumn("newSpan",
-        when(col("b") > coalesce(max(col("e")).over(preceding), lit(-1L)) + 1,
-          1).otherwise(0))
-      .withColumn("g", sum(col("newSpan")).over(byPos))
-      .groupBy(col("id"), col("g"))
-      .agg(min(col("b")).as("s"), max(col("e")).as("e"))
+    val spans = mergeSpans(removedWins, width)
       .groupBy("id")
       .agg(collect_list(struct(col("s"), col("e"))).as("spans"),
         sum(col("e") - col("s") + 1).as("n_rm"))

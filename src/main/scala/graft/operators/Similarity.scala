@@ -392,22 +392,6 @@ object Similarity {
     centroids
   }
 
-  /** The trained coarse quantizer alone — the ingest-time half of IVF,
-    * exposed so sessions can train once (an IvfShared-style memo) and
-    * answer every query from the collected literal centroids. Value is
-    * bounded algorithm state (nCells·dim floats), not data.
-    */
-  def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, kmeansIterations: Int = 0,
-      trainCap: Int = 2048): DataFrame = {
-    val c = graft.Graft.ensureParallelism(corpus)
-      .select(col(idCol).as("id"), col(vecCol).as("vec"))
-    if (kmeansIterations > 0)
-      kmeansCentroids(c, "id", "vec", nCells, kmeansIterations,
-        trainCap = trainCap)
-    else lowestIdCentroids(c, "id", "vec", nCells)
-  }
-
   /** `prebuiltCells` — a precomputed corpus assignment (id, vec, cell),
     * e.g. a session memo of [[quantizerCells]]: the ingest-time half of
     * IVF (quantizer training + corpus assignment both happen once at
@@ -1128,8 +1112,7 @@ object Similarity {
     * Spark plans a broadcast-nested-loop when one side is small,
     * partitioned block products otherwise); the FILTER runs on the
     * codegen'd double cosine, and only the surviving pairs are re-scored
-    * with the exact-decimal cosine for oracle-parity output. For high
-    * thresholds `cosineNearDupsLsh` applies.
+    * with the exact-decimal cosine for oracle-parity output.
     */
   def cosineNearDups(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
@@ -1291,39 +1274,6 @@ object Similarity {
           (col("l.centsim") === col("r.centsim") && col("l.id") > col("r.id")),
           col("l.id")).otherwise(col("r.id")).as("drop_id"))
       .distinct()
-  }
-
-  /** Embedding-cosine near-duplicate pairs above `threshold` within the
-    * corpus, LSH-bucketed — the scale path for HIGH thresholds (≥ ~0.8),
-    * where band collisions have a sharp S-curve.
-    */
-  def cosineNearDupsLsh(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double = 0.95, bits: Int = 8, tables: Int = 4,
-      maxBucketSize: Int = 1024): DataFrame = {
-    val c = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    // persist: the cap's count side and the self-join sides otherwise
-    // each recompute the hyperplane buckets (bits·tables dot products
-    // per vector)
-    val banded0 = (0 until tables).map { t =>
-      c.select(col("id"), col("vec"), lit(t).as("table"),
-        Vectors.hyperplaneBucket(col("vec"), bits, t).as("bucket"))
-    }.reduce(_ unionAll _)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val banded = Dedup.capBuckets(banded0, Seq("table", "bucket"), maxBucketSize)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    // score before the dedup, filter before the exchange (the
-    // lshTopK/v21 rule): duplicate collision rows carry the identical
-    // deterministic sim, so min() is pure dedup over thin
-    // (id1, id2, sim) rows — the old shape's distinct() shuffled both
-    // vectors per collision row and deduped before the threshold cut
-    l.join(r, col("l.table") === col("r.table") &&
-        col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"),
-        Vectors.cosineFast(col("l.vec"), col("r.vec")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .groupBy(col("id1"), col("id2"))
-      .agg(min(col("sim")).as("sim"))
   }
 
   // ------------------------------------------------------------------

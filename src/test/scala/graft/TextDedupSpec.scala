@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -328,20 +329,124 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
-  test("minhashNearDupsCross equals the cross subset of union near-dups") {
-    val index = corpus.filter($"doc_id" <= 2)
-    val batch = corpus.filter($"doc_id" >= 3)
-    val unionPairs = Dedup.minhashNearDups(corpus, "doc_id", "text",
-        k = 32, bands = 16, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .filter { case (a, b, _) => a <= 2 && b >= 3 } // id1<id2 ⇒ cross = (idx, batch)
-      .toSet
-    val crossPairs = Dedup.minhashNearDupsCross(index, batch, "doc_id",
-        "text", k = 32, bands = 16, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(crossPairs == unionPairs)
-    assert(crossPairs.nonEmpty) // docs 1/2 near-dup doc 3 across the cut
+  // Cross forms against their self forms: cross(index, batch) must equal
+  // self(index ∪ batch) restricted to index × batch pairs while no cap
+  // binds. Index ids sort below batch ids, so id1 < id2 puts every
+  // cross pair of the self form in (index_id, batch_id) order.
+  private def flipped(sig: Long, bits: Seq[Int]): Long =
+    bits.foldLeft(sig)((s, b) => s ^ (1L << b))
+
+  /** Index ids 1..12, batch ids 13..24. An even batch id j re-encodes
+    * index j-12 (a few flipped bits per signature row), an odd one is
+    * unrelated; batch 13 is near index 1, and index 2 is a within-index
+    * near-dup of index 1 that only the self form may report. `rows`
+    * signatures per id (regions or slots); `near` maps an index row to
+    * its re-encode. */
+  private def crossCorpus(rows: Int, near: (Long, scala.util.Random) => Long)
+      : Seq[(Long, Int, Long)] = {
+    val r = new scala.util.Random(11)
+    val base = (0 to 12).map(_ => Seq.fill(rows)(r.nextLong()))
+    (1 to 24).flatMap { id =>
+      val sigs =
+        if (id == 2) base(1).map(flipped(_, Seq(5)))
+        else if (id <= 12) base(id)
+        else if (id == 13) base(1).map(flipped(_, Seq(9)))
+        else if (id % 2 == 0) base(id - 12).map(near(_, r))
+        else Seq.fill(rows)(r.nextLong())
+      sigs.zipWithIndex.map { case (s, slot) => (id.toLong, slot, s) }
+    }
+  }
+
+  private def splitCorpus(rows: Seq[(Long, Int, Long)], cols: String*) = {
+    val df = rows.toDF("id", "slot", "sig").select(cols.map(col): _*)
+    (df, df.filter(col("id") <= 12), df.filter(col("id") > 12))
+  }
+
+  private def pairSet(df: DataFrame, width: Int): Set[Seq[Any]] =
+    df.collect().map(_.toSeq.take(width)).toSet
+
+  private val crossFamilies: Seq[(String,
+      () => (DataFrame, DataFrame, DataFrame), DataFrame => DataFrame,
+      (DataFrame, DataFrame) => DataFrame, Int)] = Seq(
+    ("minhashNearDupsCross",
+      () => (corpus, corpus.filter($"doc_id" <= 2), corpus.filter($"doc_id" >= 3)),
+      Dedup.minhashNearDups(_, "doc_id", "text", k = 32, bands = 16,
+        threshold = 0.5),
+      Dedup.minhashNearDupsCross(_, _, "doc_id", "text", k = 32,
+        bands = 16, threshold = 0.5), 3),
+    ("hammingNearDupsSigCross",
+      () => splitCorpus(crossCorpus(1,
+        (s, r) => flipped(s, Seq.fill(3)(r.nextInt(64)))), "id", "sig"),
+      Dedup.hammingNearDupsSig(_, maxHamming = 3),
+      Dedup.hammingNearDupsSigCross(_, _, maxHamming = 3), 3),
+    // half the re-encode's regions are 2-bit edits of the original's,
+    // the rest are fresh: the min over the region product still matches
+    ("regionNearDupsSigCross",
+      () => splitCorpus(crossCorpus(3,
+        (s, r) => if (r.nextBoolean()) flipped(s, Seq(3, 40)) else r.nextLong()),
+        "id", "sig"),
+      Dedup.regionNearDupsSig(_, maxHamming = 7),
+      Dedup.regionNearDupsSigCross(_, _, maxHamming = 7), 3),
+    // every slot within 4 bits; the self form reports (id1, id2) only
+    ("temporalNearDupsSigCross",
+      () => splitCorpus(crossCorpus(4,
+        (s, r) => flipped(s, Seq.fill(4)(r.nextInt(64)))), "id", "slot", "sig"),
+      Dedup.temporalNearDupsSig(_, maxHamming = 15),
+      Dedup.temporalNearDupsSigCross(_, _, maxHamming = 15), 2))
+
+  for ((name, data, self, cross, width) <- crossFamilies)
+    test(s"$name equals the cross subset of union near-dups") {
+      val (union, index, batch) = data()
+      val maxIndexId = index.agg(max(col(index.columns.head))).head().getLong(0)
+      val expected = pairSet(self(union), width).filter { p =>
+        p(0).asInstanceOf[Long] <= maxIndexId &&
+          p(1).asInstanceOf[Long] > maxIndexId
+      }
+      val got = pairSet(cross(index, batch), width)
+      assert(got == expected)
+      assert(got.nonEmpty)
+      spark.catalog.clearCache()
+    }
+
+  test("cross forms cap the index side; MinHash caps both sides") {
+    // index: ids 1-3 carry X, id 4 carries Y; batch: id 21 carries X,
+    // ids 22-24 carry Y. At cap 2 X's buckets are over the cap on the
+    // index side and Y's on the batch side.
+    val (x, y) = (0x0123456789ABCDEFL, 0x7EDCBA9876543210L)
+    val owners = Seq(1L -> x, 2L -> x, 3L -> x, 4L -> y,
+      21L -> x, 22L -> y, 23L -> y, 24L -> y)
+    val all = Set(Seq(1L, 21L), Seq(2L, 21L), Seq(3L, 21L),
+      Seq(4L, 22L), Seq(4L, 23L), Seq(4L, 24L))
+    val yOnly = all.filter(_.head == 4L)
+    def split(df: DataFrame) = (df.filter(col(df.columns.head) < 21),
+      df.filter(col(df.columns.head) >= 21))
+    // one row per id (Hamming, region) or four slots per id (temporal),
+    // slot s carrying the owner's signature rotated by s
+    val single = split(owners.toDF("id", "sig"))
+    val slotted = split(owners.flatMap { case (id, s) =>
+      (0 until 4).map(slot => (id, slot, java.lang.Long.rotateLeft(s, slot)))
+    }.toDF("id", "slot", "sig"))
+    val text = split(owners.map { case (id, s) =>
+      (id, if (s == x) "alpha beta gamma delta epsilon zeta eta theta"
+        else "one two three four five six seven eight") }.toDF("doc_id", "text"))
+    val families: Seq[(String, (DataFrame, DataFrame),
+        (DataFrame, DataFrame, Int) => DataFrame, Set[Seq[Long]])] = Seq(
+      ("hamming", single,
+        Dedup.hammingNearDupsSigCross(_, _, maxHamming = 3, _), yOnly),
+      ("region", single,
+        Dedup.regionNearDupsSigCross(_, _, maxHamming = 7, _), yOnly),
+      ("temporal", slotted,
+        Dedup.temporalNearDupsSigCross(_, _, maxHamming = 15, _), yOnly),
+      ("minhash", text, (i: DataFrame, b: DataFrame, cap: Int) =>
+        Dedup.minhashNearDupsCross(i, b, "doc_id", "text", k = 32,
+          bands = 16, threshold = 0.5, maxBucketSize = cap), Set.empty))
+    for ((name, (index, batch), cross, capped) <- families) {
+      def at(cap: Int) = cross(index, batch, cap).collect()
+        .map(r => Seq(r.getLong(0), r.getLong(1))).toSet
+      assert(at(256) == all, s"$name: a cap of 256 binds nowhere")
+      assert(at(2) == capped, s"$name at cap 2")
+    }
+    spark.catalog.clearCache()
   }
 
   test("incrementalNewRows bloom bypass: zero index hits never join") {
