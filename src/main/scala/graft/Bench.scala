@@ -1,15 +1,67 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+
+  private def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+  }
+
+  /** Time one declared query's `.count()`: `Right(seconds)` when it
+    * returns, `Left(message)` when it throws — a failed query is never
+    * timed as a success.
+    */
+  private[graft] def timeCount(spark: SparkSession, dir: String,
+      fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, dir).count()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
+  }
+
+  /** One pass over `queries` in the given order while `keepGoing()`
+    * holds: the per-query seconds of the queries that returned, and the
+    * error message of each one that threw (left out of the times, so no
+    * total counts it).
+    */
+  private[graft] def runPass(spark: SparkSession, tag: String, dir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      keepGoing: () => Boolean = () => true)
+      : (Map[String, Double], Map[String, String]) = {
+    val times = Map.newBuilder[String, Double]
+    val failed = Map.newBuilder[String, String]
+    queries.iterator.takeWhile(_ => keepGoing()).foreach { case (name, fn) =>
+      val g0 = gcMillis()
+      timeCount(spark, dir, fn) match {
+        case Right(dt) =>
+          System.err.println(f"[$tag] $name%-28s $dt%8.2f s  gc=${gcMillis() - g0}%5d ms")
+          times += name -> dt
+        case Left(msg) =>
+          System.err.println(s"[$tag] $name failed: $msg")
+          failed += name -> msg
+      }
+      // operators may persist() intermediates (LSH signatures); release
+      // them THROUGH THE CACHE MANAGER, not just the RDDs. Unpersisting
+      // only the RDDs leaks CacheManager plan entries, and every later
+      // query then pays canonicalized-plan comparison against dozens of
+      // huge cached plans at analysis time — measured as a 2.5s query
+      // degrading to 88s by the end of a 48-query pass. clearCache()
+      // unpersists non-blocking and empties the entry list.
+      spark.catalog.clearCache()
+    }
+    (times.result(), failed.result())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Graft.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Graft.tune(spark)
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     // 1-minute load average, sampled at section boundaries into the
     // artifact's load_1m map: this host is multi-tenant and totals roam
     // 10-30% with external load, so each number must self-describe its
@@ -20,24 +72,11 @@ object Bench {
         .split(" ")(0).toDouble
     } catch { case _: Throwable => -1.0 }
     val loadSamples = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // two passes, min per query: one transient environment stall (or a
-    // cold codegen cache) can no longer poison a number
-    def pass(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime(); val g0 = gcMillis()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name%-28s $dt%8.2f s  gc=${gcMillis() - g0}%5d ms")
-        // operators may persist() intermediates (LSH signatures); release
-        // them THROUGH THE CACHE MANAGER, not just the RDDs. Unpersisting
-        // only the RDDs leaks CacheManager plan entries, and every later
-        // query then pays canonicalized-plan comparison against dozens of
-        // huge cached plans at analysis time — measured as a 2.5s query
-        // degrading to 88s by the end of a 48-query pass. clearCache()
-        // unpersists non-blocking and empties the entry list.
-        spark.catalog.clearCache()
-        name -> dt
-      }.toMap
+    val byName = SparkEntry.queries.toSeq.sortBy(_._1)
+    // queries that threw in any pass of a section: reported under
+    // `failed` with their message and left out of every time and total
+    val failed = scala.collection.mutable.TreeMap[String, String]()
+    val sf1Failed = scala.collection.mutable.TreeMap[String, String]()
     SparkEntry.warm(spark)
     loadSamples("start") = load1m()
     val t0 = System.nanoTime()
@@ -60,7 +99,13 @@ object Bench {
     sfBuilds.foreach { case (n, s) =>
       System.err.println(f"[build] $n%-28s $s%8.2f s") }
     loadSamples("after_builds") = load1m()
-    val p1 = pass()
+    // several passes, min per query: one transient environment stall (or
+    // a cold codegen cache) can no longer poison a number
+    val p1 = {
+      val (t, f) = runPass(spark, "bench", sfDir, byName)
+      failed ++= f
+      t
+    }
     loadSamples("after_pass1") = load1m()
     // Additional passes while within budget, min per query: the machine
     // shows intermittent external ~15-60s stalls (zero GC, roaming
@@ -96,18 +141,12 @@ object Bench {
     val extraCutSec: Double =
       if (sf1Planned) math.min(budget * 0.8, (budget - sf1ReserveSec).toDouble)
       else budget * 0.8
-    def extraPass(tag: String): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-        if ((System.nanoTime() - t0) / 1e9 > extraCutSec) None
-        else {
-          val q0 = System.nanoTime(); val g0 = gcMillis()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-          val dt = (System.nanoTime() - q0) / 1e9
-          System.err.println(f"[$tag] $name%-28s $dt%8.2f s  gc=${gcMillis() - g0}%5d ms")
-          spark.catalog.clearCache()
-          Some(name -> dt)
-        }
-      }.toMap
+    def extraPass(tag: String): Map[String, Double] = {
+      val (t, f) = runPass(spark, tag, sfDir, byName,
+        () => (System.nanoTime() - t0) / 1e9 <= extraCutSec)
+      failed ++= f
+      t
+    }
     val extras = Seq("bench2", "bench3", "bench4").map(extraPass)
     // v15 warm-query stage attribution (VERDICT r15 #4): the one query
     // that stays bimodal across adopted windows — run its staged
@@ -140,7 +179,7 @@ object Bench {
     // keep 1-pass times in the min
     val pass2N = extras.headOption.map(_.size).getOrElse(0)
     loadSamples("after_sf01") = load1m()
-    val results = p1.map { case (k, v) =>
+    val results = p1.filterNot(kv => failed.contains(kv._1)).map { case (k, v) =>
       k -> (v +: extras.flatMap(_.get(k))).min }
     // ---- sf1 scale-regression section --------------------------------
     // One pass at 10× the primary SF (synthesized by ScaleUp — key-
@@ -173,20 +212,13 @@ object Bench {
     // and a deadline-cut pass loses only the heavy tail, so the section
     // total stays complete-or-nearly so instead of r10's 73/156 (the
     // old heavy-families-first order spent the whole window on builds).
-    def sf1Pass(tag: String): Map[String, Double] =
-      SparkEntry.queries.toSeq
-        .sortBy { case (n, _) => (p1.getOrElse(n, 0.0), n) }
-        .flatMap { case (name, fn) =>
-          if (System.nanoTime() > sf1Deadline) None
-          else {
-            val q0 = System.nanoTime()
-            try { fn(spark, sf1Dir).count() } catch { case _: Throwable => () }
-            val dt = (System.nanoTime() - q0) / 1e9
-            System.err.println(f"[$tag] $name%-28s $dt%8.2f s")
-            spark.catalog.clearCache()
-            Some(name -> dt)
-          }
-        }.toMap
+    def sf1Pass(tag: String): Map[String, Double] = {
+      val (t, f) = runPass(spark, tag, sf1Dir,
+        byName.sortBy { case (n, _) => (p1.getOrElse(n, 0.0), n) },
+        () => System.nanoTime() <= sf1Deadline)
+      sf1Failed ++= f
+      t
+    }
     val sf1Results: Map[String, Double] =
       if (!sf1Enabled) Map.empty
       else if ((System.nanoTime() - t0) / 1e9 > budget - 150) {
@@ -221,7 +253,8 @@ object Bench {
           if (System.nanoTime() > sf1Deadline) Map.empty[String, Double]
           else sf1Pass("sf1b")
         sf1Pass2N = s2.size // honesty for the min_of field (see below)
-        s1.map { case (k, v) => k -> math.min(v, s2.getOrElse(k, v)) }
+        s1.filterNot(kv => sf1Failed.contains(kv._1))
+          .map { case (k, v) => k -> math.min(v, s2.getOrElse(k, v)) }
       } catch { case e: Throwable =>
         sf1Skip = s"exception: ${e.getMessage}"
         System.err.println(s"[sf1] skipped: ${e.getMessage}"); Map.empty }
@@ -281,6 +314,11 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + r2(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
+    def failedJson(m: scala.collection.Map[String, String]): String =
+      m.map { case (k, v) => "\"" + k + "\":\"" + jstr(v) + "\"" }
+        .mkString("{", ",", "}")
+    val sf1FailedSection =
+      if (sf1Failed.isEmpty) "" else s""","sf1_failed":${failedJson(sf1Failed)}"""
     // Per-query times for these entries measure WARM shared-memo state
     // (the first family member executed pays the index/pipeline build) —
     // totals stay honest; cross-round per-query comparison should read
@@ -414,7 +452,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + r2(v) }
       .mkString(""","load_1m":{""", ",", "}")
     val line =
-      s"""{"metric":"total","value":${r2(total)},"unit":"sec","queries":$qs,"pass2_n":$pass2N,"memo_shared":$memoShared,"sf":"$sfDir"$buildsSection$memoRestSection$sf1Section$sf1BuildsSection$sf1MemoRestSection$v20Section$v15Section$layoutSection$bucketSection$loadSection,"notes":"$notes"}"""
+      s"""{"metric":"total","value":${r2(total)},"unit":"sec","queries":$qs,"failed":${failedJson(failed)},"pass2_n":$pass2N,"memo_shared":$memoShared,"sf":"$sfDir"$buildsSection$memoRestSection$sf1Section$sf1FailedSection$sf1BuildsSection$sf1MemoRestSection$v20Section$v15Section$layoutSection$bucketSection$loadSection,"notes":"$notes"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
       (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
@@ -427,7 +465,8 @@ object Bench {
         s""""sf1_n":${sf1Results.size},"""
     val summary =
       s"""{"metric":"total","value":${r2(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""n_queries":${results.size},"slowest":$top,$sf1Summary""" +
+        s""""n_queries":${results.size},"n_failed":${failed.size},""" +
+        s""""slowest":$top,$sf1Summary""" +
         s""""queries_file":"BENCH_LAST.json"}"""
     spark.stop()
     println(line)

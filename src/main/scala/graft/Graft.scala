@@ -199,44 +199,29 @@ object Graft {
       try r.unpersist(false) catch { case _: Throwable => () }
     }
 
-  /** Per-session memo of table READ PLANS (analyzed relations), keyed
-    * by (path, dir mtime, length) — metadata reuse only, never data or
-    * results: every query still scans parquet. A bare
-    * `spark.read.parquet` re-lists the directory and re-reads footer
-    * schemas on EVERY call — measured 70–85 ms of driver-side work per
-    * call on this host, ~22 s per 183-query bench pass (optimization
-    * round 17, guide §6: cache file listings per session). The
-    * mtime/length key drops a memoized relation when the table is
-    * rewritten (ScaleUp regeneration, layout copies); weak session keys
-    * let stopped sessions GC their entries.
+  /** Read a parquet table through the session's READ-PLAN memo: the
+    * analyzed relation (file listing + footer schema) is built once per
+    * (session, path) and reused by every later query — metadata reuse
+    * only, never data or results: every query still scans parquet. A
+    * bare `spark.read.parquet` re-lists the directory and launches a
+    * footer-schema job on EVERY call (70–85 ms of driver work per call
+    * on a 32-core host, `graft.tools.ReadCost`).
+    *
+    * The entry lives in [[SessionMemo]], keyed by path and validated by
+    * [[SessionMemo.fingerprint]]: a rewrite of the directory REPLACES
+    * the entry (one entry per path, however often it is rewritten); a
+    * flat or single-level-partitioned rewrite is seen at once, a change
+    * ≥2 levels down within `FpWalkTtlMillis`. Entries die with the
+    * session (SessionMemo's lifecycle rules).
     */
-  private val tableMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, Long, Long), DataFrame]]())
+  def read(spark: SparkSession, path: String): DataFrame =
+    SessionMemo.getOrCompute(spark, path, "read-plan")(
+      spark.read.parquet(path))(_ => ())
 
-  /** Read one testdata table: `$dir/$name.parquet`. */
+  /** Read one testdata table, `$dir/$name.parquet`, through [[read]]. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     tune(spark)
-    val f = new java.io.File(s"$dir/$name.parquet")
-    val key = (f.getPath, f.lastModified, f.length)
-    val perSession = {
-      var m = tableMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), DataFrame]()
-        tableMemo.put(spark, m)
-      }
-      m
-    }
-    val memoized = perSession.get(key)
-    if (memoized != null) return memoized
-    val built = tableUncached(spark, dir, name)
-    perSession.put(key, built)
-    built
-  }
-
-  private def tableUncached(spark: SparkSession, dir: String,
-      name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = read(spark, s"$dir/$name.parquet")
     if (name == "events")
       // Surface ts as TIMESTAMP_NTZ (naive, like every other testdata
       // timestamp) so outputs compare tz-free against the oracle. The

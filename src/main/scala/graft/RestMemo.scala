@@ -184,6 +184,7 @@ object RestMemo {
     val loaded: Option[T] =
       try readManifest(dir).filter(_ => ownedByUs(dir))
         .filter(_.fp == fp).map { m =>
+        // bare reads: a sidecar is read once per session, at reload
         val frames = m.parts.map(p =>
           p -> s.read.parquet(dir.resolve(p).toString)).toMap
         reassemble(frames, m.meta)

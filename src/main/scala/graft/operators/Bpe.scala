@@ -231,7 +231,6 @@ object Bpe {
         r += 1
       }
     }
-    import spark.implicits._
     val symRows = words.indices.flatMap { i =>
       syms(i).zipWithIndex.map { case (sym, p) =>
         (words(i)._1, words(i)._2, p, sym) }

@@ -3,7 +3,6 @@ package graft.pipelines
 import java.io.File
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** ≥100 MB binary-asset fixture for the multimodal surface: media
   * payloads + typed metadata, written with explicit row-group sizing so

@@ -22,8 +22,20 @@ import graft.tools.GenOsm
 object OsmFixture {
 
   /** Repo-local (gitignored) so the parquet survives across rounds. */
-  val root: String =
+  private val defaultRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_OSM_DIR", "/root/repo/data/osm")
+  @volatile private var rootOverride: Option[String] = None
+  def root: String = rootOverride.getOrElse(defaultRoot)
+
+  /** Run `body` with the fixture rooted at `dir` instead — for specs
+    * that build and rewrite a small private fixture without touching
+    * the shared one.
+    */
+  private[graft] def withRoot[T](dir: String)(body: => T): T = synchronized {
+    val prev = rootOverride
+    rootOverride = Some(dir)
+    try body finally rootOverride = prev
+  }
   def xmlPath: String = s"$root/synth.osm"
   def docsPath: String = s"$root/docs.parquet"
   def rawTagsPath: String = s"$root/raw_tags.parquet"
@@ -39,14 +51,15 @@ object OsmFixture {
       java.nio.file.Paths.get(versionPath)).trim.toInt
     catch { case _: Throwable => 0 }
 
-  @volatile private var ready = false
+  /** The root the last `ensure` found (or made) complete. */
+  @volatile private var readyRoot: String = null
 
-  def ensure(spark: SparkSession): Unit = if (!ready) synchronized {
-    if (ready) return
+  def ensure(spark: SparkSession): Unit = if (readyRoot != root) synchronized {
+    if (readyRoot == root) return
     if (!new File(s"$docsPath/_SUCCESS").exists() ||
         !new File(s"$rawTagsPath/_SUCCESS").exists() ||
         cachedVersion != generatorVersion) build(spark)
-    ready = true
+    readyRoot = root
   }
 
   /** Generate XML (if absent or stale), shape, write parquet. ~1 min, once. */

@@ -536,7 +536,7 @@ object Core {
     // DECLARES it).
     "p14_layout_range_skip" -> Q(
       (s, dir) =>
-        s.read.parquet(LayoutShared.sortedPath(s, dir))
+        graft.Graft.read(s, LayoutShared.sortedPath(s, dir))
           .filter(col("l_orderkey").between(1000L, 2000L))
           .groupBy("l_orderkey")
           .agg(count(lit(1)).as("n_lines"),
@@ -562,7 +562,7 @@ object Core {
     // under the dir's "zorder" key in layout_skip.
     "p15_zorder_two_col_skip" -> Q(
       (s, dir) =>
-        s.read.parquet(ZLayoutShared.zPath(s, dir))
+        graft.Graft.read(s, ZLayoutShared.zPath(s, dir))
           .filter(col("l_partkey").between(100L, 300L))
           .groupBy("l_partkey")
           .agg(count(lit(1)).as("n_lines"),
@@ -591,7 +591,7 @@ object Core {
     "p16_bloom_point_lookup" -> Q(
       (s, dir) => {
         val (path, mk, ml) = BloomLayoutShared.layout(s, dir)
-        s.read.parquet(path)
+        graft.Graft.read(s, path)
           .filter(col("k") === xxhash64(lit(mk), lit(ml).cast("int")))
           .filter(col("l_orderkey") === mk && col("l_linenumber") === ml)
           .select(col("l_orderkey"), col("l_linenumber").cast("long")
@@ -692,7 +692,8 @@ object Core {
         }
         // measure the skip once per session (cheap — the narrow pruned
         // scan itself): rows the pushed BETWEEN actually decodes
-        // (scan-node output) vs the table total
+        // (scan-node output) vs the table total. Bare read: the
+        // measurement wants a fresh scan of the just-written copy.
         val narrow = s.read.parquet(path)
           .filter(col("l_orderkey").between(1000L, 2000L))
         narrow.queryExecution.toRdd.count()
@@ -757,6 +758,7 @@ object Core {
           RestMemo.stampCopy(src, path, "layout-zorder-v1")
           RestMemo.recordOutcome("layout-zorder-v1", "built")
         }
+        // bare read: a fresh scan of the just-written copy, measured once
         val narrow = s.read.parquet(path)
           .filter(col("l_partkey").between(100L, 300L))
         narrow.queryExecution.toRdd.count()
@@ -811,6 +813,7 @@ object Core {
           .select(col("n.l_orderkey"), col("n.l_linenumber")).head()
         val mk = needle.getLong(0)
         val ml = needle.getInt(1)
+        // bare read: a fresh scan of the just-written copy, measured once
         val narrow = s.read.parquet(path)
           .filter(col("k") === xxhash64(lit(mk), lit(ml).cast("int")))
         narrow.queryExecution.toRdd.count()
@@ -877,6 +880,8 @@ object Core {
         val orPath = base + "_bkt_or"
         def register(name: String, path: String, key: String): Unit = {
           s.sql(s"DROP TABLE IF EXISTS $name")
+          // bare read: schema only, once per registration (the query
+          // itself reads the catalog table)
           val ddl = s.read.parquet(path).schema.toDDL
           s.sql(s"CREATE TABLE $name ($ddl) USING parquet " +
             s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS " +

@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 import graft.pipelines.Ercot
 
 /** S5 binary-Excel query surface: the melted ERCOT hourly-load table
@@ -19,7 +16,7 @@ object ErcotSuite {
       (s, _) => {
         Ercot.ensure(s)
         graft.Graft.tune(s)
-        Ercot.maxLoads(s.read.parquet(Ercot.meltedPath))
+        Ercot.maxLoads(graft.Graft.read(s, Ercot.meltedPath))
       },
       Some(s"""WITH m AS (
         |  SELECT station, MAX(load) AS max_load FROM $E GROUP BY station

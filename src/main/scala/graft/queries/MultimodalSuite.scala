@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Graft, SessionMemo}
 import graft.operators.Multimodal
 import graft.pipelines.MultimodalFixture
 
@@ -20,15 +20,20 @@ import graft.pipelines.MultimodalFixture
 object MultimodalSuite {
 
   /** Every fixture lane reads the same way: ensure the fixture, tune
-    * the session, spread the byte-packed binary scan (parquet packs
-    * 128 MB into few partitions; decode is CPU-dense per row → spread
-    * to the session's cores — at 100 TB the scan is already thousands
-    * of partitions and this is a no-op).
+    * the session, read through the read-plan memo ([[Graft.read]]) and
+    * spread the byte-packed binary scan (parquet packs 128 MB into few
+    * partitions; decode is CPU-dense per row → spread to the session's
+    * cores — at 100 TB the scan is already thousands of partitions and
+    * this is a no-op). The spread frame is memoized per (session, path)
+    * beside the read plan and validated by the same directory
+    * fingerprint, so the optimizer size estimate behind
+    * `ensureParallelism` runs once per lane, not once per query.
     */
   private def lane(s: SparkSession, path: String): DataFrame = {
     MultimodalFixture.ensure(s)
     Graft.tune(s)
-    Graft.ensureParallelism(s.read.parquet(path))
+    SessionMemo.getOrCompute(s, path, "lane")(
+      Graft.ensureParallelism(Graft.read(s, path)))(_ => ())
   }
 
   /** The same lane as the DuckDB oracle sees it. */

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Clean
 import graft.pipelines.OsmFixture
 
 /** The 12 capstone queries (README.md:868-1242) oracle-checked AT SCALE:
@@ -25,12 +24,12 @@ object OsmSuite {
   private def docs(s: SparkSession): DataFrame = {
     OsmFixture.ensure(s)
     graft.Graft.tune(s)
-    s.read.parquet(OsmFixture.docsPath)
+    graft.Graft.read(s, OsmFixture.docsPath)
   }
   private def rawTags(s: SparkSession): DataFrame = {
     OsmFixture.ensure(s)
     graft.Graft.tune(s)
-    s.read.parquet(OsmFixture.rawTagsPath)
+    graft.Graft.read(s, OsmFixture.rawTagsPath)
   }
 
   private def D = s"read_parquet('${OsmFixture.docsPath}/*.parquet')"

@@ -34,6 +34,7 @@ object Sinks {
     */
   def saveCollection(df: DataFrame, path: String, viewName: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
+    // bare read: the round-trip must read back the files just written
     val back = df.sparkSession.read.parquet(path)
     back.createOrReplaceTempView(viewName)
     back
@@ -142,6 +143,7 @@ object Sinks {
       .filter(f => f.getName.endsWith(".parquet")).map(_.length).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val tmp = s"$path.__compact_tmp"
+    // bare read: compaction rewrites the directory it reads
     spark.read.parquet(path).repartition(n)
       .write.mode("overwrite").parquet(tmp)
     val target = java.nio.file.Paths.get(path)

@@ -377,7 +377,6 @@ object JpegBinary {
       val planes = Array.fill(nc)(new Array[Byte](mcuW * 8 * mcuH * 8))
       val prevDc = new Array[Int](nc)
       val zz = new Array[Int](64)
-      val blk = new Array[Double](64)
       var my = 0
       while (my < mcuH) {
         var mx = 0

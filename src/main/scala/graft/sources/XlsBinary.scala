@@ -240,7 +240,7 @@ object XlsBinary {
     val buf = ByteBuffer.wrap(wb).order(ByteOrder.LITTLE_ENDIAN)
     // pass 1: globals substream — SST (+ its CONTINUEs) and sheet offsets
     var pos = 0
-    var sstParts = mutable.ArrayBuffer[Array[Byte]]()
+    val sstParts = mutable.ArrayBuffer[Array[Byte]]()
     var inSst = false
     var firstSheetPos = -1
     var depth = 0

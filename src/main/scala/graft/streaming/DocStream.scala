@@ -198,6 +198,8 @@ object DocStream {
   private def existingIndex(s: SparkSession,
       dir: String): Option[DataFrame] =
     try {
+      // bare read: the index dir gains a partition every micro-batch,
+      // so a memoized read plan would be stale by the next batch
       val df = s.read.parquet(dir)
       if (df.columns.contains("doc_id")) Some(df) else None
     } catch {

@@ -33,6 +33,7 @@ object EventStream {
     * stream definition.
     */
   def storedSchemaOf(spark: SparkSession, dir: String): StructType =
+    // bare read: a stream's input dir grows while the stream runs
     try spark.read.parquet(dir).schema
     catch {
       // Match the stable error CLASS, not a message substring (which is
@@ -93,6 +94,7 @@ object EventStream {
     * stream-vs-batch parity checks.
     */
   def readBatch(spark: SparkSession, dir: String): DataFrame =
+    // bare read: the parity check must see the files written so far
     eventTime(spark.read.parquet(dir))
 
   /** Tumbling-window rollup with watermark — the streaming twin of

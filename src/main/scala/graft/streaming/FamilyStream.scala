@@ -145,6 +145,8 @@ private[streaming] object FamilyStream {
   private def existingIndex(s: SparkSession, dir: String,
       familyCol: String): Option[DataFrame] =
     try {
+      // bare read: the index dir gains a partition every micro-batch,
+      // so a memoized read plan would be stale by the next batch
       val df = s.read.parquet(dir)
       if (df.columns.contains("dhash") && df.columns.contains(familyCol))
         Some(df)

@@ -97,7 +97,6 @@ object MediaStream {
     import org.apache.spark.storage.StorageLevel
     val s = batch.sparkSession
     if (batch.isEmpty) return
-    import s.implicits._
     Graft.cacheScope {
       // ONE decode pass: (id, sig, bytes) for fingerprintable payloads
       // — 16 B/asset of state; the media column is dropped right here
@@ -172,6 +171,8 @@ object MediaStream {
   private def existingIndex(s: SparkSession,
       dir: String): Option[DataFrame] =
     try {
+      // bare read: the index dir gains a partition every micro-batch,
+      // so a memoized read plan would be stale by the next batch
       val df = s.read.parquet(dir)
       if (df.columns.contains("dhash")) Some(df) else None
     } catch {

@@ -131,6 +131,8 @@ object VecStream {
   private def existingIndex(s: SparkSession,
       dir: String): Option[DataFrame] =
     try {
+      // bare read: the index dir gains a partition every micro-batch,
+      // so a memoized read plan would be stale by the next batch
       val df = s.read.parquet(dir)
       if (df.columns.contains("vec_id")) Some(df) else None
     } catch {

@@ -7,7 +7,6 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.Graft
 import graft.functions.Vectors
-import graft.operators.Similarity
 
 /** Interleaved A/B of the two Lloyd-iteration dataflows (the only fair
   * comparison on a host with roaming external load — both forms run in

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   * spec pins that the free path actually fires on this build.
   */
 class AqeSkewSpec extends SparkSpec {
-  import spark.implicits._
 
   test("AQE marks and splits the skewed partition in a sort-merge join") {
     val confs = Seq(

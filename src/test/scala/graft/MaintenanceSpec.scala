@@ -9,7 +9,6 @@ import graft.sinks.Sinks
   * fragment files; producers add columns over time).
   */
 class MaintenanceSpec extends SparkSpec {
-  import spark.implicits._
 
   test("compact: many tiny files → few, identical data, crash-safe swap") {
     val path = "/tmp/graft_compact/t"

@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipelines.MultimodalFixture
-import graft.sources.{JpegBinary, MediaBinary}
+import graft.sources.MediaBinary
 
 /** The MJPEG-in-AVI contracts (round 12 — the compressed-video rung):
   * the container round-trips with codec "mjpg" and per-frame sizes; the

@@ -453,7 +453,6 @@ class PerceptualDedupSpec extends SparkSpec {
     }
     // the chunk-fingerprint pipeline over the SAME corpus reports no
     // cross-format pair — the gap m11 exists to close
-    import spark.implicits._
     val corpus = spark.read.parquet(MultimodalFixture.gifPath)
       .unionByName(spark.read.parquet(MultimodalFixture.percPath))
       .select(col("asset_id").cast("long").as("doc_id"),

@@ -195,6 +195,7 @@ class PipelinesSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tmp/routed")
       .filter(col("ok") === "true").count() == 1)
     val view = Sinks.saveCollection(df, s"$tmp/coll", "test_coll")
+    assert(view.count() == 2)
     assert(spark.sql("SELECT COUNT(*) FROM test_coll").collect()(0).getLong(0) == 2)
   }
 

@@ -132,6 +132,40 @@ class PlanGuardSpec extends SparkSpec {
       s"pair products without a bounded side:\n${offenders.mkString("\n")}")
   }
 
+  test("a second construction of o*, m* and p14-p16 in one session launches no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n =>
+      n.matches("o\\d+_.*") || n.matches("m\\d+[a-z]?_.*") ||
+        n.matches("p1[456]_.*"))
+    assert(names.count(_.startsWith("o")) == 19 &&
+      names.exists(_.startsWith("m")) && names.count(_.startsWith("p")) == 3,
+      s"query selection drifted: $names")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // the first construction may build fixtures, layouts and memos;
+      // every later one must find its read plans and memos in the session
+      val offenders = names.flatMap { n =>
+        val fn = SparkEntry.queries(n)
+        fn(spark, sfDir)
+        org.apache.spark.ListenerBusProbe.drain(sc)
+        val before = jobs.get()
+        fn(spark, sfDir)
+        org.apache.spark.ListenerBusProbe.drain(sc)
+        val ran = jobs.get() - before
+        if (ran == 0) None else Some(s"$n: $ran job(s)")
+      }
+      assert(offenders.isEmpty,
+        s"second construction launched jobs:\n${offenders.mkString("\n")}")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("blocking-family quantizer: no broadcast hint or seed funnel on linear-nCells state") {
     // Round-9 verdict finding #1 retired: under the linear cellsFor rule
     // (nCells ∝ n — pair-generating blocking) the quantizer build must

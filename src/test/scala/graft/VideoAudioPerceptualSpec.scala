@@ -405,7 +405,6 @@ class VideoAudioPerceptualSpec extends SparkSpec {
       s"unplanted pairs reported: ${found.diff(planted).toSeq.sorted.take(5)}")
     // the chunk-fingerprint pipeline over the SAME corpus reports no
     // planted pair — the gap m14 exists to close
-    import spark.implicits._
     val corpus = spark.read.parquet(MultimodalFixture.vpercPath)
       .unionByName(spark.read.parquet(MultimodalFixture.mjpegPath))
       .select(col("asset_id").cast("long").as("doc_id"),
