@@ -1,17 +1,21 @@
 package graft.pipelines
 
 import java.io.File
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Clean
 import graft.sources.XlsBinary
+import graft.tools.GenXls
 
 /** The reference's binary-Excel pipeline (S5 + A11/K2,
   * 01-data-extraction-fundamentals/excel_csv.py + ercot_coast_stats
   * .py): read the 2013 ERCOT hourly-load workbook, find the time and
-  * value of max load per region.
+  * value of max load per region. Without the reference workbook the
+  * fixture is melted from tools.GenXls's synthetic workbook of the same
+  * shape (see `ensure`).
   *
   * The .xls grid is parsed driver-side (a workbook is one unsplittable
   * blob; XlsBinary.readMany is the many-files distributed path) and
@@ -68,15 +72,40 @@ object Ercot {
 
   @volatile private var ready = false
 
+  /** Provenance of the melted table, written beside it: `reference`, or
+    * `generated:v<N>` for a table melted from tools.GenXls version N.
+    */
+  private def markerPath: String = s"$root/SOURCE"
+  private def generated: String = s"generated:v${GenXls.version}"
+  private def builtFrom: Option[String] =
+    try Some(Files.readString(Paths.get(markerPath)).trim)
+    catch { case _: java.io.IOException => None }
+
   /** Persist the melted table for the declared s5 query + its DuckDB
-    * mirror (both read this parquet). No-op if the reference workbook
-    * is absent AND a previously-built fixture exists.
+    * mirror (both read this parquet). With the reference workbook
+    * present it is melted from that workbook; absent, from a synthetic
+    * one of the same shape, written to `$root/synth.xls` by
+    * tools.GenXls and parsed by the same XlsBinary path. A table
+    * melted from the reference, or built before the marker existed, is
+    * kept while the reference is absent; a generated one is rebuilt
+    * once the reference appears or the generator version changes.
     */
   def ensure(spark: SparkSession): Unit = if (!ready) synchronized {
     if (ready) return
-    if (!new File(s"$meltedPath/_SUCCESS").exists()) {
-      require(new File(defaultXls).exists(), s"no ERCOT workbook at $defaultXls")
-      melt(spark).repartition(4).write.mode("overwrite").parquet(meltedPath)
+    val reference = new File(defaultXls).exists()
+    val built = new File(s"$meltedPath/_SUCCESS").exists()
+    val stale = builtFrom match {
+      case _ if !built => true
+      case Some(m) if reference => m != "reference"
+      case None => reference
+      case Some(m) => m.startsWith("generated:") && m != generated
+    }
+    if (stale) {
+      val (xls, marker) =
+        if (reference) (defaultXls, "reference")
+        else { GenXls.write(s"$root/synth.xls"); (s"$root/synth.xls", generated) }
+      melt(spark, xls).repartition(4).write.mode("overwrite").parquet(meltedPath)
+      Files.writeString(Paths.get(markerPath), marker)
     }
     ready = true
   }

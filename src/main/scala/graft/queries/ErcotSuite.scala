@@ -3,9 +3,11 @@ package graft.queries
 import graft.pipelines.Ercot
 
 /** S5 binary-Excel query surface: the melted ERCOT hourly-load table
-  * (parsed from the real BIFF8 workbook by sources.XlsBinary) queried
-  * for per-region max load + first occurrence time — excel_csv.py's
-  * output, DuckDB-oracled over the shared melted parquet.
+  * (parsed by sources.XlsBinary from the reference BIFF8 workbook, or
+  * from tools.GenXls's synthetic workbook of the same shape when the
+  * reference is absent — see Ercot.ensure) queried for per-region max
+  * load + first occurrence time — excel_csv.py's output, DuckDB-oracled
+  * over the shared melted parquet.
   */
 object ErcotSuite {
 
