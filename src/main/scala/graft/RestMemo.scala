@@ -10,11 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * expensive derived state the session memo holds — trained ANN
   * quantizers and codes, dedup pair tables and closures, the BPE merge
   * table, media fingerprint tables — written once as parquet sidecars
-  * keyed by (content fingerprint of the source data, memo name), and
-  * RELOADED by later sessions instead of rebuilt. This is the
-  * production posture "indexes are built at ingest" taken literally:
-  * the first session after an ingest pays the build; every session
-  * after that pays a parquet read of the (much smaller) derived state.
+  * keyed by (content fingerprint of the source data, engine code
+  * stamp, memo name), and RELOADED by later sessions instead of
+  * rebuilt. This is the production posture "indexes are built at
+  * ingest" taken literally: the first session after an ingest pays the
+  * build; every session after that pays a parquet read of the (much
+  * smaller) derived state.
   * On a cluster the sidecar directory is a table path next to the
   * corpus and the fingerprint is the snapshot/commit id.
   *
@@ -108,6 +109,35 @@ object RestMemo {
         Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(
           dataPaths.mkString("\u0000"))))
 
+  /** The engine's code stamp, folded into every sidecar fingerprint so
+    * that a rebuilt engine rebuilds its memos instead of reloading the
+    * answers of the code that wrote them: for a jar its size and mtime,
+    * for a class directory its file count and max mtime (walked once
+    * per JVM). An unlocatable code source stamps "unknown".
+    */
+  private lazy val engineStamp: String =
+    try {
+      val loc = Paths.get(getClass.getProtectionDomain.getCodeSource
+        .getLocation.toURI)
+      if (Files.isRegularFile(loc))
+        s"jar:${Files.size(loc)}:${Files.getLastModifiedTime(loc).toMillis}"
+      else {
+        var n = 0L; var mtime = 0L
+        val stream = Files.walk(loc)
+        try stream.filter(f => Files.isRegularFile(f)).forEach { f =>
+          n += 1
+          mtime = math.max(mtime, Files.getLastModifiedTime(f).toMillis)
+        } finally stream.close()
+        s"classes:$n:$mtime"
+      }
+    } catch { case _: Throwable => "unknown" }
+
+  /** Replaces [[engineStamp]] when set — specs simulate a rebuilt
+    * engine with it. */
+  private[graft] var CodeStampOverride: Option[String] = None
+
+  private def codeStamp: String = CodeStampOverride.getOrElse(engineStamp)
+
   /** Sidecar-keying fingerprint: [[SessionMemo.fingerprint]] (file
     * count, total bytes, max mtime) extended with a content sample —
     * the first and last 64 bytes of every regular file under `path`,
@@ -178,8 +208,9 @@ object RestMemo {
       reassemble: (Map[String, DataFrame], Map[String, String]) => T): T = {
     // every contributing source dir is folded into the key (ADVICE
     // r14): a multi-source memo fingerprinted on one path would serve
-    // a stale sidecar indefinitely after any OTHER source regenerates
-    val fp = dataPaths.map(restFingerprint).mkString("|")
+    // a stale sidecar indefinitely after any OTHER source regenerates;
+    // the engine's code stamp makes a rebuilt engine rebuild its memos
+    val fp = dataPaths.map(restFingerprint).mkString("|") + "#" + codeStamp
     val dir = sideDir(s, dataPaths, what)
     val loaded: Option[T] =
       try readManifest(dir).filter(_ => ownedByUs(dir))
@@ -242,16 +273,18 @@ object RestMemo {
 
   /** One-DataFrame memo, lineage-truncated in memory either way (the
     * CellsShared/DedupShared form). `build` must return an EAGERLY
-    * TRUNCATED frame (Graft.truncate/localCheckpoint — most sites
-    * already do, and some need the truncation inside their own
-    * persist/unpersist window); the reload path reads the sidecar and
-    * truncates it into the identical in-memory form. Released via
-    * [[Graft.releaseTruncated]] by the SessionMemo lifecycle.
+    * TRUNCATED frame (Graft.truncate/localCheckpoint); the reload path
+    * reads the sidecar and truncates it into the identical in-memory
+    * form. Released via [[Graft.releaseTruncated]] by the SessionMemo
+    * lifecycle. `build` runs inside its own [[Graft.cacheScope]]: the
+    * intermediates it persists (e.g. MinHash's shingle-set cache) are
+    * released once the truncated result exists, instead of staying
+    * cached behind the memo for the rest of the session.
     *
-    * CONTRACT — bump the `what` tag (m14-pairs → m14-pairs-v2)
-    * whenever the memoized COMPUTE changes (ADVICE r14): the
-    * fingerprint invalidates on source-data change only, so a stale
-    * sidecar built by old code otherwise reloads as if current.
+    * The sidecar key carries the engine's code stamp, so a rebuilt
+    * engine rebuilds. Within one engine build, two different computes
+    * still need two `what` tags (m14-pairs → m14-pairs-v2): the
+    * fingerprint otherwise sees the same source data and code.
     */
   def frame(s: SparkSession, dataPath: String, what: String)(
       build: => DataFrame): DataFrame =
@@ -266,7 +299,7 @@ object RestMemo {
   def frame(s: SparkSession, dataPaths: Seq[String], what: String)(
       build: => DataFrame): DataFrame =
     SessionMemo.getOrCompute(s, dataPaths, what) {
-      loadOrBuild(s, dataPaths, what)(build)(
+      loadOrBuild(s, dataPaths, what)(Graft.cacheScope(build))(
         v => (Seq("data" -> v), Map.empty),
         (fs, _) => Graft.truncate(fs("data"), eager = true))
     }(Graft.releaseTruncated)

@@ -196,7 +196,8 @@ object VectorExpressions {
     "simhash64b" -> (es => SimHash64B(es(0), es(1))),
     "simhash64both" -> (es => SimHash64Both(es(0), es(1))),
     "hyperplane_bucket" -> (es => HyperplaneBucket(es(0), es(1), es(2))),
-    "nfc_normalize" -> (es => NfcNormalize(es(0))))
+    "nfc_normalize" -> (es => NfcNormalize(es(0))),
+    "capped_collect" -> (es => CappedCollect(es(0), es(1))))
 
   /** Register the expressions in the session's function registry
     * (idempotent; call from any session setup path).

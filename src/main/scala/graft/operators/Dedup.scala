@@ -15,14 +15,20 @@ import graft.functions.Text
   *   - near-dup — MinHash, SimHash, perceptual Hamming, two-lane,
   *     temporal, span-temporal and region signatures: each operator is
   *     one call to the private banded-candidate core [[bandJoin]] plus
-  *     its own verify step. The core bands the signatures into buckets,
-  *     caps mega-buckets, joins on the bucket (self form: one reused
-  *     plan, id1 < id2; cross form: index × batch only), filters on the
-  *     score ahead of the dedup exchange and deduplicates the pairs, so
-  *     the candidate policy lives in one place. Only ids and signatures
-  *     shuffle; text and media never move;
+  *     its own verify step. The core bands the signatures into buckets
+  *     and collects each bucket ONCE into a list of at most `cap`
+  *     entries (`capped_collect`: a mega-bucket of more than `cap` rows
+  *     is dropped, and no bucket ever holds more than cap + 1 entries in
+  *     memory). The self form pairs inside each list (id1 < id2, at most
+  *     cap·(cap−1)/2 pairs per bucket, no join); the cross form joins
+  *     the index side's lists to the batch side at bucket level (index ×
+  *     batch only). It then filters on the score ahead of the dedup
+  *     exchange and deduplicates the pairs, so the candidate policy
+  *     lives in one place. Only ids and signatures shuffle; text and
+  *     media never move;
   *   - n-gram Jaccard and contamination: exact set similarity via
-  *     explode + equi-join on shingle hashes, under the same cap;
+  *     explode + equi-join on shingle hashes, under a shingle-frequency
+  *     cap (`capBuckets`, the same row-count rule);
   *   - span removal, clustering and incremental new-row filters.
   */
 object Dedup {
@@ -55,8 +61,10 @@ object Dedup {
   }
 
   /** Drop rows belonging to (keys)-groups larger than `cap` — the
-    * mega-bucket guard of [[bandJoin]] and the shingle-frequency cap of
-    * [[ngramJaccardPairs]] / [[crossCorpusOverlap]].
+    * shingle-frequency cap of [[ngramJaccardPairs]] /
+    * [[crossCorpusOverlap]], whose exploded streams feed an equi-join
+    * on the shingle and a per-doc kept count. ([[bandJoin]] caps inside
+    * its bucket aggregate instead.)
     *
     * Implemented as a partial-aggregating `groupBy(keys).count` plus a
     * semi-join, NOT a `COUNT(*) OVER (PARTITION BY keys)` window: the
@@ -76,21 +84,32 @@ object Dedup {
     df.join(ok, keys, "left_semi")
   }
 
-  /** The banded-candidate core: banding, bucket cap, bucket join, the
-    * score filter and the pair dedup, in one place for every near-dup
-    * operator.
+  /** The banded-candidate core: banding, bucket cap, candidate pairs,
+    * the score filter and the pair dedup, in one place for every
+    * near-dup operator.
     *
     * Each side is exploded into one row per band — `band` is an array
     * of bucket values evaluated per row, posexploded into (band, block)
-    * next to the `carry` columns — and capped by [[capBuckets]] on
-    * `keys`. Rows sharing every key column are candidates:
-    *   - self form (`batch = None`): both join sides are the SAME capped
-    *     plan (one exchange, reused) joined with l.id < r.id;
+    * next to the `carry` columns (`carry` starts with `id`) — and
+    * grouped ONCE on `keys` into bucket lists: `capped_collect` of the
+    * carry struct, NULL for a bucket of more than `cap` rows (the cap
+    * counts rows, so several rows of one id — region windows, slots —
+    * count separately). A bucket's memory is bounded at cap + 1 entries
+    * on the map side and in the merge, however large the bucket; capped
+    * buckets are dropped. Candidates are rows sharing every key column:
+    *   - self form (`batch = None`): no join. Each list is sorted by id
+    *     and expanded in place into its (i < j) pairs — at most
+    *     cap·(cap−1)/2 per bucket — keeping l.id < r.id, so a pair is
+    *     emitted once per shared bucket and same-id rows never pair;
     *   - cross form: index × batch collisions only, no within-side
-    *     pair. The index side is always capped (it is the unbounded one
-    *     at scale); `capBatch` caps the batch side too.
-    * Output is (id1, id2, score...) with id1 from the index side;
-    * `score` columns read the sides as `l.<col>` / `r.<col>`. `keep`
+    *     pair. The index side's lists (always capped — it is the
+    *     unbounded side at scale) join the batch side at bucket level:
+    *     the batch rows, or with `capBatch` the batch side's own capped
+    *     lists (at most cap² pairs per bucket).
+    * The expanded sides are struct columns `l` and `r` (the carry
+    * columns, `l` from the index side) next to the bucket `keys`; output
+    * is (id1, id2, score...) with id1 = l.id, and `score` reads the
+    * sides as `l.<col>` / `r.<col>` and the bucket by key name. `keep`
     * filters AHEAD of the dedup exchange: a pair colliding in several
     * bands yields duplicate rows with identical deterministic scores,
     * so filter-then-distinct equals distinct-then-filter while the
@@ -98,20 +117,38 @@ object Dedup {
     * `dedup = false` leaves the band-duplicated rows to the caller —
     * MinHash defers its distinct past the signature-estimate cut.
     */
-  private def bandJoin(index: DataFrame, batch: Option[DataFrame],
+  private[graft] def bandJoin(index: DataFrame, batch: Option[DataFrame],
       carry: Seq[String], band: Column, cap: Int,
       keys: Seq[String] = Seq("band", "block"), capBatch: Boolean = false,
       score: Seq[Column] = Nil, keep: Option[Column] = None,
       dedup: Boolean = true): DataFrame = {
+    val entry = struct(carry.map(col): _*)
     def banded(df: DataFrame): DataFrame =
       df.select(carry.map(col) :+ posexplode(band).as(Seq("band", "block")): _*)
-    val l = capBuckets(banded(index), keys, cap)
-    val r = batch.fold(l)(b =>
-      if (capBatch) capBuckets(banded(b), keys, cap) else banded(b))
-    val collide = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
-    val pairs = l.as("l")
-      .join(r.as("r"),
-        if (batch.isEmpty) collide && col("l.id") < col("r.id") else collide)
+    def lists(df: DataFrame, name: String, minSize: Int): DataFrame =
+      banded(df).groupBy(keys.map(col): _*)
+        .agg(call_function("capped_collect", entry, lit(cap)).as(name))
+        .filter(size(col(name)) >= minSize)
+    def expand(df: DataFrame, cols: Column*): DataFrame =
+      df.select(keys.map(col) ++ cols: _*)
+    val sides = batch match {
+      case None =>
+        // sorted by id (the struct's first field): entry i pairs with
+        // the entries after it, so l.id <= r.id
+        val sorted = expand(lists(index, "ls", 2), sort_array(col("ls")).as("ls"))
+        val left = expand(sorted, col("ls"), posexplode(col("ls")).as(Seq("i", "l")))
+        expand(left, col("l"),
+            explode(slice(col("ls"), col("i") + 2, size(col("ls")))).as("r"))
+          .filter(col("l.id") < col("r.id"))
+      case Some(b) if capBatch =>
+        val both = lists(index, "ls", 1).join(lists(b, "rs", 1), keys)
+        expand(expand(both, explode(col("ls")).as("l"), col("rs")),
+          col("l"), explode(col("rs")).as("r"))
+      case Some(b) =>
+        val both = lists(index, "ls", 1).join(expand(banded(b), entry.as("r")), keys)
+        expand(both, explode(col("ls")).as("l"), col("r"))
+    }
+    val pairs = sides
       .select(Seq(col("l.id").as("id1"), col("r.id").as("id2")) ++ score: _*)
     val kept = keep.fold(pairs)(pairs.filter)
     if (dedup) kept.distinct() else kept
@@ -120,18 +157,6 @@ object Dedup {
   /** Cross-form output names: (id1, id2) → (index_id, batch_id). */
   private def asCross(pairs: DataFrame): DataFrame =
     pairs.withColumnsRenamed(Map("id1" -> "index_id", "id2" -> "batch_id"))
-
-  /** The self form's signatures, persisted: banding, the cap's count
-    * side and the verify arrays all read them, and the signature
-    * computation is the plan's only CPU-heavy stage. trackedPersist,
-    * not a bare persist: micro-batch callers (the stream gates) wrap
-    * each batch in Graft.cacheScope and drain tracked intermediates at
-    * batch end; a plain persist would accrete one orphaned cached frame
-    * per micro-batch. Cross forms read their inputs once per consumer
-    * and persist nothing.
-    */
-  private def selfSide(index: DataFrame, batch: Option[DataFrame]): DataFrame =
-    if (batch.isEmpty) graft.Graft.trackedPersist(index) else index
 
   /** Bucket values of a 64-bit `sig` cut into `bands` equal blocks
     * (64/bands bits each). Pigeonhole: a pair at Hamming distance
@@ -296,7 +321,7 @@ object Dedup {
   private def hammingPairs(index: DataFrame, batch: Option[DataFrame],
       maxHamming: Int, cap: Int, bands: Int): DataFrame = {
     val band = hammingBand(bands)
-    bandJoin(selfSide(index, batch), batch, Seq("id", "sig"), band, cap,
+    bandJoin(index, batch, Seq("id", "sig"), band, cap,
       score = Seq(Text.hamming64(col("l.sig"), col("r.sig")).as("hamming")),
       keep = Some(col("hamming") <= maxHamming))
   }
@@ -367,7 +392,7 @@ object Dedup {
     */
   def simhashNearDups128Sig(sigs: DataFrame,
       maxHamming: Int = 32, maxBucketSize: Int = 256): DataFrame =
-    bandJoin(selfSide(sigs, None), None, Seq("id", "siga", "sigb"),
+    bandJoin(sigs, None, Seq("id", "siga", "sigb"),
       twoLaneBand, maxBucketSize, score = Seq(wideHamming.as("hamming")),
       keep = Some(col("hamming") <= maxHamming))
 
@@ -385,16 +410,16 @@ object Dedup {
     * keeps pairs colliding in a band < 4 within `maxHammingA`; the wide
     * lane keeps pairs colliding anywhere within `maxHammingWide` —
     * bit-identical to the two independent pipelines (TextDedupSpec pins
-    * this) at half the banding/cap/join stages, and the self-join's
-    * exchanges are shared between the two output branches (optimization
-    * round 17, guide §2.4). Each lane filters ahead of its own dedup
-    * exchange, the [[bandJoin]] rule.
+    * this) at half the banding and bucket-list stages, and the bucket
+    * aggregate's exchange is shared between the two output branches
+    * (optimization round 17, guide §2.4). Each lane filters ahead of
+    * its own dedup exchange, the [[bandJoin]] rule.
     */
   def simhashNearDupsAgreement(sigs: DataFrame, maxHammingA: Int = 3,
       maxHammingWide: Int = 32, maxBucketSize: Int = 256): DataFrame = {
-    val joined = bandJoin(selfSide(sigs, None), None,
+    val joined = bandJoin(sigs, None,
       Seq("id", "siga", "sigb"), twoLaneBand, maxBucketSize,
-      score = Seq(col("l.band").as("band"), laneAHamming.as("ha"),
+      score = Seq(col("band"), laneAHamming.as("ha"),
         wideHamming.as("hw")),
       dedup = false)
     def lane(name: String, keep: Column): DataFrame =
@@ -414,13 +439,22 @@ object Dedup {
     * bounded (k slots, R regions, S spans × k slots) and only
     * (id, slot/region, 8 B sig) rows shuffle — media never leaves its
     * scan.
+    *
+    * The self form persists its signatures: the bucket lists and both
+    * verify arrays read them, and the signature computation is the
+    * plan's only CPU-heavy stage. trackedPersist, not a bare persist:
+    * micro-batch callers (the stream gates) wrap each batch in
+    * Graft.cacheScope and drain tracked intermediates at batch end; a
+    * plain persist would accrete one orphaned cached frame per
+    * micro-batch. Cross forms read their inputs once per consumer and
+    * persist nothing.
     */
   private def arrayPairs(index: DataFrame, batch: Option[DataFrame],
       maxHamming: Int, cap: Int, bands: Int, slotted: Boolean, name: String)(
       arrays: DataFrame => DataFrame,
       score: (Column, Column) => Column): DataFrame = {
     val band = hammingBand(bands)
-    val sigs = selfSide(index, batch)
+    val sigs = if (batch.isEmpty) graft.Graft.trackedPersist(index) else index
     val (carry, keys) =
       if (slotted) (Seq("id", "slot", "sig"), Seq("slot", "band", "block"))
       else (Seq("id", "sig"), Seq("band", "block"))

@@ -1483,8 +1483,8 @@ m$r AS MATERIALIZED (
         // radius-3 lane is lane A of the same two-lane signature frame
         // the wide lane consumes (simhash64both — one tokenize+shingle
         // pass for both lanes), and the wide lane's 8-band banding
-        // contains the radius-3 lane's 4 bands, so one capped self-join
-        // yields both pair sets (Dedup.simhashNearDupsAgreement —
+        // contains the radius-3 lane's 4 bands, so one pass of capped
+        // bucket lists yields both pair sets (Dedup.simhashNearDupsAgreement —
         // bit-identical to the two independent pipelines, pinned by
         // TextDedupSpec). The previous shape ran three independent text
         // scans and two independent banding joins.

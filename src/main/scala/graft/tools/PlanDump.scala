@@ -47,8 +47,9 @@ object PlanDump {
           }
         }
     SparkEntry.warm(spark)
-    // operator plans first: a memo build in prebuild leaves its cached
-    // intermediates behind, which would show up in them
+    // operator plans first, before any memo build: a build's cached
+    // intermediates (released by RestMemo.frame, not by every memo form)
+    // would show up in them
     dump(operators)
     SparkEntry.prebuild(spark, sfDir)
     dump(SparkEntry.queries)

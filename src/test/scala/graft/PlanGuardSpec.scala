@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /** Physical-plan regression guard over the ENTIRE declared query surface:
   * a CartesianProduct or BroadcastNestedLoopJoin may only appear with a
@@ -247,5 +248,34 @@ class PlanGuardSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"v21 exchanges carrying multiple vector payloads:\n${offenders.mkString("\n")}")
+  }
+
+  test("x8's executed plan has no join and no InMemoryRelation") {
+    val df = SparkEntry.queries("x8_simhash_neardups")(spark, sfDir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(!flatten(plan).exists {
+      case _: BaseJoinExec | _: InMemoryTableScanExec => true
+      case _ => false
+    }, plan)
+    val logical = df.queryExecution.optimizedPlan
+    assert(logical.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      case m: InMemoryRelation => m
+    }.isEmpty, logical)
+  }
+
+  test("x7's memo build leaves no cached intermediates behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rest-spec").toString
+    val fresh = Graft.tune(spark.newSession())
+    fresh.conf.set("graft.memo.restDir", dir)
+    val cache = fresh.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    try {
+      SparkEntry.queries("x7_minhash_neardups")(fresh, sfDir).collect()
+      assert(RestMemo.drainOutcomes().get("minhash-pairs").contains("built"))
+      assert(cache.isEmpty, "the build's cached intermediates outlived it")
+    } finally SessionMemo.endSession(fresh)
   }
 }

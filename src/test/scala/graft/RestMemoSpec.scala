@@ -177,4 +177,28 @@ class RestMemoSpec extends SparkSpec {
       assert(re.small.collect().toSeq == first.small.collect().toSeq)
     }
   }
+
+  test("frame: a sidecar written under one engine code stamp is rebuilt, not reloaded, under another") {
+    withRestDir { _ =>
+      val src = writeSource(Seq((1L, "a"), (2L, "b")))
+      var builds = 0
+      def get() = RestMemo.frame(spark, src, "spec-code-stamp") {
+        builds += 1
+        Graft.truncate(spark.read.parquet(src), eager = true)
+      }
+      val prev = RestMemo.CodeStampOverride
+      try {
+        RestMemo.CodeStampOverride = Some("A")
+        assert(get().count() == 2 && builds == 1)
+        SessionMemo.endSession(spark)
+        get()
+        assert(builds == 1, "same stamp: the sidecar reloads")
+        SessionMemo.endSession(spark)
+        RestMemo.CodeStampOverride = Some("B")
+        assert(get().count() == 2)
+        assert(builds == 2, "a new code stamp must rebuild")
+        assert(RestMemo.drainOutcomes().get("spec-code-stamp").contains("built"))
+      } finally RestMemo.CodeStampOverride = prev
+    }
+  }
 }
