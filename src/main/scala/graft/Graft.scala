@@ -205,7 +205,7 @@ object Graft {
     * only, never data or results: every query still scans parquet. A
     * bare `spark.read.parquet` re-lists the directory and launches a
     * footer-schema job on EVERY call (70–85 ms of driver work per call
-    * on a 32-core host, `graft.tools.ReadCost`).
+    * on a 32-core host, measured before this memo).
     *
     * The entry lives in [[SessionMemo]], keyed by path and validated by
     * [[SessionMemo.fingerprint]]: a rewrite of the directory REPLACES

@@ -526,7 +526,7 @@ object ScaleStress {
     }
     // STREAMING CROP-GATE ingest probe (round 15 — VERDICT r14 #8:
     // region_pairs pins the batch operator's growth; this pins the
-    // STREAM gate's): CropStream.ingestBatch driven directly (its
+    // STREAM gate's): AssetStream.Crop.ingestBatch driven directly (its
     // semantics are batch-deterministic — the stream only schedules
     // it) over 4 equal batches of synthetic cloud-texture BMPs at two
     // corpus sizes, at the PRODUCTION radius 3 (the region_pairs
@@ -575,7 +575,8 @@ object ScaleStress {
           } catch { case _: Throwable => () }
       }
     streamIngestProbe("cropstream_ingest")((b, id, idx, q) =>
-      graft.streaming.CropStream.ingestBatch(b, id, idx, q, maxHamming = 3))
+      graft.streaming.AssetStream.Crop.ingestBatch(b, id, idx, q,
+        maxHamming = 3))
     // STREAMING ORIENTATION-GATE ingest probe (round 16 — VERDICT r15
     // #5: cropstream_ingest pins the crop gate's growth; this pins the
     // rotation/flip gate's). Same scaffold and production radius 3;
@@ -587,7 +588,7 @@ object ScaleStress {
     // (band, block) bucket collisions over 8 B sigs — pixels never
     // leave the decode scan, the cropstream posture.
     streamIngestProbe("orientstream_ingest")((b, id, idx, q) =>
-      graft.streaming.OrientStream.ingestBatch(b, id, idx, q,
+      graft.streaming.AssetStream.Orient.ingestBatch(b, id, idx, q,
         maxHamming = 3))
     // BPE per-round marginal cost at FIXED vocabulary (VERDICT r12 #5):
     // the copies here share the token space (plain id-shifted

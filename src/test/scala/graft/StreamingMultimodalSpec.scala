@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.Multimodal
-import graft.streaming.{DocStream, EventStream, VecStream}
+import graft.streaming.{AssetStream, DocStream, EventStream, VecStream}
 
 /** Streaming (file source → watermark window agg → memory sink) and
   * multimodal plumbing tests.
@@ -349,58 +349,44 @@ class StreamingMultimodalSpec extends SparkSpec {
 
   test("nearDupIngest: within-batch canonicals, cross-batch quarantine, idempotent replay") {
     import spark.implicits._
-    val feed = java.nio.file.Files.createTempDirectory("ndi_feed")
-    val indexDir = java.nio.file.Files.createTempDirectory("ndi_index").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("ndi_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ndi_ckpt").toString
-    def doc(id: Long, text: String) = (id, text, "en", "crawl", text.length.toLong)
-    def stage(name: String, rows: Seq[(Long, String, String, String, Long)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("ndi_stage")
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, feed.resolve(name))
-    }
+    val g = new GateScaffold(spark, "ndi")
+    def docs(rows: (Long, String)*) = rows.map { case (id, text) =>
+      (id, text, "en", "crawl", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
     val base = (1 to 30).map(i => s"w$i").mkString(" ")
     // batch 0: docs 1/2 are near-dups of each other, doc 3 unique
-    stage("a.parquet", Seq(
-      doc(1L, base),
-      doc(2L, base.dropRight(3) + "zzz"),
-      doc(3L, (1 to 30).map(i => s"u$i").mkString(" "))))
-    val q = DocStream.nearDupIngest(spark, feed.toString, indexDir,
-      quarDir, ckpt, threshold = 0.5)
+    g.stage("a.parquet", docs(
+      1L -> base,
+      2L -> (base.dropRight(3) + "zzz"),
+      3L -> (1 to 30).map(i => s"u$i").mkString(" ")))
+    val q = DocStream.nearDupIngest(spark, g.feed.toString, g.index,
+      g.quar, g.ckpt, threshold = 0.5)
     try {
       q.processAllAvailable()
-      val idx1 = spark.read.parquet(indexDir)
+      val idx1 = spark.read.parquet(g.index)
         .select("doc_id").as[Long].collect().toSet
       assert(idx1 == Set(1L, 3L), s"batch-0 index: $idx1")
       // batch 1: doc 10 near-dups INDEXED doc 1; doc 11 is novel
-      stage("b.parquet", Seq(
-        doc(10L, base.dropRight(3) + "yyy"),
-        doc(11L, (1 to 30).map(i => s"v$i").mkString(" "))))
+      g.stage("b.parquet", docs(
+        10L -> (base.dropRight(3) + "yyy"),
+        11L -> (1 to 30).map(i => s"v$i").mkString(" ")))
       q.processAllAvailable()
     } finally q.stop()
-    def snapshot() = (
-      spark.read.parquet(indexDir).select("doc_id", "text", "ingest_batch")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet,
-      spark.read.parquet(quarDir)
-        .select("doc_id", "matched_id", "reason", "ingest_batch")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getInt(3)))
-        .toSet)
+    def snapshot() = g.sinks(Seq("doc_id", "text", "ingest_batch"),
+        r => (r.getLong(0), r.getString(1), r.getInt(2)))(
+      Seq("doc_id", "matched_id", "reason", "ingest_batch"),
+        r => (r.getLong(0), r.getLong(1), r.getString(2), r.getInt(3)))
     val (idx, quar) = snapshot()
     assert(idx.map(_._1) == Set(1L, 3L, 11L), s"final index: $idx")
     assert(quar.map(t => (t._1, t._2, t._3)) == Set(
       (2L, 1L, "within_batch"), (10L, 1L, "index_near_dup")), s"quarantine: $quar")
-    val j = spark.read.parquet(quarDir)
+    val j = spark.read.parquet(g.quar)
       .filter(col("doc_id") === 10L).select("jaccard").as[Double].collect()(0)
     assert(j >= 0.5, s"cross-batch match jaccard $j")
     // REPLAY batch 1 (foreachBatch is at-least-once): dynamic partition
     // overwrite + own-partition exclusion must leave both sinks unchanged
     val replayIn = DocStream.cleanFeedBatch(
-      spark.read.schema(DocStream.storedSchema)
-        .parquet(feed.resolve("b.parquet").toString))
+      g.staged("b.parquet", DocStream.storedSchema))
     // file b's micro-batch id = the partition doc 11 landed in (the
     // stream may interleave empty batches, so it isn't always 1)
     val bBatch = idx.collectFirst { case (11L, _, p) => p.toLong }.get
@@ -411,7 +397,7 @@ class StreamingMultimodalSpec extends SparkSpec {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     bystander.count()
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
-    DocStream.ingestBatch(replayIn, bBatch, indexDir, quarDir, threshold = 0.5)
+    DocStream.ingestBatch(replayIn, bBatch, g.index, g.quar, threshold = 0.5)
     assert(snapshot() == ((idx, quar)), "replayed batch changed the sinks")
     assert(bystander.storageLevel !=
         org.apache.spark.storage.StorageLevel.NONE,
@@ -427,7 +413,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val ckDir = java.nio.file.Files.createTempDirectory("ndi_reliable").toString
     spark.conf.set("graft.checkpoint.dir", ckDir)
     try {
-      DocStream.ingestBatch(replayIn, bBatch, indexDir, quarDir,
+      DocStream.ingestBatch(replayIn, bBatch, g.index, g.quar,
         threshold = 0.5)
       assert(snapshot() == ((idx, quar)),
         "reliable-checkpoint replay changed the sinks")
@@ -439,119 +425,85 @@ class StreamingMultimodalSpec extends SparkSpec {
 
   test("VecStream.nearDupIngest: vector twin — canonicals, cross-batch quarantine, replay") {
     import spark.implicits._
-    val feed = java.nio.file.Files.createTempDirectory("vdi_feed")
-    val indexDir = java.nio.file.Files.createTempDirectory("vdi_index").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("vdi_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("vdi_ckpt").toString
+    val g = new GateScaffold(spark, "vdi")
     def axis(i: Int, eps: Float = 0f): Array[Float] = {
       val a = Array.fill(64)(0f); a(i) = 1f; if (eps != 0f) a((i + 1) % 64) = eps
       a
     }
-    def stage(name: String, rows: Seq[(Long, Array[Float], Long)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("vdi_stage")
+    def vecs(rows: (Long, Array[Float], Long)*) =
       rows.toDF("vec_id", "embedding", "label")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, feed.resolve(name))
-    }
     // batch 0: vectors 1/2 near-identical (cos ~0.9999), 3 orthogonal
-    stage("a.parquet", Seq(
+    g.stage("a.parquet", vecs(
       (1L, axis(0), 0L), (2L, axis(0, 0.01f), 0L), (3L, axis(7), 1L)))
-    val q = VecStream.nearDupIngest(spark, feed.toString, indexDir,
-      quarDir, ckpt, threshold = 0.9)
+    val q = VecStream.nearDupIngest(spark, g.feed.toString, g.index,
+      g.quar, g.ckpt, threshold = 0.9)
     try {
       q.processAllAvailable()
-      val idx1 = spark.read.parquet(indexDir)
+      val idx1 = spark.read.parquet(g.index)
         .select("vec_id").as[Long].collect().toSet
       assert(idx1 == Set(1L, 3L), s"batch-0 index: $idx1")
       // batch 1: vector 10 near-dups INDEXED vector 1; 11 is novel
-      stage("b.parquet", Seq(
+      g.stage("b.parquet", vecs(
         (10L, axis(0, 0.02f), 0L), (11L, axis(23), 2L)))
       q.processAllAvailable()
     } finally q.stop()
-    def snapshot() = (
-      spark.read.parquet(indexDir).select("vec_id", "ingest_batch")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet,
-      spark.read.parquet(quarDir)
-        .select("vec_id", "matched_id", "reason")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-        .toSet)
+    def snapshot() = g.sinks(Seq("vec_id", "ingest_batch"),
+        r => (r.getLong(0), r.getInt(1)))(
+      Seq("vec_id", "matched_id", "reason"),
+        r => (r.getLong(0), r.getLong(1), r.getString(2)))
     val (idx, quar) = snapshot()
     assert(idx.map(_._1) == Set(1L, 3L, 11L), s"final index: $idx")
     assert(quar == Set(
       (2L, 1L, "within_batch"), (10L, 1L, "index_near_dup")),
       s"quarantine: $quar")
-    val sim = spark.read.parquet(quarDir)
+    val sim = spark.read.parquet(g.quar)
       .filter(col("vec_id") === 10L).select("sim").as[Double].collect()(0)
     assert(sim >= 0.9, s"cross-batch match sim $sim")
     // replay batch 1: dynamic partition overwrite + own-partition
     // exclusion must leave both sinks unchanged
     val bBatch = idx.collectFirst { case (11L, p) => p.toLong }.get
-    val replayIn = spark.read.schema(VecStream.storedSchema)
-      .parquet(feed.resolve("b.parquet").toString)
-    VecStream.ingestBatch(replayIn, bBatch, indexDir, quarDir,
-      threshold = 0.9)
+    VecStream.ingestBatch(g.staged("b.parquet", VecStream.storedSchema),
+      bBatch, g.index, g.quar, threshold = 0.9)
     assert(snapshot() == ((idx, quar)), "replayed batch changed the sinks")
   }
 
   test("MediaStream.nearDupIngest: perceptual gate — cross-format dups quarantined, replay idempotent") {
     import spark.implicits._
     import graft.pipelines.MultimodalFixture
-    import graft.streaming.MediaStream
-    val feed = java.nio.file.Files.createTempDirectory("mdi_feed")
-    val indexDir = java.nio.file.Files.createTempDirectory("mdi_index").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("mdi_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mdi_ckpt").toString
-    def stage(name: String, rows: Seq[(Long, String, Array[Byte])]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("mdi_stage")
-      rows.toDF("asset_id", "media_type", "media")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, feed.resolve(name))
-    }
+    val g = new GateScaffold(spark, "mdi")
     // gif assets 0/1/10 are mutually beyond the radius-7 banding (the
     // m11 pair set at sf-independent fixture scale excludes all three
     // pairs); 100 is the SAME PICTURE as 0 re-encoded as BMP — a
     // within-batch cross-format duplicate no byte fingerprint can see
-    def gifBytes(g: Long) = MultimodalFixture.gifMedia(g)
-    def bmpOf(g: Long) = {
-      val (w, h) = MultimodalFixture.gifDims(g)
-      graft.sources.MediaBinary.encodeBmp(w, h, MultimodalFixture.gifPixels(g))
+    def gifBytes(id: Long) = MultimodalFixture.gifMedia(id)
+    def bmpOf(id: Long) = {
+      val (w, h) = MultimodalFixture.gifDims(id)
+      graft.sources.MediaBinary.encodeBmp(w, h, MultimodalFixture.gifPixels(id))
     }
-    stage("a.parquet", Seq(
+    g.stageAssets("a.parquet", Seq(
       (0L, "gif", gifBytes(0)), (1L, "gif", gifBytes(1)),
       (100L, "image", bmpOf(0)),
       (999L, "blob", Array.tabulate[Byte](256)(i => (i * 37 + 11).toByte))))
-    val q = MediaStream.nearDupIngest(spark, feed.toString, indexDir,
-      quarDir, ckpt, maxHamming = 7)
+    val q = AssetStream.Image.nearDupIngest(spark, g.feed.toString, g.index,
+      g.quar, g.ckpt, maxHamming = 7)
     try {
       q.processAllAvailable()
-      val idx1 = spark.read.parquet(indexDir)
+      val idx1 = spark.read.parquet(g.index)
         .select("asset_id").as[Long].collect().toSet
       assert(idx1 == Set(0L, 1L), s"batch-0 index: $idx1")
       // batch 1: 201 is the PNG re-encode of INDEXED picture 1 (zero
       // shared bytes with anything at rest); 210 carries novel content
-      stage("b.parquet", Seq(
+      g.stageAssets("b.parquet", Seq(
         (201L, "png", MultimodalFixture.percMedia(1)),
         (210L, "gif", gifBytes(10))))
       q.processAllAvailable()
     } finally q.stop()
-    def snapshot() = (
-      spark.read.parquet(indexDir).select("asset_id", "ingest_batch")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet,
-      spark.read.parquet(quarDir)
-        .select("asset_id", "matched_id", "reason")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1), r.getString(2)))
-        .toSet)
-    val (idx, quar) = snapshot()
+    val (idx, quar) = g.assetSinks()
     assert(idx.map(_._1) == Set(0L, 1L, 210L), s"final index: $idx")
     assert(quar == Set(
       (100L, 0L, "within_batch"), (201L, 1L, "index_near_dup"),
       (999L, -1L, "undecodable")), s"quarantine: $quar")
-    val ham = spark.read.parquet(quarDir)
+    val ham = spark.read.parquet(g.quar)
       .filter(col("asset_id") === 201L).select("hamming")
       .as[Long].collect()(0)
     assert(ham == 0L, s"PNG re-encode of a lossless source must match " +
@@ -559,11 +511,10 @@ class StreamingMultimodalSpec extends SparkSpec {
     // replay batch 1: dynamic partition overwrite + own-partition
     // exclusion must leave both sinks unchanged
     val bBatch = idx.collectFirst { case (210L, p) => p.toLong }.get
-    val replayIn = spark.read.schema(MediaStream.storedSchema)
-      .parquet(feed.resolve("b.parquet").toString)
-    MediaStream.ingestBatch(replayIn, bBatch, indexDir, quarDir,
+    AssetStream.Image.ingestBatch(
+      g.staged("b.parquet", AssetStream.storedSchema), bBatch, g.index, g.quar,
       maxHamming = 7)
-    assert(snapshot() == ((idx, quar)), "replayed batch changed the sinks")
+    assert(g.assetSinks() == ((idx, quar)), "replayed batch changed the sinks")
   }
 
   test("extractFeatures: real pooled features match hand-computed values") {
@@ -607,58 +558,38 @@ class StreamingMultimodalSpec extends SparkSpec {
   test("CropStream.nearDupIngest: region gate — cropped reposts quarantined, replay idempotent") {
     import spark.implicits._
     import graft.pipelines.MultimodalFixture
-    import graft.streaming.CropStream
-    val feed = java.nio.file.Files.createTempDirectory("cdi_feed")
-    val indexDir = java.nio.file.Files.createTempDirectory("cdi_index").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("cdi_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cdi_ckpt").toString
-    def stage(name: String, rows: Seq[(Long, String, Array[Byte])]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("cdi_stage")
-      rows.toDF("asset_id", "media_type", "media")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, feed.resolve(name))
-    }
+    val g = new GateScaffold(spark, "cdi")
     // cloud-texture pictures 0/1 are unrelated (id-keyed coarse random
     // fields); 100 is the CENTER CROP of 0 — a within-batch crop
     // relation the whole-image dHash gate would miss entirely
     // 998 is a genuine 4x4 BMP — decodable, but every region window is
     // sub-grid (rw<9): quarantined as 'too_small', NOT 'undecodable'
-    stage("a.parquet", Seq(
+    g.stageAssets("a.parquet", Seq(
       (0L, "image", MultimodalFixture.cpercBaseMedia(0)),
       (1L, "image", MultimodalFixture.cpercBaseMedia(1)),
       (100L, "image", MultimodalFixture.cpercCenterMedia(0)),
       (998L, "image",
         graft.sources.MediaBinary.encodeBmp(4, 4, new Array[Byte](48))),
       (999L, "blob", Array.tabulate[Byte](256)(i => (i * 37 + 11).toByte))))
-    val q = CropStream.nearDupIngest(spark, feed.toString, indexDir,
-      quarDir, ckpt, maxHamming = 7)
+    val q = AssetStream.Crop.nearDupIngest(spark, g.feed.toString, g.index,
+      g.quar, g.ckpt, maxHamming = 7)
     try {
       q.processAllAvailable()
-      val idx1 = spark.read.parquet(indexDir)
+      val idx1 = spark.read.parquet(g.index)
         .select("asset_id").as[Long].collect().toSet
       assert(idx1 == Set(0L, 1L), s"batch-0 index: $idx1")
       // batch 1: 201 is the TL-CROP of INDEXED picture 1 — a cropped
       // repost arriving later, zero shared bytes, whole-image dHash
       // ~20 bits away; 210 carries novel content
-      stage("b.parquet", Seq(
+      g.stageAssets("b.parquet", Seq(
         (201L, "image", MultimodalFixture.cpercTlMedia(1)),
         (210L, "image", MultimodalFixture.cpercBaseMedia(2))))
       q.processAllAvailable()
     } finally q.stop()
-    def snapshot() = (
-      spark.read.parquet(indexDir).select("asset_id", "ingest_batch")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet,
-      spark.read.parquet(quarDir)
-        .select("asset_id", "matched_id", "reason")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1), r.getString(2)))
-        .toSet)
-    val (idx, quar) = snapshot()
+    val (idx, quar) = g.assetSinks()
     assert(idx.map(_._1) == Set(0L, 1L, 210L), s"final index: $idx")
     // R=7 region rows per indexed image (the region-fingerprint shape)
-    val regionRows = spark.read.parquet(indexDir)
+    val regionRows = spark.read.parquet(g.index)
       .filter(col("asset_id") === 0L).count()
     assert(regionRows == 7,
       s"image 0 should index one row per region window, got $regionRows")
@@ -668,73 +599,52 @@ class StreamingMultimodalSpec extends SparkSpec {
       (999L, -1L, "undecodable")), s"quarantine: $quar")
     // the cropped repost matches its indexed original EXACTLY: its
     // full window reproduces the original's TL region window
-    val ham = spark.read.parquet(quarDir)
+    val ham = spark.read.parquet(g.quar)
       .filter(col("asset_id") === 201L).select("hamming")
       .as[Long].collect()(0)
     assert(ham == 0L, s"TL crop of picture 1 should match at 0, got $ham")
     // replay batch 1: dynamic partition overwrite + own-partition
     // exclusion must leave both sinks unchanged
     val bBatch = idx.collectFirst { case (210L, p) => p.toLong }.get
-    val replayIn = spark.read.schema(CropStream.storedSchema)
-      .parquet(feed.resolve("b.parquet").toString)
-    CropStream.ingestBatch(replayIn, bBatch, indexDir, quarDir,
+    AssetStream.Crop.ingestBatch(
+      g.staged("b.parquet", AssetStream.storedSchema), bBatch, g.index, g.quar,
       maxHamming = 7)
-    assert(snapshot() == ((idx, quar)), "replayed batch changed the sinks")
+    assert(g.assetSinks() == ((idx, quar)), "replayed batch changed the sinks")
   }
 
   test("OrientStream.nearDupIngest: orientation gate — rotated/mirrored reposts quarantined at 0, replay idempotent") {
     import spark.implicits._
     import graft.pipelines.MultimodalFixture
-    import graft.streaming.OrientStream
-    val feed = java.nio.file.Files.createTempDirectory("odi_feed")
-    val indexDir = java.nio.file.Files.createTempDirectory("odi_index").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("odi_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("odi_ckpt").toString
-    def stage(name: String, rows: Seq[(Long, String, Array[Byte])]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("odi_stage")
-      rows.toDF("asset_id", "media_type", "media")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, feed.resolve(name))
-    }
+    val g = new GateScaffold(spark, "odi")
     // 100 is the MIRRORED copy of 0 — a within-batch orientation
     // relation; 998 a genuine 4x4 BMP (too_small); 999 undecodable
-    stage("a.parquet", Seq(
+    g.stageAssets("a.parquet", Seq(
       (0L, "image", MultimodalFixture.opercBaseMedia(0)),
       (1L, "image", MultimodalFixture.opercBaseMedia(1)),
       (100L, "image", MultimodalFixture.opercFlipMedia(0)),
       (998L, "image",
         graft.sources.MediaBinary.encodeBmp(4, 4, new Array[Byte](48))),
       (999L, "blob", Array.tabulate[Byte](256)(i => (i * 41 + 13).toByte))))
-    val q = OrientStream.nearDupIngest(spark, feed.toString, indexDir,
-      quarDir, ckpt, maxHamming = 7)
+    val q = AssetStream.Orient.nearDupIngest(spark, g.feed.toString, g.index,
+      g.quar, g.ckpt, maxHamming = 7)
     try {
       q.processAllAvailable()
-      val idx1 = spark.read.parquet(indexDir)
+      val idx1 = spark.read.parquet(g.index)
         .select("asset_id").as[Long].collect().toSet
       assert(idx1 == Set(0L, 1L), s"batch-0 index: $idx1")
       // batch 1: 201 is the ROT-90 of INDEXED picture 1 — a rotated
       // repost arriving later, zero shared bytes, invisible to the
       // whole-image dHash gate AND the crop gate; 210 carries novel
       // content
-      stage("b.parquet", Seq(
+      g.stageAssets("b.parquet", Seq(
         (201L, "image", MultimodalFixture.opercRotMedia(1)),
         (210L, "image", MultimodalFixture.opercBaseMedia(2))))
       q.processAllAvailable()
     } finally q.stop()
-    def snapshot() = (
-      spark.read.parquet(indexDir).select("asset_id", "ingest_batch")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet,
-      spark.read.parquet(quarDir)
-        .select("asset_id", "matched_id", "reason")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1), r.getString(2)))
-        .toSet)
-    val (idx, quar) = snapshot()
+    val (idx, quar) = g.assetSinks()
     assert(idx.map(_._1) == Set(0L, 1L, 210L), s"final index: $idx")
     // 8 orientation rows per indexed image (the family-index shape)
-    val orientRows = spark.read.parquet(indexDir)
+    val orientRows = spark.read.parquet(g.index)
       .filter(col("asset_id") === 0L).count()
     assert(orientRows == 8,
       s"image 0 should index one row per orientation, got $orientRows")
@@ -744,39 +654,26 @@ class StreamingMultimodalSpec extends SparkSpec {
       (999L, -1L, "undecodable")), s"quarantine: $quar")
     // the rotated repost matches its indexed original EXACTLY: group
     // closure — its orientation family is the original's hash set
-    val ham = spark.read.parquet(quarDir)
+    val ham = spark.read.parquet(g.quar)
       .filter(col("asset_id") === 201L).select("hamming")
       .as[Long].collect()(0)
     assert(ham == 0L, s"rot-90 of picture 1 should match at 0, got $ham")
     // replay batch 1: dynamic partition overwrite + own-partition
     // exclusion must leave both sinks unchanged
     val bBatch = idx.collectFirst { case (210L, p) => p.toLong }.get
-    val replayIn = spark.read.schema(OrientStream.storedSchema)
-      .parquet(feed.resolve("b.parquet").toString)
-    OrientStream.ingestBatch(replayIn, bBatch, indexDir, quarDir,
+    AssetStream.Orient.ingestBatch(
+      g.staged("b.parquet", AssetStream.storedSchema), bBatch, g.index, g.quar,
       maxHamming = 7)
-    assert(snapshot() == ((idx, quar)), "replayed batch changed the sinks")
+    assert(g.assetSinks() == ((idx, quar)), "replayed batch changed the sinks")
   }
 
   test("RotCropStream.nearDupIngest: composed-edit gate — rotated-crop reposts quarantined at 0, replay idempotent") {
     import spark.implicits._
     import graft.pipelines.MultimodalFixture
-    import graft.streaming.RotCropStream
-    val feed = java.nio.file.Files.createTempDirectory("rci_feed")
-    val indexDir = java.nio.file.Files.createTempDirectory("rci_index").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("rci_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("rci_ckpt").toString
-    def stage(name: String, rows: Seq[(Long, String, Array[Byte])]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("rci_stage")
-      rows.toDF("asset_id", "media_type", "media")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, feed.resolve(name))
-    }
+    val g = new GateScaffold(spark, "rci")
     // 100 is the FLIP-CENTER-CROP of 0 — a within-batch composed
     // relation; 998 a genuine 4x4 BMP (too_small); 999 undecodable
-    stage("a.parquet", Seq(
+    g.stageAssets("a.parquet", Seq(
       (0L, "image", MultimodalFixture.rcpercBaseMedia(0)),
       (1L, "image", MultimodalFixture.rcpercBaseMedia(1)),
       (100L, "image", MultimodalFixture.rcpercFlipCenterMedia(0)),
@@ -784,35 +681,27 @@ class StreamingMultimodalSpec extends SparkSpec {
         graft.sources.MediaBinary.encodeBmp(4, 4, new Array[Byte](48))),
       (999L, "blob", Array.tabulate[Byte](256)(i => (i * 37 + 11).toByte))))
     // production radius 3 (the m26 config): compositions are exact 0s
-    val q = RotCropStream.nearDupIngest(spark, feed.toString, indexDir,
-      quarDir, ckpt, maxHamming = 3)
+    val q = AssetStream.RotCrop.nearDupIngest(spark, g.feed.toString, g.index,
+      g.quar, g.ckpt, maxHamming = 3)
     try {
       q.processAllAvailable()
-      val idx1 = spark.read.parquet(indexDir)
+      val idx1 = spark.read.parquet(g.index)
         .select("asset_id").as[Long].collect().toSet
       assert(idx1 == Set(0L, 1L), s"batch-0 index: $idx1")
       // batch 1: 201 is the ROT-90 TL-CROP of INDEXED picture 1 — a
       // composed repost arriving later, invisible to the byte,
       // whole-image-dHash, crop, AND orientation gates individually;
       // 210 carries novel content
-      stage("b.parquet", Seq(
+      g.stageAssets("b.parquet", Seq(
         (201L, "image", MultimodalFixture.rcpercRotTlMedia(1)),
         (210L, "image", MultimodalFixture.rcpercBaseMedia(2))))
       q.processAllAvailable()
     } finally q.stop()
-    def snapshot() = (
-      spark.read.parquet(indexDir).select("asset_id", "ingest_batch")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet,
-      spark.read.parquet(quarDir)
-        .select("asset_id", "matched_id", "reason")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1), r.getString(2)))
-        .toSet)
-    val (idx, quar) = snapshot()
+    val (idx, quar) = g.assetSinks()
     assert(idx.map(_._1) == Set(0L, 1L, 210L), s"final index: $idx")
     // 14 union-family rows per indexed image (7 upright regions + 7
     // non-identity orientations — the m24 family-index shape)
-    val famRows = spark.read.parquet(indexDir)
+    val famRows = spark.read.parquet(g.index)
       .filter(col("asset_id") === 0L).count()
     assert(famRows == 14,
       s"image 0 should index one row per family member, got $famRows")
@@ -823,7 +712,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     // the composed repost matches its indexed original EXACTLY:
     // window-family group closure — the index holds the base's upright
     // region rows, the arrival hashes its inverse orientation
-    val ham = spark.read.parquet(quarDir)
+    val ham = spark.read.parquet(g.quar)
       .filter(col("asset_id") === 201L).select("hamming")
       .as[Long].collect()(0)
     assert(ham == 0L,
@@ -831,43 +720,30 @@ class StreamingMultimodalSpec extends SparkSpec {
     // replay batch 1: dynamic partition overwrite + own-partition
     // exclusion must leave both sinks unchanged
     val bBatch = idx.collectFirst { case (210L, p) => p.toLong }.get
-    val replayIn = spark.read.schema(RotCropStream.storedSchema)
-      .parquet(feed.resolve("b.parquet").toString)
-    RotCropStream.ingestBatch(replayIn, bBatch, indexDir, quarDir,
+    AssetStream.RotCrop.ingestBatch(
+      g.staged("b.parquet", AssetStream.storedSchema), bBatch, g.index, g.quar,
       maxHamming = 3)
-    assert(snapshot() == ((idx, quar)), "replayed batch changed the sinks")
+    assert(g.assetSinks() == ((idx, quar)), "replayed batch changed the sinks")
   }
 
   test("VideoStream.nearDupIngest: temporal gate — cross-codec/cross-resolution dups quarantined, replay idempotent") {
     import spark.implicits._
     import graft.pipelines.MultimodalFixture
-    import graft.streaming.VideoStream
-    val feed = java.nio.file.Files.createTempDirectory("vdi_feed")
-    val indexDir = java.nio.file.Files.createTempDirectory("vdi_index").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("vdi_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("vdi_ckpt").toString
-    def stage(name: String, rows: Seq[(Long, String, Array[Byte])]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("vdi_stage")
-      rows.toDF("asset_id", "media_type", "media")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, feed.resolve(name))
-    }
+    val g = new GateScaffold(spark, "vdi")
     // wave clips 0/1/2 are mutually far beyond the radius (unrelated
     // worst slot >= 25 — VideoAudioPerceptualSpec pins it); 100 is the
     // SAME clip as 0 at HALF RESOLUTION — a within-batch
     // cross-representation duplicate sharing zero bytes
-    stage("a.parquet", Seq(
+    g.stageAssets("a.parquet", Seq(
       (0L, "video", MultimodalFixture.vpercDibMedia(0)),
       (1L, "video", MultimodalFixture.vpercDibMedia(1)),
       (100L, "video", MultimodalFixture.vpercDownMedia(0)),
       (999L, "blob", Array.tabulate[Byte](256)(i => (i * 37 + 11).toByte))))
-    val q = VideoStream.nearDupIngest(spark, feed.toString, indexDir,
-      quarDir, ckpt, maxHamming = 15)
+    val q = AssetStream.Video.nearDupIngest(spark, g.feed.toString, g.index,
+      g.quar, g.ckpt, maxHamming = 15)
     try {
       q.processAllAvailable()
-      val idx1 = spark.read.parquet(indexDir)
+      val idx1 = spark.read.parquet(g.index)
         .select("asset_id").as[Long].collect().toSet
       assert(idx1 == Set(0L, 1L), s"batch-0 index: $idx1")
       // batch 1: 201 is the MJPEG RE-ENCODE of INDEXED clip 1 —
@@ -876,26 +752,18 @@ class StreamingMultimodalSpec extends SparkSpec {
       // (the round-14 fps axis: different frame count, caught only
       // because duration-fraction slots align on content time); 210
       // carries novel content
-      stage("b.parquet", Seq(
+      g.stageAssets("b.parquet", Seq(
         (201L, "video", MultimodalFixture.mjpegMedia(1)),
         (202L, "video", MultimodalFixture.vperc2xMedia(0)),
         (210L, "video", MultimodalFixture.vpercDibMedia(2))))
       q.processAllAvailable()
     } finally q.stop()
-    def snapshot() = (
-      spark.read.parquet(indexDir).select("asset_id", "ingest_batch")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet,
-      spark.read.parquet(quarDir)
-        .select("asset_id", "matched_id", "reason")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1), r.getString(2)))
-        .toSet)
-    val (idx, quar) = snapshot()
+    val (idx, quar) = g.assetSinks()
     assert(idx.map(_._1) == Set(0L, 1L, 210L), s"final index: $idx")
     // k slot rows per indexed clip (the frame-signature index shape) —
     // ALWAYS k=4 since the round-14 duration-fraction geometry (frames
     // repeat across slots when the clip has fewer than k frames)
-    val slotRows = spark.read.parquet(indexDir)
+    val slotRows = spark.read.parquet(g.index)
       .filter(col("asset_id") === 0L).count()
     assert(slotRows == 4,
       s"clip 0 should index one row per sampled slot, got $slotRows")
@@ -903,14 +771,14 @@ class StreamingMultimodalSpec extends SparkSpec {
       (100L, 0L, "within_batch"), (201L, 1L, "index_near_dup"),
       (202L, 0L, "index_near_dup"),
       (999L, -1L, "undecodable")), s"quarantine: $quar")
-    val ham = spark.read.parquet(quarDir)
+    val ham = spark.read.parquet(g.quar)
       .filter(col("asset_id") === 201L).select("hamming")
       .as[Long].collect()(0)
     assert(ham <= 3L, s"MJPEG re-encode of clip 1 should match within " +
       s"the measured cross-codec envelope, got $ham")
     // the fps twin matches its indexed original EXACTLY: every
     // duration-fraction slot lands on the same content frame
-    val hamFps = spark.read.parquet(quarDir)
+    val hamFps = spark.read.parquet(g.quar)
       .filter(col("asset_id") === 202L).select("hamming")
       .as[Long].collect()(0)
     assert(hamFps == 0L,
@@ -918,65 +786,44 @@ class StreamingMultimodalSpec extends SparkSpec {
     // replay batch 1: dynamic partition overwrite + own-partition
     // exclusion must leave both sinks unchanged
     val bBatch = idx.collectFirst { case (210L, p) => p.toLong }.get
-    val replayIn = spark.read.schema(VideoStream.storedSchema)
-      .parquet(feed.resolve("b.parquet").toString)
-    VideoStream.ingestBatch(replayIn, bBatch, indexDir, quarDir,
+    AssetStream.Video.ingestBatch(
+      g.staged("b.parquet", AssetStream.storedSchema), bBatch, g.index, g.quar,
       maxHamming = 15)
-    assert(snapshot() == ((idx, quar)), "replayed batch changed the sinks")
+    assert(g.assetSinks() == ((idx, quar)), "replayed batch changed the sinks")
   }
 
   test("AudioStream.nearDupIngest: amplitude-sign gate — gain/requantized dups quarantined, replay idempotent") {
     import spark.implicits._
     import graft.pipelines.MultimodalFixture
-    import graft.streaming.AudioStream
-    val feed = java.nio.file.Files.createTempDirectory("adi_feed")
-    val indexDir = java.nio.file.Files.createTempDirectory("adi_index").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("adi_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("adi_ckpt").toString
-    def stage(name: String, rows: Seq[(Long, String, Array[Byte])]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("adi_stage")
-      rows.toDF("asset_id", "media_type", "media")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, feed.resolve(name))
-    }
+    val g = new GateScaffold(spark, "adi")
     // audio assets 1 and 4 are unrelated recordings (>= 22 bits apart —
     // VideoAudioPerceptualSpec pins it); 100 is asset 1 GAIN-HALVED — a
     // within-batch duplicate sharing zero bytes with its base
-    stage("a.parquet", Seq(
+    g.stageAssets("a.parquet", Seq(
       (1L, "audio", MultimodalFixture.media(1)),
       (4L, "audio", MultimodalFixture.media(4)),
       (100L, "audio", MultimodalFixture.apercGainMedia(1)),
       (999L, "blob", Array.tabulate[Byte](256)(i => (i * 37 + 11).toByte))))
-    val q = AudioStream.nearDupIngest(spark, feed.toString, indexDir,
-      quarDir, ckpt, maxHamming = 7)
+    val q = AssetStream.Audio.nearDupIngest(spark, g.feed.toString, g.index,
+      g.quar, g.ckpt, maxHamming = 7)
     try {
       q.processAllAvailable()
-      val idx1 = spark.read.parquet(indexDir)
+      val idx1 = spark.read.parquet(g.index)
         .select("asset_id").as[Long].collect().toSet
       assert(idx1 == Set(1L, 4L), s"batch-0 index: $idx1")
       // batch 1: 201 is the REQUANTIZED copy of INDEXED recording 4 —
       // zero shared bytes with anything at rest; 210 is novel
-      stage("b.parquet", Seq(
+      g.stageAssets("b.parquet", Seq(
         (201L, "audio", MultimodalFixture.apercQuantMedia(4)),
         (210L, "audio", MultimodalFixture.media(7))))
       q.processAllAvailable()
     } finally q.stop()
-    def snapshot() = (
-      spark.read.parquet(indexDir).select("asset_id", "ingest_batch")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet,
-      spark.read.parquet(quarDir)
-        .select("asset_id", "matched_id", "reason")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1), r.getString(2)))
-        .toSet)
-    val (idx, quar) = snapshot()
+    val (idx, quar) = g.assetSinks()
     assert(idx.map(_._1) == Set(1L, 4L, 210L), s"final index: $idx")
     assert(quar == Set(
       (100L, 1L, "within_batch"), (201L, 4L, "index_near_dup"),
       (999L, -1L, "undecodable")), s"quarantine: $quar")
-    val ham = spark.read.parquet(quarDir)
+    val ham = spark.read.parquet(g.quar)
       .filter(col("asset_id") === 201L).select("hamming")
       .as[Long].collect()(0)
     assert(ham == 0L, s"requantized copy should match at distance 0 " +
@@ -984,10 +831,9 @@ class StreamingMultimodalSpec extends SparkSpec {
     // replay batch 1: dynamic partition overwrite + own-partition
     // exclusion must leave both sinks unchanged
     val bBatch = idx.collectFirst { case (210L, p) => p.toLong }.get
-    val replayIn = spark.read.schema(AudioStream.storedSchema)
-      .parquet(feed.resolve("b.parquet").toString)
-    AudioStream.ingestBatch(replayIn, bBatch, indexDir, quarDir,
+    AssetStream.Audio.ingestBatch(
+      g.staged("b.parquet", AssetStream.storedSchema), bBatch, g.index, g.quar,
       maxHamming = 7)
-    assert(snapshot() == ((idx, quar)), "replayed batch changed the sinks")
+    assert(g.assetSinks() == ((idx, quar)), "replayed batch changed the sinks")
   }
 }
