@@ -84,19 +84,39 @@ object Dedup {
     df.join(ok, keys, "left_semi")
   }
 
-  /** The banded-candidate core: banding, bucket cap, candidate pairs,
-    * the score filter and the pair dedup, in one place for every
-    * near-dup operator.
+  /** The banded-candidate core: banding, then [[bucketPairs]] — bucket
+    * cap, candidate pairs, the score filter and the pair dedup — in one
+    * place for every near-dup operator.
     *
     * Each side is exploded into one row per band — `band` is an array
     * of bucket values evaluated per row, posexploded into (band, block)
-    * next to the `carry` columns (`carry` starts with `id`) — and
-    * grouped ONCE on `keys` into bucket lists: `capped_collect` of the
-    * carry struct, NULL for a bucket of more than `cap` rows (the cap
-    * counts rows, so several rows of one id — region windows, slots —
-    * count separately). A bucket's memory is bounded at cap + 1 entries
-    * on the map side and in the merge, however large the bucket; capped
-    * buckets are dropped. Candidates are rows sharing every key column:
+    * next to the `carry` columns (`carry` starts with `id`) — and the
+    * banded rows go to [[bucketPairs]] with `keys` (by default
+    * (band, block)) as the bucket.
+    */
+  private[graft] def bandJoin(index: DataFrame, batch: Option[DataFrame],
+      carry: Seq[String], band: Column, cap: Int,
+      keys: Seq[String] = Seq("band", "block"), capBatch: Boolean = false,
+      score: Seq[Column] = Nil, keep: Option[Column] = None,
+      dedup: Boolean = true): DataFrame = {
+    def banded(df: DataFrame): DataFrame =
+      df.select(carry.map(col) :+ posexplode(band).as(Seq("band", "block")): _*)
+    bucketPairs(banded(index), batch.map(banded), carry, keys, cap,
+      capBatch, score, keep, dedup)
+  }
+
+  /** Candidate pairs of rows that already carry their bucket `keys`
+    * columns — banded signatures, or the IVF family's (table, cell)
+    * assignment rows.
+    *
+    * Each side is grouped ONCE on `keys` into bucket lists:
+    * `capped_collect` of the `carry` struct (`carry` starts with `id`),
+    * NULL for a bucket of more than `cap` rows (the cap counts rows, so
+    * several rows of one id — region windows, slots — count
+    * separately). A bucket's memory is bounded at cap + 1 entries on
+    * the map side and in the merge, however large the bucket; capped
+    * buckets are dropped (`cap = Int.MaxValue` caps none). Candidates
+    * are rows sharing every key column:
     *   - self form (`batch = None`): no join. Each list is sorted by id
     *     and expanded in place into its (i < j) pairs — at most
     *     cap·(cap−1)/2 per bucket — keeping l.id < r.id, so a pair is
@@ -111,22 +131,19 @@ object Dedup {
     * is (id1, id2, score...) with id1 = l.id, and `score` reads the
     * sides as `l.<col>` / `r.<col>` and the bucket by key name. `keep`
     * filters AHEAD of the dedup exchange: a pair colliding in several
-    * bands yields duplicate rows with identical deterministic scores,
+    * buckets yields duplicate rows with identical deterministic scores,
     * so filter-then-distinct equals distinct-then-filter while the
     * exchange moves only survivors (39.9k → 241 rows on x8c at sf0.1).
-    * `dedup = false` leaves the band-duplicated rows to the caller —
-    * MinHash defers its distinct past the signature-estimate cut.
+    * `dedup = false` leaves the duplicated rows to the caller — MinHash
+    * defers its distinct past the signature-estimate cut.
     */
-  private[graft] def bandJoin(index: DataFrame, batch: Option[DataFrame],
-      carry: Seq[String], band: Column, cap: Int,
-      keys: Seq[String] = Seq("band", "block"), capBatch: Boolean = false,
-      score: Seq[Column] = Nil, keep: Option[Column] = None,
-      dedup: Boolean = true): DataFrame = {
+  private[graft] def bucketPairs(index: DataFrame, batch: Option[DataFrame],
+      carry: Seq[String], keys: Seq[String], cap: Int,
+      capBatch: Boolean = false, score: Seq[Column] = Nil,
+      keep: Option[Column] = None, dedup: Boolean = true): DataFrame = {
     val entry = struct(carry.map(col): _*)
-    def banded(df: DataFrame): DataFrame =
-      df.select(carry.map(col) :+ posexplode(band).as(Seq("band", "block")): _*)
     def lists(df: DataFrame, name: String, minSize: Int): DataFrame =
-      banded(df).groupBy(keys.map(col): _*)
+      df.groupBy(keys.map(col): _*)
         .agg(call_function("capped_collect", entry, lit(cap)).as(name))
         .filter(size(col(name)) >= minSize)
     def expand(df: DataFrame, cols: Column*): DataFrame =
@@ -145,7 +162,7 @@ object Dedup {
         expand(expand(both, explode(col("ls")).as("l"), col("rs")),
           col("l"), explode(col("rs")).as("r"))
       case Some(b) =>
-        val both = lists(index, "ls", 1).join(expand(banded(b), entry.as("r")), keys)
+        val both = lists(index, "ls", 1).join(expand(b, entry.as("r")), keys)
         expand(both, explode(col("ls")).as("l"), col("r"))
     }
     val pairs = sides

@@ -33,7 +33,7 @@ object Joins {
     // populated struct below is built in payloadCols order, and unionByName
     // needs both sides' struct types to agree field-for-field
     val payloadType = StructType(payloadCols.map(n => right.schema(n)))
-    val leftCols = left.columns
+    val leftCols = left.columns.toSeq
     val l = left.select(col(keyCol).as("__k"), col(tsCol).as("__ts"),
       lit(1).as("__side"),
       struct(leftCols.map(col): _*).as("__l"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
@@ -615,42 +615,44 @@ object Multimodal {
     */
   def regionDHash(assets: Dataset[Asset]): Dataset[RegionHash] = {
     import assets.sparkSession.implicits._
-    assets.mapPartitions { batch =>
-      batch.flatMap { a =>
-        decodeImageAny(a.media).toSeq.flatMap { case (w, h, px) =>
-          regionWindows(w, h).collect {
-            case (r, rx, ry, rw, rh) if rw >= 9 && rh >= 8 =>
-              RegionHash(a.asset_id, r, dHash64Region(w, px, rx, ry, rw, rh))
-          }
-        }
-      }
-    }
+    imageFamily(assets)(regionRows)
   }
 
-  /** [[regionDHash]] with a DECODE-STATUS sentinel for stream gates
-    * (ADVICE r14): an image that decodes but whose EVERY family window
-    * is sub-grid (rw<9 or rh<8 — a tiny picture) emits one
-    * (asset_id, region = -1, dhash = 0) row instead of vanishing, so a
-    * caller can distinguish "too small to fingerprint" from a genuine
-    * decode failure (which still emits nothing) without a second
-    * decode pass. The declared batch operator keeps the plain
-    * drop-silently contract — a sentinel row in a dedup corpus would
-    * be a degenerate key.
-    */
+  /** [[regionDHash]] with the [[imageFamily]] decode-status sentinel
+    * (region = -1, dhash = 0) for stream gates. */
   def regionDHashStatus(assets: Dataset[Asset]): Dataset[RegionHash] = {
     import assets.sparkSession.implicits._
-    assets.mapPartitions { batch =>
-      batch.flatMap { a =>
-        decodeImageAny(a.media).toSeq.flatMap { case (w, h, px) =>
-          val rows = regionWindows(w, h).collect {
-            case (r, rx, ry, rw, rh) if rw >= 9 && rh >= 8 =>
-              RegionHash(a.asset_id, r, dHash64Region(w, px, rx, ry, rw, rh))
-          }
-          if (rows.isEmpty) Seq(RegionHash(a.asset_id, -1, 0L)) else rows
-        }
-      }
-    }
+    imageFamily(assets, Some(RegionHash(_, -1, 0L)))(regionRows)
   }
+
+  /** One image-family hasher over any decodable payload: the `rows` of
+    * each image that decodes; undecodable payloads emit nothing. With
+    * a `sentinel` — the stream gates' DECODE-STATUS form — an image
+    * that decodes but yields no row (every window or orientation
+    * sub-grid: a tiny picture) emits `sentinel(asset_id)` instead of
+    * vanishing, so a caller can tell "too small to fingerprint" from a
+    * decode failure without a second decode pass. The declared batch
+    * operators keep the plain drop-silently contract: a sentinel row
+    * in a dedup corpus would be a degenerate key.
+    */
+  private def imageFamily[T: Encoder](assets: Dataset[Asset],
+      sentinel: Option[Long => T] = None)(
+      rows: (Long, Int, Int, Array[Byte]) => Seq[T]): Dataset[T] =
+    assets.mapPartitions(_.flatMap { a =>
+      decodeImageAny(a.media).toSeq.flatMap { case (w, h, px) =>
+        val out = rows(a.asset_id, w, h, px)
+        if (out.isEmpty) sentinel.map(_(a.asset_id)).toSeq else out
+      }
+    })
+
+  /** The [[regionWindows]] hashes of one decoded image, sub-grid
+    * windows (rw < 9 or rh < 8) dropped. */
+  private def regionRows(id: Long, w: Int, h: Int,
+      px: Array[Byte]): Seq[RegionHash] =
+    regionWindows(w, h).collect {
+      case (r, rx, ry, rw, rh) if rw >= 9 && rh >= 8 =>
+        RegionHash(id, r, dHash64Region(w, px, rx, ry, rw, rh))
+    }
 
   // --- rotation/flip-robust orientation hashing (round 15) --------------
 
@@ -734,40 +736,26 @@ object Multimodal {
     */
   def orientDHash(assets: Dataset[Asset]): Dataset[OrientHash] = {
     import assets.sparkSession.implicits._
-    assets.mapPartitions { batch =>
-      batch.flatMap { a =>
-        decodeImageAny(a.media).toSeq.flatMap { case (w, h, px) =>
-          (0 until 8).collect {
-            case o if (if ((o & 1) == 0) w >= 9 && h >= 8
-                       else h >= 9 && w >= 8) =>
-              OrientHash(a.asset_id, o, dHash64Oriented(w, h, px, o))
-          }
-        }
-      }
-    }
+    imageFamily(assets)(orientRows)
   }
 
-  /** [[orientDHash]] with the [[regionDHashStatus]] decode-status
-    * sentinel for stream gates: an image that decodes but qualifies
-    * for NO orientation (sub-grid in both aspect arrangements) emits
-    * one (asset_id, orient = -1, dhash = 0) row; genuine decode
-    * failures emit nothing.
-    */
+  /** [[orientDHash]] with the [[imageFamily]] decode-status sentinel
+    * (orient = -1, dhash = 0) for stream gates. */
   def orientDHashStatus(assets: Dataset[Asset]): Dataset[OrientHash] = {
     import assets.sparkSession.implicits._
-    assets.mapPartitions { batch =>
-      batch.flatMap { a =>
-        decodeImageAny(a.media).toSeq.flatMap { case (w, h, px) =>
-          val rows = (0 until 8).collect {
-            case o if (if ((o & 1) == 0) w >= 9 && h >= 8
-                       else h >= 9 && w >= 8) =>
-              OrientHash(a.asset_id, o, dHash64Oriented(w, h, px, o))
-          }
-          if (rows.isEmpty) Seq(OrientHash(a.asset_id, -1, 0L)) else rows
-        }
-      }
-    }
+    imageFamily(assets, Some(OrientHash(_, -1, 0L)))(orientRows)
   }
+
+  /** Orientations `from until 8` whose ORIENTED dims pass the sub-grid
+    * gate (w' ≥ 9, h' ≥ 8; odd orientations swap w and h). */
+  private def orientations(w: Int, h: Int, from: Int): Seq[Int] =
+    (from until 8).filter(o =>
+      if ((o & 1) == 0) w >= 9 && h >= 8 else h >= 9 && w >= 8)
+
+  private def orientRows(id: Long, w: Int, h: Int,
+      px: Array[Byte]): Seq[OrientHash] =
+    orientations(w, h, 0).map(o =>
+      OrientHash(id, o, dHash64Oriented(w, h, px, o)))
 
   // --- composed-edit (crop ∘ rotation) hashing (round 16) ----------------
 
@@ -805,50 +793,21 @@ object Multimodal {
     */
   def rotCropDHash(assets: Dataset[Asset]): Dataset[RotCropHash] = {
     import assets.sparkSession.implicits._
-    assets.mapPartitions { batch =>
-      batch.flatMap { a =>
-        decodeImageAny(a.media).toSeq.flatMap { case (w, h, px) =>
-          val regions = regionWindows(w, h).collect {
-            case (r, rx, ry, rw, rh) if rw >= 9 && rh >= 8 =>
-              RotCropHash(a.asset_id, r, dHash64Region(w, px, rx, ry, rw, rh))
-          }
-          val orients = (1 until 8).collect {
-            case o if (if ((o & 1) == 0) w >= 9 && h >= 8
-                       else h >= 9 && w >= 8) =>
-              RotCropHash(a.asset_id, 8 + o, dHash64Oriented(w, h, px, o))
-          }
-          regions ++ orients
-        }
-      }
-    }
+    imageFamily(assets)(rotCropRows)
   }
 
-  /** [[rotCropDHash]] with the [[regionDHashStatus]] decode-status
-    * sentinel for stream gates: an image that decodes but qualifies
-    * for NO family row (every region window AND every oriented
-    * full-frame arrangement sub-grid) emits one (asset_id, fam = -1,
-    * dhash = 0) row; genuine decode failures emit nothing.
-    */
+  /** [[rotCropDHash]] with the [[imageFamily]] decode-status sentinel
+    * (fam = -1, dhash = 0) for stream gates. */
   def rotCropDHashStatus(assets: Dataset[Asset]): Dataset[RotCropHash] = {
     import assets.sparkSession.implicits._
-    assets.mapPartitions { batch =>
-      batch.flatMap { a =>
-        decodeImageAny(a.media).toSeq.flatMap { case (w, h, px) =>
-          val regions = regionWindows(w, h).collect {
-            case (r, rx, ry, rw, rh) if rw >= 9 && rh >= 8 =>
-              RotCropHash(a.asset_id, r, dHash64Region(w, px, rx, ry, rw, rh))
-          }
-          val orients = (1 until 8).collect {
-            case o if (if ((o & 1) == 0) w >= 9 && h >= 8
-                       else h >= 9 && w >= 8) =>
-              RotCropHash(a.asset_id, 8 + o, dHash64Oriented(w, h, px, o))
-          }
-          val rows = regions ++ orients
-          if (rows.isEmpty) Seq(RotCropHash(a.asset_id, -1, 0L)) else rows
-        }
-      }
-    }
+    imageFamily(assets, Some(RotCropHash(_, -1, 0L)))(rotCropRows)
   }
+
+  private def rotCropRows(id: Long, w: Int, h: Int,
+      px: Array[Byte]): Seq[RotCropHash] =
+    regionRows(id, w, h, px).map(r => RotCropHash(id, r.region, r.dhash)) ++
+      orientations(w, h, 1).map(o =>
+        RotCropHash(id, 8 + o, dHash64Oriented(w, h, px, o)))
 
   // --- perceptual video/audio hashing (round 13) ------------------------
 

@@ -72,7 +72,7 @@ object Similarity {
     // once per table and multiplied the scan partition count by
     // `tables` (optimization round 17, guide §2.4/§1.2).
     def banded(df: DataFrame, vec: String): DataFrame =
-      df.select(df.columns.map(col) :+
+      df.select(df.columns.toSeq.map(col) :+
         posexplode(array((0 until tables).map(t =>
           Vectors.hyperplaneBucket(col(vec), bits, t)): _*))
           .as(Seq("table", "bucket")): _*)
@@ -285,7 +285,7 @@ object Similarity {
     val joined = df.crossJoin(centroids)
       .withColumn("__csim", Vectors.cosineFast(col(vec), col("centroid")))
     if (keep == 1) {
-      val carry = df.columns.filterNot(_ == id)
+      val carry = df.columns.toSeq.filterNot(_ == id)
       val payload = struct((carry.map(col) :+ col("cell")): _*)
       val ord = struct(col("__csim"), (col("cell") * lit(-1L)).as("__nc"))
       joined.groupBy(col(id)).agg(max_by(payload, ord).as("__p"))
@@ -368,7 +368,7 @@ object Similarity {
     // make centroids partitioning-dependent), ONE cast to double, then a
     // double/double divide — decimal division itself is avoided because
     // its result precision/rounding rules are engine-specific.
-    val dim = c.select(size(col("vec"))).head.getInt(0)
+    val dim = c.select(size(col("vec"))).head().getInt(0)
     val meanCols = (1 to dim).map(i =>
       (sum(element_at(col("vec"), i).cast("double").cast("decimal(30,12)"))
         .cast("double") / count(lit(1)).cast("double")).cast("float").as(s"_m$i"))
@@ -678,11 +678,11 @@ object Similarity {
     * rule. The output contract is unchanged: (id, vec, table, cell),
     * leaf cell labels = centroid ids. Approximate like every coarse
     * quantizer: a vector whose true nearest leaf hangs off an unprobed
-    * super lands in its best probed-super leaf instead — recall is
-    * measured against flat and brute force in ProfileIvfRecall /
-    * TextDedupSpec (v7 config T=4/nCells=32/nProbe=2 on the fixture
-    * corpus: 0.955 two-level vs 0.970 flat at superProbe=3, the
-    * measured default), and the multi-table union compounds it.
+    * super lands in its best probed-super leaf instead (v7 config
+    * T=4/nCells=32/nProbe=2 on the fixture corpus: recall 0.955
+    * two-level vs 0.970 flat at superProbe=3, the measured default;
+    * TextDedupSpec asserts it against brute force), and the
+    * multi-table union compounds it.
     *
     * All arithmetic is the engine-replicable double cosine with
     * deterministic id tiebreaks, so SQL oracles rebuild the identical
@@ -839,8 +839,8 @@ object Similarity {
   }
 
   /** The FLAT corpus×centroid assignment the hierarchical form replaces
-    * — kept as the measurement baseline (ScaleStress/ProfileIvfRecall
-    * contrast it for cost and recall). O(n·nCells) cosines: fine at
+    * — kept as the measurement baseline (ScaleStress's `assign_flat`
+    * probe contrasts it for cost). O(n·nCells) cosines: fine at
     * fixed small nCells, quadratic once cells scale with the corpus.
     */
   def multiQuantizerCellsFlat(df: DataFrame, idCol: String, vecCol: String,
@@ -861,7 +861,7 @@ object Similarity {
     * curation), blocked by the same multi-table IVF assignment as
     * [[cosineNearDupsIvf]] so no corpus product ever materializes.
     *
-    * Candidates are the per-(table, cell) self-join — O(n²·nProbe²·
+    * Candidates are the per-(table, cell) pairs — O(n²·nProbe²·
     * tables/nCells), never O(n²) — deduped on (qid, nid) as THIN id
     * pairs, ranked per qid on the codegen'd double cosine by a window
     * that only ever sees that row's bounded candidate list, with the
@@ -930,37 +930,15 @@ object Similarity {
   }
 
   /** [[knnGraph]] stage 1 — candidate generation: the per-(table, cell)
-    * self-join scored in place on the codegen'd double cosine, deduped
-    * across tables as a thin (qid, nid, simd) aggregate. Exposed so the
-    * bench's v15_split attribution probe (VERDICT r15 #4) times the
-    * IDENTICAL plan pieces the declared query fuses.
+    * pairs of the [[Dedup.bucketPairs]] self form, scored on the
+    * codegen'd double cosine once per unordered pair and deduped across
+    * tables as thin (id1, id2, simd) rows, then fanned out to both
+    * directed (qid, nid, simd) rows (the graph is symmetric). Exposed so
+    * the bench's v15_split attribution probe times the IDENTICAL plan
+    * pieces the declared query fuses.
     */
-  private[graft] def knnCandidates(assigned: DataFrame): DataFrame = {
-    val l = assigned.as("l")
-    val r = assigned.as("r")
-    // Score INSIDE the cell join, where both vectors are already
-    // co-located — the join shuffles only the n·nProbe·tables assignment
-    // rows, never a per-pair vector payload — then dedup the multi-table
-    // duplicates as a thin (id1, id2, simd) aggregate (min of identical
-    // values — deterministic). The graph is symmetric (cosine(a,b) ==
-    // cosine(b,a) — the identical codegen'd double), so candidates are
-    // generated ONCE per unordered pair (l.id < r.id) and fanned out to
-    // both directed rows only AFTER the dedup aggregate: half the
-    // cosine evaluations and half the rows through the widest exchange
-    // of the pipeline vs the old directed (l.id =!= r.id) join
-    // (optimization round 16, guide §2.3/§1.2 — v15_split pinned this
-    // candidates stage at ~2.4 s of the 3.2 s query). The ranking
-    // decision runs on the codegen'd double cosine (the same
-    // double-decides/exact-reports split every assignment path uses —
-    // in-row folds are order-deterministic on both engines); only the
-    // ≤ topK survivors per row re-attach vectors for the exact-decimal
-    // re-score.
-    val undirected = l.join(r, col("l.table") === col("r.table") &&
-        col("l.cell") === col("r.cell") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"),
-        Vectors.cosineFast(col("l.vec"), col("r.vec")).as("simd"))
-      .groupBy("id1", "id2").agg(min(col("simd")).as("simd"))
-    undirected
+  private[graft] def knnCandidates(assigned: DataFrame): DataFrame =
+    ivfPairs(assigned)
       .select(explode(array(
         struct(col("id1").as("qid"), col("id2").as("nid"),
           col("simd").as("simd")),
@@ -968,7 +946,29 @@ object Similarity {
           col("simd").as("simd")))).as("p"))
       .select(col("p.qid").as("qid"), col("p.nid").as("nid"),
         col("p.simd").as("simd"))
-  }
+
+  /** Distinct (id1, id2, simd) pairs, id1 < id2, of (id, vec, table,
+    * cell) assignment rows sharing a (table, cell): the
+    * [[Dedup.bucketPairs]] self form with no cell capped. `simd` is the
+    * codegen'd double cosine; `threshold` keeps simd >= threshold ahead
+    * of the dedup exchange, so only surviving id pairs move.
+    */
+  private def ivfPairs(assigned: DataFrame,
+      threshold: Option[Double] = None): DataFrame =
+    Dedup.bucketPairs(assigned, None, Seq("id", "vec"), Seq("table", "cell"),
+      Int.MaxValue,
+      score = Seq(Vectors.cosineFast(col("l.vec"), col("r.vec")).as("simd")),
+      keep = threshold.map(col("simd") >= _))
+
+  /** Exact-decimal `sim` of thin (id1, id2) pairs, re-attaching each
+    * side's vector from (id, vec) frames by two same-key joins. */
+  private def rescorePairs(pairs: DataFrame, left: DataFrame,
+      right: DataFrame): DataFrame =
+    pairs.select("id1", "id2")
+      .join(left.select(col("id").as("id1"), col("vec").as("v1")), "id1")
+      .join(right.select(col("id").as("id2"), col("vec").as("v2")), "id2")
+      .select(col("id1"), col("id2"),
+        Vectors.cosine(col("v1"), col("v2")).as("sim"))
 
   /** [[knnGraph]] stage 2 — per-row bounded top-k ranking window over
     * the thin candidate pairs.
@@ -1041,40 +1041,18 @@ object Similarity {
     val iAssigned = prebuiltIndexAssigned.getOrElse(
       assignWithHierarchy(ic, hier, nProbe, superProbe))
     val bAssigned = assignWithHierarchy(bc, hier, nProbe, superProbe)
-    val l = iAssigned.as("l")
-    val r = bAssigned.as("r")
-    // Score INSIDE the cell join (vectors already co-located there) and
-    // dedup the multi-table duplicates as a THIN (index_id, batch_id,
-    // simd) aggregate — the knnGraph pattern. The old form ran the
-    // duplicate elimination as a distinct() over rows carrying BOTH full
-    // vector payloads: at production embedding widths that is a payload
-    // shuffle per candidate pair. Here the dedup exchange carries two
-    // ids and a double; min() of identical per-pair values is
-    // deterministic. Only the threshold survivors re-attach vectors
-    // (two same-key joins) for the exact-decimal re-score — identical
-    // output, exchange width ~24 B/candidate instead of ~520 B.
-    // The threshold filter runs BEFORE the dedup exchange (optimization
-    // round 16, guide §2.3 — filter ahead of the shuffle): every
-    // duplicate row of an (index_id, batch_id) group carries the
-    // IDENTICAL simd (same two vectors through the same deterministic
-    // codegen'd double cosine — min() here is pure dedup, never a
-    // choice), so pre-filtering keeps exactly the groups whose min
-    // survives, with identical values. At threshold 0.4 the exchange
-    // carries only the near-dup survivors instead of the full candidate
-    // volume (the cell-join fan-out, ~n·nProbe²·tables rows).
-    val cands = l.join(r, col("l.table") === col("r.table") &&
-        col("l.cell") === col("r.cell"))
-      .select(col("l.id").as("index_id"), col("r.id").as("batch_id"),
+    // A plain cell join, not Dedup.bucketPairs' cross form: joining the
+    // index's cell lists to the batch rows read 9% slower on v21 at sf0.1
+    // (median of 8 interleaved pairs). The threshold filter still runs
+    // ahead of the thin (id1, id2) dedup; duplicates carry identical simd.
+    val cands = iAssigned.as("l").join(bAssigned.as("r"),
+        col("l.table") === col("r.table") && col("l.cell") === col("r.cell"))
+      .select(col("l.id").as("id1"), col("r.id").as("id2"),
         Vectors.cosineFast(col("l.vec"), col("r.vec")).as("simd"))
       .filter(col("simd") >= threshold)
-      .groupBy("index_id", "batch_id").agg(min(col("simd")).as("simd"))
-    cands
-      .join(ic.select(col("id").as("index_id"), col("vec").as("v1")),
-        "index_id")
-      .join(bc.select(col("id").as("batch_id"), col("vec").as("v2")),
-        "batch_id")
-      .select(col("index_id"), col("batch_id"),
-        Vectors.cosine(col("v1"), col("v2")).as("sim"))
+      .groupBy("id1", "id2").agg(min(col("simd")).as("simd"))
+    rescorePairs(cands, ic, bc)
+      .withColumnsRenamed(Map("id1" -> "index_id", "id2" -> "batch_id"))
   }
 
   /** Mutual-kNN clustering over a [[knnGraph]]: keep edges with
@@ -1134,12 +1112,12 @@ object Similarity {
     * INDEPENDENT quantizers: every vector is assigned to its `nProbe`
     * nearest cells in each table (multi-assignment, so pairs straddling
     * a cell boundary still co-occur somewhere); pair generation is the
-    * per-(table, cell) self-join — O(n²·T·nProbe²/nCells) instead of
+    * per-(table, cell) pairs — O(n²·T·nProbe²/nCells) instead of
     * O(n²), with nCells scaling with the corpus while T and nProbe stay
     * fixed. Survivor pairs are re-scored with the exact-decimal cosine,
     * so reported sims are exact; the approximation is only in which
     * pairs are CONSIDERED. Measured on the fixture corpus
-    * (ProfileIvfRecall, threshold 0.4): T=4/nCells=32/nProbe=2 →
+    * (threshold 0.4): T=4/nCells=32/nProbe=2 →
     * recall 0.955 with the two-level assignment (0.970 flat) at 0.50×
     * the brute-force pair-generation cost; recall is asserted against
     * the exact all-pairs answer in TextDedupSpec. Cell skew is the
@@ -1160,29 +1138,14 @@ object Similarity {
     // self-build persist is TRACKED: loop callers (VecStream's
     // micro-batches) drain it via Graft.cacheScope; one-shot batch
     // callers keep the plain persist-for-the-query behavior.
-    val assigned = prebuiltAssigned.getOrElse {
-      val c = graft.Graft.trackedPersist(
-        graft.Graft.ensureParallelism(df)
-          .select(col(idCol).as("id"), col(vecCol).as("vec")))
-      multiQuantizerCells(c, "id", "vec", nCells, nProbe, tables)
-    }
-    val l = assigned.as("l")
-    val r = assigned.as("r")
-    // NOTE the shape difference vs knnGraph: here the fat distinct
-    // (vectors in the dedup key) is the measured-faster form, because
-    // the multi-table duplicate factor is high at these parameters —
-    // deduping FIRST means the cosine runs once per unique pair
-    // (score-in-join ran it per duplicate: measured 6.5 s → 39 s at sf1
-    // when tried). knnGraph's parameters (cells ∝ n) have a low dup
-    // factor and the opposite trade-off.
-    l.join(r, col("l.table") === col("r.table") &&
-        col("l.cell") === col("r.cell") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"),
-        col("l.vec").as("v1"), col("r.vec").as("v2"))
-      .distinct()
-      .filter(Vectors.cosineFast(col("v1"), col("v2")) >= threshold)
-      .select(col("id1"), col("id2"),
-        Vectors.cosine(col("v1"), col("v2")).as("sim"))
+    val c =
+      if (prebuiltAssigned.isDefined)
+        df.select(col(idCol).as("id"), col(vecCol).as("vec"))
+      else graft.Graft.trackedPersist(graft.Graft.ensureParallelism(df)
+        .select(col(idCol).as("id"), col(vecCol).as("vec")))
+    val assigned = prebuiltAssigned.getOrElse(
+      multiQuantizerCells(c, "id", "vec", nCells, nProbe, tables))
+    rescorePairs(ivfPairs(assigned, Some(threshold)), c, c)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023, "SemDeDup:
@@ -1200,7 +1163,7 @@ object Similarity {
     * independent of partitioning and evaluation order — chains a~b~c drop
     * everything except each chain's most peripheral member.
     *
-    * Scale shape: pair generation is the per-cell self-join (the v7
+    * Scale shape: pairs are generated per cell (the v7
     * blocking pattern — O(n²/nCells), never O(n²)); centroids are a
     * DISTRIBUTED frame attached by a shuffle equi-join on cell (nCells
     * follows the linear cellsFor rule, so a broadcast centroid table
@@ -1264,17 +1227,17 @@ object Similarity {
   }
 
   private def semanticDropsFromSims(sims: DataFrame,
-      threshold: Double): DataFrame = {
-    val l = sims.as("l")
-    val r = sims.as("r")
-    l.join(r, col("l.cell") === col("r.cell") &&
-        col("l.id") < col("r.id"))
-      .filter(Vectors.cosineFast(col("l.vec"), col("r.vec")) >= threshold)
-      .select(when(col("l.centsim") > col("r.centsim") ||
-          (col("l.centsim") === col("r.centsim") && col("l.id") > col("r.id")),
-          col("l.id")).otherwise(col("r.id")).as("drop_id"))
-      .distinct()
-  }
+      threshold: Double): DataFrame =
+    // only the drop set needs a dedup, not the pairs
+    Dedup.bucketPairs(sims, None, Seq("id", "vec", "centsim"), Seq("cell"),
+        Int.MaxValue,
+        score = Seq(
+          when(col("l.centsim") > col("r.centsim") ||
+            (col("l.centsim") === col("r.centsim") && col("l.id") > col("r.id")),
+            col("l.id")).otherwise(col("r.id")).as("drop_id"),
+          Vectors.cosineFast(col("l.vec"), col("r.vec")).as("simd")),
+        keep = Some(col("simd") >= threshold), dedup = false)
+      .select("drop_id").distinct()
 
   // ------------------------------------------------------------------
   // Product quantization (PQ): the memory side of ANN at 100 TB. A
@@ -1345,7 +1308,7 @@ object Similarity {
       seedOffset: Int = 0, trainCap: Int = 2048): DataFrame = {
     val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val dim = c.select(size(col("vec"))).head.getInt(0)
+    val dim = c.select(size(col("vec"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
     // read by every refinement iteration AND typically by the caller's
@@ -1392,9 +1355,9 @@ object Similarity {
     * DiskANN's reorder): the ADC shortlist of `refine · topK`
     * candidates is re-ranked by exact squared-L2 over the FULL vectors
     * — which touches only R vectors per query, so codes live in memory
-    * and full vectors stay at rest. ProfilePqRecall on the synthetic
-    * (near-random — PQ's worst case) corpus: recall@10 is 0.37
-    * unrefined, 0.93 at refine=10, 0.99 at refine=20.
+    * and full vectors stay at rest. On the synthetic (near-random —
+    * PQ's worst case) corpus recall@10 measured 0.37 unrefined, 0.93
+    * at refine=10, 0.99 at refine=20 (v18 audits it in-run).
     *
     * Output: qid, vec_id, adc_dist (double, exact multiple of 2⁻²⁰), rn
     * — or l2_dist (exact re-ranked squared L2) when refine > 1.
@@ -1417,7 +1380,7 @@ object Similarity {
     val c = graft.Graft.ensureParallelism(corpus)
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dim = c.select(size(col("vec"))).head.getInt(0)
+    val dim = c.select(size(col("vec"))).head().getInt(0)
     val sub = dim / m
     val cb = pqCodebooks(c, "id", "vec", m, nCodes, iterations,
       trainCap = trainCap)
@@ -1499,8 +1462,8 @@ object Similarity {
     * codes (the inverted-list layout — query-time needs no id-join).
     * Residuals concentrate around zero with smaller per-subspace
     * variance than raw vectors, so the same code budget (m bytes/vec)
-    * quantizes finer and buys materially better recall — measured by
-    * `tools/ProfilePqRecall` against the raw-encoding form below.
+    * quantizes finer and buys materially better recall than raw-vector
+    * codes (v19 audits the residual form's recall in-run).
     */
   final case class IvfPqIndex(corpus: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, codes: DataFrame, m: Int, sub: Int,
@@ -1531,7 +1494,7 @@ object Similarity {
     val c = graft.Graft.ensureParallelism(corpus)
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dim = c.select(size(col("vec"))).head.getInt(0)
+    val dim = c.select(size(col("vec"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
     // residual magnitude is what the PQ budget spends on — Lloyd-refined
@@ -1649,44 +1612,6 @@ object Similarity {
         .select(col("qid"), col("id").as("vec_id"),
           col("l2").as("l2_dist"), col("rn"))
     }
-  }
-
-  /** RAW-encoding IVF-PQ over a flat [[PqIndex]] — kept as the
-    * measurement baseline residual encoding is compared against
-    * (ProfilePqRecall) : the coarse quantizer prunes candidates but
-    * codes quantize the raw vectors, so one global codebook serves all
-    * cells at lower recall.
-    */
-  def ivfPqTopK(queries: DataFrame, idx: PqIndex,
-      idCol: String, vecCol: String, topK: Int,
-      nCells: Int, nProbe: Int): DataFrame = {
-    val c = idx.corpus
-    val cents = lowestIdCentroids(c, "id", "vec", nCells)
-    val cells = assignToCells(c, "id", "vec", cents, keep = 1)
-      .select("id", "cell")
-    val probes = assignToCells(
-      queries.select(col(idCol).as("qid"), col(vecCol).as("qvec")),
-      "qid", "qvec", cents, keep = nProbe).select("qid", "cell")
-    val cand = cells.join(broadcast(probes), Seq("cell")).select("qid", "id")
-    val cb = idx.codebooks
-    val codes = idx.codes
-    val qsv = subVectors(
-      queries.select(col(idCol).as("id"), col(vecCol).as("vec")),
-      "id", "vec", idx.m, idx.sub).withColumnRenamed("id", "qid")
-    val dtab = qsv.join(cb, Seq("s"))
-      .select(col("qid"), col("s"), col("code"),
-        floor(l2sq(col("sv"), col("cw")) * lit(1048576d)).as("dq"))
-    val adc = cand.join(codes, Seq("id"))
-      .join(broadcast(dtab), Seq("qid", "s", "code"))
-      .filter(col("qid") =!= col("id"))
-      .groupBy("qid", "id")
-      .agg(sum(col("dq")).as("adc"))
-    val w = Window.partitionBy("qid").orderBy(col("adc").asc, col("id").asc)
-    adc.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .select(col("qid"), col("id").as("vec_id"),
-        (col("adc").cast("double") / lit(1048576d)).as("adc_dist"),
-        col("rn"))
   }
 
   /** Maximal-marginal-relevance re-rank (Carbonell & Goldstein 1998):

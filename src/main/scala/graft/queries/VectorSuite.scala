@@ -22,8 +22,8 @@ object VectorSuite {
     * the SQL mirrors (declared before `queries`, which reads it).
     * 64 codewords per subspace is the profiled recall optimum at the
     * same at-rest budget — codes store as one byte per subspace either
-    * way (6-bit vs 4-bit codewords packed), and ProfilePqRecall measures
-    * recall@10 0.262 (nCodes=16) → 0.372 (nCodes=64) unrefined on the
+    * way (6-bit vs 4-bit codewords packed), and recall@10 measured
+    * 0.262 (nCodes=16) → 0.372 (nCodes=64) unrefined on the
     * worst-case near-random corpus, 0.93 at refine=10. Training cost
     * (4× the assignment work) is paid once per session by the PqShared /
     * IvfPqShared memos.
@@ -864,8 +864,7 @@ object VectorSuite {
     // quantizers (multi-assigned to the 2 nearest cells in each), never
     // the O(n²) corpus product — measured recall 0.955 at 0.50× the
     // brute-force pair-generation cost on this corpus with the
-    // two-level assignment (flat was 0.970; ProfileIvfRecall measures
-    // both). nCells scales with the corpus (Similarity.cellsFor — the
+    // two-level assignment (flat was 0.970). nCells scales with the corpus (Similarity.cellsFor — the
     // same rule as v15, so both share one multiDyn assignment memo),
     // and the assignment is the hierarchical O(n·√nCells) quantizer.
     // The oracle rebuilds the identical two-level quantizers,
@@ -1046,7 +1045,7 @@ object VectorSuite {
     // corpus, and PQ codes quantize RESIDUALS `vec − centroid(cell)` —
     // residuals concentrate around zero with smaller per-subspace
     // variance, so the same 8-byte code budget buys materially better
-    // recall than raw-vector codes (measured in ProfilePqRecall). Each
+    // recall than raw-vector codes (v19 audits it). Each
     // query builds one distance table per probed cell from its residual
     // there (the asymmetric IVFADC form). The coarse stage is the
     // INDEX-SCALED Lloyd quantizer v8 declares — same nCells
@@ -1084,8 +1083,8 @@ object VectorSuite {
     // The two-tier memory design ANN runs in production (FAISS refine /
     // DiskANN reorder): the in-memory PQ codes produce a topK·refine
     // shortlist, and only those full vectors are read for an exact
-    // squared-L2 re-rank. ProfilePqRecall on this synthetic
-    // (near-random — PQ's worst case) corpus: recall@10 goes 0.37
+    // squared-L2 re-rank. On this synthetic (near-random — PQ's
+    // worst case) corpus recall@10 measured 0.37
     // unrefined → 0.93 at refine=10 → 0.99 at refine=20. Exact-double
     // L2 folds in index order on both engines, so the refined ranking
     // hash-matches bit-for-bit.
@@ -1366,8 +1365,7 @@ object VectorSuite {
 
     // --- PQ-refine recall audit (v17's pattern down the index ladder) ---
     // The recall claim behind v13's two-tier design (ADC shortlist ->
-    // exact re-rank), promoted from a tool printout (ProfilePqRecall) to
-    // an oracled artifact: PQ top-5 at refine=10 (exactly v13's
+    // exact re-rank) as an oracled artifact: PQ top-5 at refine=10 (exactly v13's
     // configuration, same shared PqShared index) scored against the
     // brute-force exact cosine top-5 over 20 query rows. Both pipelines
     // are existing mirrors — the oracle composes the PQ trunk (qid < 20)

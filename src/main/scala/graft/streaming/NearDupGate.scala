@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -127,10 +128,15 @@ private[streaming] object NearDupGate {
     */
   private def priorIndex(s: SparkSession, dir: String, sinks: Sinks,
       batchId: Long): Option[DataFrame] = {
+    // a missing dir is checked first: reading it would make Spark log a
+    // FileNotFoundException stack trace before the AnalysisException
+    val path = new Path(dir)
     // bare read: the index dir gains a partition every micro-batch, so a
     // memoized read plan would be stale by the next batch
-    val read = try Some(s.read.parquet(dir))
-      catch { case _: AnalysisException => None }
+    val read =
+      if (!path.getFileSystem(s.sparkContext.hadoopConfiguration).exists(path)) None
+      else try Some(s.read.parquet(dir))
+        catch { case _: AnalysisException => None }
     read.map { idx =>
       val missing = (sinks.indexCols :+ "ingest_batch")
         .filterNot(idx.columns.contains)

@@ -129,7 +129,7 @@ object ScaleStress {
       // it for a bare count — sum(n_removed) forces the real pipeline
       t(s"dedup_spans_keep_first m=$m")(
         Dedup.dedupSpansKeepFirst(docs, "doc_id", "text", width = 8)
-          .agg(sum(col("n_removed"))).head.getLong(0))
+          .agg(sum(col("n_removed"))).head().getLong(0))
       spark.catalog.clearCache()
     }
 
@@ -264,7 +264,7 @@ object ScaleStress {
       // the final join and measure nothing (653d617's probe-fix lesson)
       run("dedup_spans_keep_first", m, n)(
         Dedup.dedupSpansKeepFirst(docs, "doc_id", "text", width = 8)
-          .agg(coalesce(sum(col("n_removed")), lit(0L))).head.getLong(0))
+          .agg(coalesce(sum(col("n_removed")), lit(0L))).head().getLong(0))
       run("simhash128_neardups", m, n)(
         Dedup.simhashNearDups128(docs, "doc_id", "text", maxHamming = 32)
           .count())

@@ -9,13 +9,14 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.expressions.CappedCollect
-import graft.functions.Text
+import graft.functions.{Text, Vectors}
 import graft.operators.Dedup
 
 /** The near-dup core's bucket lists: `capped_collect`'s row-count cap
-  * across partial buffers, and `Dedup.bandJoin`'s self and cross forms
+  * across partial buffers, `Dedup.bandJoin`'s self and cross forms
   * against a plain-Scala brute force (x8's join-free plan is pinned in
-  * PlanGuardSpec).
+  * PlanGuardSpec), and its pair core `Dedup.bucketPairs` on the IVF
+  * family's (table, cell) assignment rows against a theta join.
   */
 class BandJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -139,4 +140,66 @@ class BandJoinSpec extends SparkSpec {
       }
     }
   }
+
+  // --- bucketPairs on vector (table, cell) buckets -------------------
+  private case class VecCase(rows: Seq[(Long, Seq[Float], Int, Long)],
+      threshold: Double, split: Long)
+
+  /** Ids 1..n, each with a 4-dim vector (a few are near copies of an
+    * earlier one) assigned to `probes` distinct cells of 2-4 in each of
+    * `tables` tables: with so few cells, many pairs share a cell in
+    * several tables. */
+  private val vecCases: Gen[VecCase] = for {
+    n <- Gen.choose(6, 20)
+    tables <- Gen.choose(1, 3)
+    nCells <- Gen.choose(2, 4)
+    probes <- Gen.choose(1, 2)
+    vecs <- Gen.listOfN(n, Gen.listOfN(4, Gen.choose(-1f, 1f)))
+    copies <- Gen.listOfN(n, Gen.frequency(3 -> false, 1 -> true))
+    cells <- Gen.listOfN(n * tables, Gen.pick(math.min(probes, nCells), 0L until nCells))
+    threshold <- Gen.oneOf(-1.0, 0.0, 0.6)
+  } yield {
+    val vs = vecs.indices.foldLeft(Vector.empty[Seq[Float]]) { (acc, i) =>
+      acc :+ (if (copies(i) && acc.nonEmpty) acc(i / 2).map(_ * 1.01f) else vecs(i))
+    }
+    val rows = for {
+      i <- 0 until n; t <- 0 until tables; c <- cells(i * tables + t).toSeq
+    } yield ((i + 1).toLong, vs(i), t, c + 10L * t)
+    VecCase(rows, threshold, (n / 2).toLong)
+  }
+
+  test("bucketPairs self and cross forms on (table, cell) buckets equal a deduped theta join") {
+    val simd = Vectors.cosineFast(col("l.vec"), col("r.vec")).as("simd")
+    def frame(rows: Seq[(Long, Seq[Float], Int, Long)]): DataFrame =
+      rows.toDF("id", "vec", "table", "cell").repartition(3)
+    def reference(l: DataFrame, r: DataFrame, self: Boolean,
+        threshold: Double): Set[Row3] = {
+      val on = col("l.table") === col("r.table") && col("l.cell") === col("r.cell")
+      rows3(l.as("l").join(r.as("r"), if (self) on && col("l.id") < col("r.id") else on)
+        .select(col("l.id").as("id1"), col("r.id").as("id2"), simd)
+        .filter(col("simd") >= threshold).distinct()).toSet
+    }
+    (0 until 12).foreach { trial =>
+      val c = vecCases(Gen.Parameters.default, Seed(trial.toLong)).get
+      def core(index: DataFrame, batch: Option[DataFrame]): Seq[Row3] =
+        rows3(Dedup.bucketPairs(index, batch, Seq("id", "vec"),
+          Seq("table", "cell"), Int.MaxValue, score = Seq(simd),
+          keep = Some(col("simd") >= c.threshold)))
+      val all = frame(c.rows)
+      val self = core(all, None)
+      assert(self.distinct.size == self.size, s"duplicate self pair, trial $trial")
+      assert(self.toSet == reference(all, all, self = true, c.threshold),
+        s"self form, trial $trial ($c)")
+      val (index, batch) = c.rows.partition(_._1 <= c.split)
+      val cross = core(frame(index), Some(frame(batch)))
+      assert(cross.distinct.size == cross.size, s"duplicate cross pair, trial $trial")
+      assert(cross.toSet ==
+        reference(frame(index), frame(batch), self = false, c.threshold),
+        s"cross form, trial $trial ($c)")
+    }
+  }
+
+  private type Row3 = (Long, Long, Double)
+  private def rows3(df: DataFrame): Seq[Row3] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
 }

@@ -35,7 +35,7 @@ class BloomSkipProbeSpec extends SparkSpec {
       val li = Graft.table(spark, dir, "lineitem")
         .select(xxhash64(col("l_orderkey"), col("l_linenumber")).as("k"),
           col("l_quantity"))
-      val needle = li.select("k").head.getLong(0)
+      val needle = li.select("k").head().getLong(0)
       li.repartition(4).write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#k", "true")
         .option("parquet.bloom.filter.expected.ndv#k", "60000")

@@ -100,7 +100,7 @@ class OsmScaleSpec extends SparkSpec {
       // tags.py:56-59 — raw <tag> census over both element kinds
       val nTags = nodes.select(coalesce(size(col("tag")), lit(0)).as("s"))
         .unionAll(ways.select(coalesce(size(col("tag")), lit(0)).as("s")))
-        .agg(sum("s")).head.getLong(0)
+        .agg(sum("s")).head().getLong(0)
       assert(nTags == GenOsm.sfTags, s"tag census: $nTags")
       val sfDocs = OsmShape.shape(nodes, ways)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -65,7 +65,7 @@ class SessionMemoSpec extends SparkSpec {
     def firstText() = SessionMemo.getOrCompute(s2, tbl, "spec") {
       Graft.truncate(s2.read.parquet(tbl), eager = true)
     }(Graft.releaseTruncated)
-      .orderBy("doc_id").select("text").head.getString(0)
+      .orderBy("doc_id").select("text").head().getString(0)
     assert(firstText().contains("gen1"))
     Thread.sleep(5) // distinct mtime even on coarse filesystem clocks
     writeDocs(tbl, "gen2")

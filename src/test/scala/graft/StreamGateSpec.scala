@@ -151,6 +151,36 @@ class StreamGateSpec extends SparkSpec {
     }
   }
 
+  test("a gate's first micro-batch on a missing index dir logs no FileStreamSink warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // the batch starts the session first: Spark's logging set-up replaces
+    // the log4j configuration, and with it an appender added earlier
+    val vec = gates.find(_.name == "vec").get
+    val batch = vec.b0()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+      .asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("capture-fss", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    val d = new GateScaffold(spark, "missing")
+    val (index, quar) = (s"${d.index}/idx", s"${d.quar}/quar")
+    try vec.ingest(batch, 0L, index, quar)
+    finally { logger.removeAppender(capture); logger.setLevel(level) }
+    assert(spark.read.parquet(index).count() > 0)
+    assert(seen.isEmpty, seen)
+  }
+
   test("an asset gate fails loudly on another gate's index dir") {
     val image = gates.find(_.name == "image").get
     val crop = gates.find(_.name == "crop").get

@@ -36,7 +36,7 @@ class VectorExactSpec extends SparkSpec {
       .toDF("a", "b")
     val r2 = dd.select(
       call_function("l2sq_exact", col("a"), col("b")).as("n"),
-      builtin.as("e")).head
+      builtin.as("e")).head()
     assert(java.lang.Double.doubleToLongBits(r2.getDouble(0)) ==
       java.lang.Double.doubleToLongBits(r2.getDouble(1)))
   }
