@@ -1365,13 +1365,14 @@ object VectorSuite {
 
     // --- PQ-refine recall audit (v17's pattern down the index ladder) ---
     // The recall claim behind v13's two-tier design (ADC shortlist ->
-    // exact re-rank) as an oracled artifact: PQ top-5 at refine=10 (exactly v13's
-    // configuration, same shared PqShared index) scored against the
-    // brute-force exact cosine top-5 over 20 query rows. Both pipelines
-    // are existing mirrors — the oracle composes the PQ trunk (qid < 20)
-    // with the v13 refine tail and the v2 brute-force CTEs, and replays
-    // the same semi-join hit count. The top-k sets compare by ID, so the
-    // metric difference (ADC/L2 vs cosine) is part of what is audited:
+    // exact re-rank) as an oracled artifact: PQ top-5 at refine=10
+    // (exactly v13's configuration, same shared PqShared index) scored
+    // against the brute-force exact cosine top-5 over 20 query rows.
+    // Both pipelines are existing mirrors — the oracle composes the PQ
+    // trunk (qid < 20) with the v13 refine tail and the v2 brute-force
+    // CTEs, and replays the same semi-join hit count. The top-k sets
+    // compare by ID, so the metric difference (ADC/L2 vs cosine) is
+    // part of what is audited:
     // on unit-normalized-ish synthetic embeddings L2 and cosine rank
     // near-identically, and recall quantifies the rest.
     "v18_pq_recall_audit" -> Q(
