@@ -5,28 +5,45 @@ import org.apache.spark.sql.functions._
 
 /** Session factory + table access for the graft engine.
   *
-  * Design notes (100 TB posture): local[32] is the test harness; every
-  * conf here is also what we'd set on a real cluster except the master
-  * and the shuffle-partition count (which would scale with cores).
+  * Design notes (100 TB posture): `local[<cores>]` is the test harness;
+  * every conf here is also what we'd set on a real cluster except the
+  * master and the shuffle-partition count (which would scale with cores).
   */
 object Graft {
 
-  /** Build the standard session. AQE on (skew joins / partition
-    * coalescing), UTC timezone to match the DuckDB oracle, nanos-as-long
-    * so the `events` table (parquet TIMESTAMP(NANOS)) is readable.
+  /** The session every main and spec builds: [[builder]] → WARN logs →
+    * [[tune]]. AQE on (skew joins / partition coalescing), UTC timezone
+    * to match the DuckDB oracle, nanos-as-long so the `events` table
+    * (parquet TIMESTAMP(NANOS)) is readable. Sized by `SPARK_GRAFT_CPUS`,
+    * or the JVM's available processors when that is unset; `confs` go
+    * onto the builder (a main's `key=value` arguments, see [[splitArgs]]).
     */
-  def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = builder(master, shufflePartitions).getOrCreate()
+  def session(master: String = s"local[$cpus]", shufflePartitions: Int = cpus,
+      confs: Seq[(String, String)] = Nil): SparkSession = {
+    val spark = confs.foldLeft(builder(master, shufflePartitions)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
   }
 
-  /** The fully-configured builder. Bench/Verify MUST build their sessions
-    * through this (not a bare SparkSession.builder()): some of these
-    * confs are static on this build — tune()'s runtime set silently
-    * no-ops for them, and a bare session then hits e.g. the ICU stall
-    * below at a random first lower()/upper() evaluation.
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** A main's arguments split into session confs — every `key=value`
+    * token, for [[session]] — and the positional rest, in order. A token
+    * with an empty key fails, naming the token.
     */
+  private[graft] def splitArgs(args: Seq[String])
+      : (Seq[(String, String)], Seq[String]) = {
+    val (confs, positional) = args.partition(_.contains('='))
+    (confs.map { t =>
+      val i = t.indexOf('=')
+      require(i > 0, s"session conf token '$t' has an empty key")
+      t.take(i) -> t.drop(i + 1)
+    }, positional)
+  }
+
   /** Shuffle/spill dir: tmpfs when available. The host's disk writes at
     * ~10-20 MB/s (and is shared — external load shows up as roaming
     * multi-second stalls in shuffle-heavy stages); /dev/shm makes local
@@ -39,6 +56,12 @@ object Graft {
     else System.getProperty("java.io.tmpdir")
   }
 
+  /** The fully-configured builder. Every session MUST be built through
+    * this (not a bare SparkSession.builder()): some of these
+    * confs are static on this build — tune()'s runtime set silently
+    * no-ops for them, and a bare session then hits e.g. the ICU stall
+    * below at a random first lower()/upper() evaluation.
+    */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession
       .builder()

@@ -1,7 +1,7 @@
 package graft
 
 /** Shared timing loop behind the suites' prebuild item lists (Bench's
-  * `sf1_builds` section). Sentinels in the seconds column:
+  * `builds` / `sf1_builds` sections). Sentinels in the seconds column:
   *
   *   - `Skipped` (-1.0): the deadline `go()` said stop before the item
   *     ran; the memo falls back to lazy first-family-member charging.

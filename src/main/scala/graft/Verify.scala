@@ -11,39 +11,26 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * independent jobs across the local cores, which roughly halves the
   * wall-clock of 48 small queries vs. sequential submission and
   * amortizes any single-query stall.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [prefix,...] [key=value ...]
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
+    // `key=value` arguments are session confs (e.g. graft.memo.restDir)
+    val (confs, pos) = Graft.splitArgs(args.toSeq)
+    val (sfDir, outDir) = (pos(0), pos(1))
     // Optional third arg (local iteration only — the driver passes two):
     // comma-separated name prefixes; runs and oracles only matching
     // queries so check_oracle.py sees a consistent subset.
-    val keep: String => Boolean =
-      if (args.length > 2) { val ps = args(2).split(',').toSeq
-        name => ps.exists(name.startsWith)
-      } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.tune(spark)
+    val prefixes = pos.lift(2).map(_.split(',').toSeq)
+    val keep: String => Boolean = name => prefixes.forall(_.exists(name.startsWith))
+    val spark = Graft.session(confs = confs)
     new java.io.File(outDir).mkdirs()
 
     // Write oracle_sql.json FIRST: the driver's compare needs it even if
     // a query write below dies or the round is cut short.
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Json.obj(SparkEntry.oracleSql.filter(kv => keep(kv._1))
+      .map { case (k, v) => k -> Json.str(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     SparkEntry.warm(spark)

@@ -933,11 +933,9 @@ object Similarity {
     * pairs of the [[Dedup.bucketPairs]] self form, scored on the
     * codegen'd double cosine once per unordered pair and deduped across
     * tables as thin (id1, id2, simd) rows, then fanned out to both
-    * directed (qid, nid, simd) rows (the graph is symmetric). Exposed so
-    * the bench's v15_split attribution probe times the IDENTICAL plan
-    * pieces the declared query fuses.
+    * directed (qid, nid, simd) rows (the graph is symmetric).
     */
-  private[graft] def knnCandidates(assigned: DataFrame): DataFrame =
+  private def knnCandidates(assigned: DataFrame): DataFrame =
     ivfPairs(assigned)
       .select(explode(array(
         struct(col("id1").as("qid"), col("id2").as("nid"),
@@ -973,7 +971,7 @@ object Similarity {
   /** [[knnGraph]] stage 2 — per-row bounded top-k ranking window over
     * the thin candidate pairs.
     */
-  private[graft] def knnRank(cands: DataFrame, topK: Int): DataFrame = {
+  private def knnRank(cands: DataFrame, topK: Int): DataFrame = {
     val w = Window.partitionBy("qid").orderBy(col("simd").desc, col("nid").asc)
     cands.withColumn("rn", row_number().over(w).cast("int"))
       .filter(col("rn") <= topK)
@@ -983,7 +981,7 @@ object Similarity {
   /** [[knnGraph]] stage 3 — exact-decimal re-score of the ≤ topK
     * survivors per row (the only stage that re-attaches vectors).
     */
-  private[graft] def knnRescore(ranked: DataFrame, corp: DataFrame)
+  private def knnRescore(ranked: DataFrame, corp: DataFrame)
       : DataFrame =
     ranked
       .join(corp.select(col("id").as("qid"), col("vec").as("qv")), "qid")

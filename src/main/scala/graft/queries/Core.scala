@@ -652,7 +652,7 @@ object Core {
   /** Measured skip for the LAST LayoutShared build per dir:
     * (rows the narrow scan decoded, rows in the table) — read by Bench
     * into the artifact's layout_skip section so the skipping ratio is a
-    * recorded number, not archaeology (the v20_split pattern).
+    * recorded number, not archaeology.
     */
   private[graft] val layoutSkip =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()

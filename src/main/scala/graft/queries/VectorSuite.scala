@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Graft.table
@@ -211,85 +210,21 @@ object VectorSuite {
         dir: String): org.apache.spark.sql.DataFrame =
       RestMemo.frame(s, s"$dir/embeddings.parquet",
           "knn-graph-clusters-sim0.4") {
-        val t0 = System.nanoTime()
         val emb = table(s, dir, "embeddings")
         val nc = Similarity.cellsFor(emb.count())
         // The GRAPH is materialized before the closure: the mutual
         // filter references it twice (self semi-join) and the component
         // loop once more — an un-truncated graph plan re-runs the whole
-        // blocked build per reference. Also the per-stage timing split
-        // the bench artifact records (graph build vs component closure).
+        // blocked build per reference.
         val g = Graft.truncate(
           Similarity.knnGraph(emb, "vec_id", "embedding", topK = 5,
             nCells = nc, nProbe = 2, tables = 4,
             prebuiltAssigned = Some(CellsShared.multiDyn(s, dir, nc))),
           eager = true)
-        val tGraph = (System.nanoTime() - t0) / 1e9
-        val out =
-          try Graft.truncate(Similarity.knnGraphClusters(g, minSim = 0.4),
-            eager = true)
-          finally Graft.releaseTruncated(g)
-        v20Split.put(dir,
-          (tGraph, (System.nanoTime() - t0) / 1e9 - tGraph))
-        out
+        try Graft.truncate(Similarity.knnGraphClusters(g, minSim = 0.4),
+          eager = true)
+        finally Graft.releaseTruncated(g)
       }
-  }
-
-  /** v20 memo-build timing split, dir → (graph-build sec, component-
-    * closure sec) for the LAST build per dir — read by Bench into the
-    * artifact so "which stage dominates v20" is a recorded number, not
-    * archaeology.
-    */
-  private[graft] val v20Split =
-    new java.util.concurrent.ConcurrentHashMap[String, (Double, Double)]()
-
-  /** v15 WARM-QUERY stage attribution probe (VERDICT r15 #4): v15 is
-    * the one query that stays bimodal across adopted bench windows
-    * (1.46–2.66 s at sf0.1) after the builds phase was separated —
-    * this names the stage. Runs the declared query's exact pipeline
-    * with a persist() barrier between stages and returns per-stage
-    * seconds: `assign` (the shared multiDyn memo read — warm reload in
-    * a bench run), `candidates` (the per-(table, cell) self-join +
-    * thin-pair dedup), `topk` (the per-qid ranking window), `rescore`
-    * (the ≤ k-survivor exact-decimal re-attach; the final ORDER BY is
-    * count-eliminated in both the query and here). Stage sums run
-    * slightly above the fused query (two persist barriers materialize
-    * what the fused plan streams) — the RATIOS are the signal. Bench
-    * records the map as `v15_split` in the artifact.
-    */
-  private[graft] def v15Split(s: SparkSession,
-      dir: String): Seq[(String, Double)] = {
-    import org.apache.spark.storage.StorageLevel
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val v = f
-      (v, (System.nanoTime() - t0) / 1e9)
-    }
-    val emb = table(s, dir, "embeddings")
-    val nc = Similarity.cellsFor(emb.count())
-    val (assigned, tAssign) = timed {
-      val a = CellsShared.multiDyn(s, dir, nc)
-      a.count()
-      a
-    }
-    val (cands, tCands) = timed {
-      val c = Similarity.knnCandidates(assigned)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
-    }
-    val (ranked, tTopk) = timed {
-      val r = Similarity.knnRank(cands, topK = 5)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
-    }
-    val corp = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val (_, tRescore) = timed(Similarity.knnRescore(ranked, corp).count())
-    ranked.unpersist(false)
-    cands.unpersist(false)
-    Seq("assign" -> tAssign, "candidates" -> tCands, "topk" -> tTopk,
-      "rescore" -> tRescore)
   }
 
   /** Per-(session, dir) memo of v21's AT-REST index assignment — the

@@ -22,14 +22,16 @@ import graft.operators.Dedup
   * is x7's memo build itself).
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [sfDir] [names]
+  *          [key=value ... session confs]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val suffix = args(1)
-    val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val only = args.lift(3).map(_.split(",").toSeq)
-    val spark = Graft.session()
+    val (confs, pos) = Graft.splitArgs(args.toSeq)
+    val outDir = pos(0)
+    val suffix = pos(1)
+    val sfDir = pos.lift(2).getOrElse("/root/testdata/sf0.1")
+    val only = pos.lift(3).map(_.split(",").toSeq)
+    val spark = Graft.session(confs = confs)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     def dump(plans: Map[String, (SparkSession, String) => DataFrame]): Unit =
       plans.keys.toSeq.sorted

@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Bench, Graft, SparkEntry}
+import graft.Json.{num, obj}
 import graft.functions.Text
 import graft.operators.{Dedup, Similarity}
 
@@ -15,7 +16,8 @@ import graft.operators.{Dedup, Similarity}
   * near-linearly too. A superlinear blowup here means a shape that dies
   * at 100 TB (megabuckets, O(n²) candidate sets).
   *
-  * Usage: runMain graft.tools.ScaleStress [sfDir] [copies...]
+  * Usage: runMain graft.tools.ScaleStress [sfDir] [copies... | probes |
+  *          bpelocal] [key=value ... session confs]
   */
 object ScaleStress {
 
@@ -39,28 +41,25 @@ object ScaleStress {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // `probes` mode: just the machine-readable artifact rows (the thing
-    // Bench emits per round), printed and written to SCALE_LAST.json
-    // `bpelocal` mode: just the driver-local trainer measurement
-    if (args.drop(1).headOption.contains("bpelocal")) {
-      val spark = Graft.session()
-      println("{" + bpeTrainLocalJson(spark, sfDir) + "}")
-      spark.stop()
-      return
+    val (confs, pos) = Graft.splitArgs(args.toSeq)
+    val sfDir = pos.headOption.getOrElse("/root/testdata/sf0.1")
+    val spark = Graft.session(confs = confs)
+    pos.drop(1) match {
+      // just the machine-readable artifact rows (the thing Bench emits
+      // per round), printed and written to SCALE_LAST.json
+      case Seq("probes") => println(writeProbes(spark, sfDir))
+      // just the driver-local trainer measurement
+      case Seq("bpelocal") => println("{" + bpeTrainLocalJson(spark, sfDir) + "}")
+      case Seq() => stress(spark, sfDir, Seq(1, 10, 100))
+      case ms => stress(spark, sfDir, ms.map(_.toInt))
     }
-    if (args.drop(1).headOption.contains("probes")) {
-      val spark = Graft.session()
-      val json = probeJson(spark, sfDir)
-      java.nio.file.Files.write(java.nio.file.Paths.get("SCALE_LAST.json"),
-        (json + "\n").getBytes("UTF-8"))
-      println(json)
-      spark.stop()
-      return
-    }
-    val ms = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 10, 100)
-    val spark = Graft.session()
+    spark.stop()
+  }
 
+  /** The stress runs: every dedup operator on the `m`-copy corpus, then
+    * semantic dedup and MMR on `m`-copy embeddings (m ≤ 10), timed.
+    */
+  private def stress(spark: SparkSession, sfDir: String, ms: Seq[Int]): Unit = {
     def t(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f
@@ -160,7 +159,25 @@ object ScaleStress {
           "vec_id", "embedding", topM = 20, k = 5, lambda = 0.7).count())
       spark.catalog.clearCache()
     }
-    spark.stop()
+  }
+
+  /** Write SCALE_LAST.json — [[probeJson]], with the cold-session
+    * reload evidence of [[restReloadJson]] spliced in when `restReload`
+    * (Bench's warm session; it ends the session's memos) — and return it.
+    */
+  private[graft] def writeProbes(spark: SparkSession, sfDir: String, decade: Boolean = true,
+      restReload: Boolean = false): String = {
+    val json0 = probeJson(spark, sfDir, decade = decade)
+    val json =
+      if (!restReload) json0
+      else try json0.dropRight(1) + s""","rest_reload":${restReloadJson(spark, sfDir)}}"""
+      catch { case e: Throwable =>
+        System.err.println(s"[scale] rest_reload skipped: ${e.getMessage}")
+        json0
+      }
+    java.nio.file.Files.write(java.nio.file.Paths.get("SCALE_LAST.json"),
+      (json + "\n").getBytes("UTF-8"))
+    json
   }
 
   /** Machine-readable scale probes — the ScaleStress linearity
@@ -209,7 +226,6 @@ object ScaleStress {
     */
   def bpeTrainLocalJson(spark: SparkSession, sfDir: String,
       rounds: Int = 1024): String = {
-    def r2(v: Double) = f"$v%.2f"
     // The fixture prose has a TINY vocabulary (31 distinct words at
     // every SF — training merges it to completion after ~90 rounds),
     // so a production-merge-count probe ENRICHES the token space
@@ -229,8 +245,8 @@ object ScaleStress {
     val sec = (System.nanoTime() - t0) / 1e9
     val merges = trained.merges.size
     s""""bpe_train_local":{"rounds":$rounds,"merges":$merges,""" +
-      s""""sec":${r2(sec)},""" +
-      s""""merges_per_sec":${r2(merges / math.max(1e-9, sec))},""" +
+      s""""sec":${num(sec)},""" +
+      s""""merges_per_sec":${num(merges / math.max(1e-9, sec))},""" +
       s""""total_words":${trained.totalWords}}"""
   }
 
@@ -648,7 +664,6 @@ object ScaleStress {
       emb.unpersist(false)
       spark.catalog.clearCache()
     }
-    def r2(v: Double) = f"$v%.2f"
     // DRIVER-LOCAL BPE trainer at production-ish merge counts (VERDICT
     // r13 #4): Bpe.trainLocal over the sf corpus vocabulary at
     // rounds=1024 — the distributed word-count pass plus the bounded
@@ -685,10 +700,10 @@ object ScaleStress {
         (math.log(p.n.toDouble), math.log(math.max(1.0, p.rows.toDouble)))))
       s"""{"probe":"$name","n_small":${s.n},"n_large":${l.n},""" +
         s""""rows_small":${s.rows},"rows_large":${l.rows},""" +
-        s""""sec_small":${r2(s.sec)},"sec_large":${r2(l.sec)},""" +
-        s""""size_ratio":${r2(sizeR)},"time_ratio":${r2(timeR)},""" +
-        s""""rows_ratio":${r2(rowsR)},"n_points":${ps.size},""" +
-        s""""time_exponent":${r2(timeExp)},"rows_exponent":${r2(rowsExp)}}"""
+        s""""sec_small":${num(s.sec)},"sec_large":${num(l.sec)},""" +
+        s""""size_ratio":${num(sizeR)},"time_ratio":${num(timeR)},""" +
+        s""""rows_ratio":${num(rowsR)},"n_points":${ps.size},""" +
+        s""""time_exponent":${num(timeExp)},"rows_exponent":${num(rowsExp)}}"""
     }
     s"""{"probes":[${rows.mkString(",")}],"m_small":$mSmall,""" +
       s""""m_large":$mLarge,"decade":$decade$bpeLocalSection,"sf":"$sfDir"}"""
@@ -706,26 +721,20 @@ object ScaleStress {
     * session's memo set.
     */
   def restReloadJson(spark: SparkSession, sfDir: String): String = {
-    def r2(v: Double) = f"$v%.2f"
-    def time(name: String): Double = {
-      val t0 = System.nanoTime()
-      try graft.SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case e: Throwable =>
-        System.err.println(s"[rest-reload] $name failed: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
+    // a query that throws reads -1.0, never a time
+    def time(name: String): Double =
+      Bench.timeCount(spark, sfDir, SparkEntry.queries(name)).fold(
+        msg => { System.err.println(s"[rest-reload] $name failed: $msg"); -1.0 }, t => t)
     val qs = Seq("v12_ivfpq_topk", "m11_perceptual_neardups")
     val warmBefore = qs.map(q => q -> time(q)).toMap
     // fresh-session simulation; the at-rest sidecars survive it
     graft.SessionMemo.endSession(spark)
     spark.catalog.clearCache()
-    val entries = qs.map { q =>
+    obj(qs.map { q =>
       val reload = time(q)
-      val warm = time(q)
-      s""""$q":{"warm_before":${r2(warmBefore(q))},""" +
-        s""""cold_reload":${r2(reload)},"warm_after":${r2(warm)}}"""
-    }
-    entries.mkString("{", ",", "}")
+      q -> obj(Seq("warm_before" -> num(warmBefore(q)),
+        "cold_reload" -> num(reload), "warm_after" -> num(time(q))))
+    })
   }
 
   /** m deterministic copies of the embeddings table, each circularly

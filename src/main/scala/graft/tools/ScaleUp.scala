@@ -24,18 +24,18 @@ import graft.Graft
   *     cosines exactly preserved), cross-copy similarity ~random.
   *
   * Usage: runMain graft.tools.ScaleUp [srcDir] [outDir] [factor]
+  *          [key=value ... session confs]
   */
 object ScaleUp {
 
   private val Stride = 10000000L
 
   def main(args: Array[String]): Unit = {
-    val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val out = args.lift(1).getOrElse("/dev/shm/graft-sf1")
-    val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = Graft.builder("local[16]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.tune(spark)
+    val (confs, pos) = Graft.splitArgs(args.toSeq)
+    val src = pos.lift(0).getOrElse("/root/testdata/sf0.1")
+    val out = pos.lift(1).getOrElse("/dev/shm/graft-sf1")
+    val factor = pos.lift(2).fold(10)(_.toInt)
+    val spark = Graft.session(confs = confs)
     synthesize(spark, src, out, factor)
     spark.stop()
   }
