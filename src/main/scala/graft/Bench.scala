@@ -14,8 +14,27 @@ import graft.Json.{arr, num, obj, str}
 object Bench {
   private[graft] type Query = (SparkSession, String) => DataFrame
 
-  /** sf1 and the scale probes start only with this much budget left. */
+  /** sf1 starts only with this much budget left. */
   private val MinLeftSec = 100
+
+  /** What the scale probes take at sf0.1 on a 4-core host, rounded up:
+    * 441 s without the 64x decade point (with `rest_reload`, in Bench),
+    * 607 s with it (without `rest_reload`, standalone), so the decade
+    * point adds about 200 s.
+    */
+  private[graft] val ProbeSec = 450
+  private[graft] val DecadeSec = 200
+
+  /** The JSON line is due this long after the budget ends. */
+  private[graft] val GraceSec = 60
+
+  /** The scale probes' gate, with `left` seconds of the budget left:
+    * `None` when they would not end by the time the JSON line is due,
+    * else whether the decade point fits too.
+    */
+  private[graft] def probeGate(left: Double): Option[Boolean] =
+    if (left + GraceSec < ProbeSec) None
+    else Some(left + GraceSec >= ProbeSec + DecadeSec)
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
@@ -206,8 +225,8 @@ object Bench {
     // the primary section ends at 0.5·b (0.8·b with sf1 off; its pass 1
     // always covers every query), sf1 at b + 60, when the JSON line is
     // due; each section's builds stop halfway through its window; sf1
-    // and the probes start only with MinLeftSec left, the probes' decade
-    // point only with twice that.
+    // starts only with MinLeftSec left; the probes (and their decade
+    // point) only when what they take ends by b + 60 (probeGate).
     val t0 = System.nanoTime()
     def at(sec: Double): Long = t0 + (sec * 1e9).toLong
     def left: Double = budget - (System.nanoTime() - t0) / 1e9
@@ -226,17 +245,21 @@ object Bench {
         // only the heavy tail
         Right(section(spark, "sf1", sf1Dir,
           byName.sortBy { case (n, _) => (primary.pass1.getOrElse(n, 0.0), n) },
-          passes = 2, at(budget + 60.0), cutFirst = true,
+          passes = 2, at(budget.toDouble + GraceSec), cutFirst = true,
           SparkEntry.prebuild(spark, sf1Dir, _)))
       } catch { case e: Throwable =>
         System.err.println(s"[sf1] skipped: ${e.getMessage}")
         Left(s"exception: ${e.getMessage}")
       }
     load("after_sf1")
-    if (atSf01 && left >= MinLeftSec)
-      try System.err.println("[scale] " + graft.tools.ScaleStress.writeProbes(
-        spark, sfDir, decade = left >= 2 * MinLeftSec, restReload = true))
-      catch { case e: Throwable => System.err.println(s"[scale] skipped: ${e.getMessage}") }
+    if (atSf01) probeGate(left) match {
+      case Some(decade) =>
+        try System.err.println("[scale] " + graft.tools.ScaleStress.writeProbes(
+          spark, sfDir, decade = decade, restReload = true))
+        catch { case e: Throwable => System.err.println(s"[scale] skipped: ${e.getMessage}") }
+      case None =>
+        System.err.println(f"[scale] skipped: $left%.0f s left, the probes take $ProbeSec s")
+    }
     load("end")
     val (line, summary) = lines(sfDir, sf1Dir, primary, sf1, loads.toSeq)
     try Files.write(Paths.get("BENCH_LAST.json"), (line + "\n").getBytes("UTF-8"))

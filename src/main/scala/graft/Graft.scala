@@ -96,6 +96,24 @@ object Graft {
     spark
   }
 
+  /** True when the session runs one task at a time
+    * (`defaultParallelism <= 1`, e.g. `local[1]`). Such a session has one
+    * shuffle partition too, so every `Exchange` would move all rows into
+    * the one partition they were already in, at the cost of a separate
+    * AQE job and a shuffle write and read. [[read]], [[RestMemo]]'s
+    * truncated frames and [[ensureParallelism]] hand such a session
+    * `coalesce(1)` frames instead: their `SinglePartition` meets every
+    * distribution an aggregate, sort or join asks for (all but a
+    * broadcast), and a coalesce is narrow, so each query runs as one
+    * stage.
+    */
+  def oneSlot(spark: SparkSession): Boolean =
+    spark.sparkContext.defaultParallelism <= 1
+
+  /** `df.coalesce(1)` in a [[oneSlot]] session, `df` itself otherwise. */
+  private[graft] def oneSlotFrame(df: DataFrame): DataFrame =
+    if (oneSlot(df.sparkSession)) df.coalesce(1) else df
+
   /** Spread an under-partitioned DataFrame to the session's parallelism.
     *
     * Parquet partitioning is BYTE-based (maxPartitionBytes): a few MB of
@@ -106,19 +124,27 @@ object Graft {
     * on small inputs the one-time shuffle is trivially cheap. The
     * explicit partition count is deliberately NOT AQE-coalescible.
     *
+    * In a [[oneSlot]] session there is nothing to spread: the frame comes
+    * back as `df.coalesce(1)`, never `repartition(1)`. The coalesce is
+    * kept, not dropped: its `SinglePartition` is what lets the
+    * aggregates above it skip their exchanges; a bare `df` gives each
+    * band aggregate its own.
+    *
     * Decided from PLAN METADATA only (optimizer size estimate vs the
     * byte-splitter's partition size) — never `df.rdd`: compiling the RDD
     * under AQE builds a separate physical plan and, for inputs containing
     * shuffles, eagerly materializes query stages the subsequent
     * repartition plan would NOT reuse (double execution).
     */
-  def ensureParallelism(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val perPartition =
-      df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes < BigInt(perPartition) * target) df.repartition(target) else df
-  }
+  def ensureParallelism(df: DataFrame): DataFrame =
+    if (oneSlot(df.sparkSession)) df.coalesce(1)
+    else {
+      val target = df.sparkSession.sparkContext.defaultParallelism
+      val perPartition =
+        df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+      val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (estBytes < BigInt(perPartition) * target) df.repartition(target) else df
+    }
 
   /** Scoped release of operator-INTERNAL transient persists.
     *
@@ -235,11 +261,12 @@ object Graft {
     * the entry (one entry per path, however often it is rewritten); a
     * flat or single-level-partitioned rewrite is seen at once, a change
     * ≥2 levels down within `FpWalkTtlMillis`. Entries die with the
-    * session (SessionMemo's lifecycle rules).
+    * session (SessionMemo's lifecycle rules). In a [[oneSlot]] session
+    * the memoized plan is the read followed by `coalesce(1)`.
     */
   def read(spark: SparkSession, path: String): DataFrame =
     SessionMemo.getOrCompute(spark, path, "read-plan")(
-      spark.read.parquet(path))(_ => ())
+      oneSlotFrame(spark.read.parquet(path)))(_ => ())
 
   /** Read one testdata table, `$dir/$name.parquet`, through [[read]]. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

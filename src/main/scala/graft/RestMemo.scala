@@ -285,6 +285,10 @@ object RestMemo {
     * engine rebuilds. Within one engine build, two different computes
     * still need two `what` tags (m14-pairs → m14-pairs-v2): the
     * fingerprint otherwise sees the same source data and code.
+    *
+    * In a [[Graft.oneSlot]] session the memo holds the truncated frame
+    * followed by `coalesce(1)`, built or reloaded alike, so the queries
+    * over it add no exchange of their own.
     */
   def frame(s: SparkSession, dataPath: String, what: String)(
       build: => DataFrame): DataFrame =
@@ -299,9 +303,9 @@ object RestMemo {
   def frame(s: SparkSession, dataPaths: Seq[String], what: String)(
       build: => DataFrame): DataFrame =
     SessionMemo.getOrCompute(s, dataPaths, what) {
-      loadOrBuild(s, dataPaths, what)(Graft.cacheScope(build))(
+      Graft.oneSlotFrame(loadOrBuild(s, dataPaths, what)(Graft.cacheScope(build))(
         v => (Seq("data" -> v), Map.empty),
-        (fs, _) => Graft.truncate(fs("data"), eager = true))
+        (fs, _) => Graft.truncate(fs("data"), eager = true)))
     }(Graft.releaseTruncated)
 
   /** Collected-LITERAL memo (the IvfShared quantizer form): the value

@@ -1088,14 +1088,18 @@ object Similarity {
     * Spark plans a broadcast-nested-loop when one side is small,
     * partitioned block products otherwise); the FILTER runs on the
     * codegen'd double cosine, and only the surviving pairs are re-scored
-    * with the exact-decimal cosine for oracle-parity output.
+    * with the exact-decimal cosine for oracle-parity output. A block
+    * product reports an unknown partitioning even over one partition, so
+    * in a one-slot session ([[graft.Graft.oneSlot]]) the pairs are
+    * coalesced to one partition too, and a sort above them needs no
+    * exchange.
     */
   def cosineNearDups(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val spread = graft.Graft.ensureParallelism(df)
     val l = spread.select(col(idCol).as("id1"), col(vecCol).as("v1"))
     val r = spread.select(col(idCol).as("id2"), col(vecCol).as("v2"))
-    l.join(r, col("id1") < col("id2"))
+    graft.Graft.oneSlotFrame(l.join(r, col("id1") < col("id2")))
       .filter(Vectors.cosineFast(col("v1"), col("v2")) >= threshold)
       .select(col("id1"), col("id2"),
         Vectors.cosine(col("v1"), col("v2")).as("sim"))

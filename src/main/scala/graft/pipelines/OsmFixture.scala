@@ -79,10 +79,13 @@ object OsmFixture {
     val docs = OsmShape.shape(nodes, ways)
       .withColumn("created", col("created")
         .withField("timestamp", col("created.timestamp").cast("timestamp_ntz")))
-    // 8 files: scan parallelism for the capstone queries without
-    // thousands of tiny row groups. (At 100 TB the XML source splits by
-    // record boundary and this explicit spread is unnecessary.)
-    docs.repartition(8).write.mode("overwrite").parquet(docsPath)
+    // One file per task slot, for both tables: scan parallelism for the
+    // capstone queries without thousands of tiny row groups. A one-slot
+    // session (Graft.oneSlot) writes one file, which its scans read as
+    // one partition anyway. (At 100 TB the XML source splits by record
+    // boundary and this explicit spread is unnecessary.)
+    val files = spark.sparkContext.defaultParallelism
+    docs.repartition(files).write.mode("overwrite").parquet(docsPath)
 
     // RAW tag arrays (pre-routing, problemchars included) for the
     // tags.py key census (o13) — the one capstone query that runs on
@@ -91,7 +94,7 @@ object OsmFixture {
         col("_id").as("id"), col("tag"))
       .unionByName(ways.select(lit("way").as("etype"),
         col("_id").as("id"), col("tag")))
-    rawTags.repartition(4).write.mode("overwrite").parquet(rawTagsPath)
+    rawTags.repartition(files).write.mode("overwrite").parquet(rawTagsPath)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(versionPath), generatorVersion.toString)
   }

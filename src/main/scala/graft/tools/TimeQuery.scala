@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted, StageInfo}
 
 import graft.{Bench, Graft, SparkEntry}
 
@@ -14,7 +15,11 @@ import graft.{Bench, Graft, SparkEntry}
   * without the (disabled) Spark UI: every completed stage of ≥ 50 ms
   * with its task count, input/shuffle bytes and records and GC
   * (`[stage]`), and the query's driver-side analyze+optimize+plan time
-  * on a fresh identical frame (`[plan ]`).
+  * on a fresh identical frame (`[plan ]`). Each pass's jobs carry the
+  * query's name as their job description, and a `[stage]` line names
+  * its query and the operator scopes of its RDDs (`Exchange`,
+  * `WholeStageCodegen (n)`, ...): the stage's call site on this Spark
+  * build is the async AQE one for nearly every stage.
   *
   * Usage: runMain graft.tools.TimeQuery <name[,name...]> [sfDir] [passes]
   *          [key=value ... session confs]
@@ -27,9 +32,15 @@ object TimeQuery {
     val passes = pos.lift(2).fold(2)(_.toInt)
     val spark = Graft.session(confs = confs)
     val staged = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val described = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val stages = new SparkListener {
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        Option(ss.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(described.put(ss.stageInfo.stageId, _))
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
+        val query = Option(described.remove(si.stageId)).getOrElse("-")
         val m = si.taskMetrics
         val dur = (for { s <- si.submissionTime; c <- si.completionTime }
           yield (c - s) / 1000.0).getOrElse(0.0)
@@ -39,8 +50,7 @@ object TimeQuery {
             f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e6}%8.1f MB/" +
             f"${m.shuffleReadMetrics.recordsRead}%8d " +
             f"sw=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1f MB " +
-            f"gc=${m.jvmGCTime}%5d ms  " +
-            si.name.takeWhile(_ != '\n').take(70))
+            f"gc=${m.jvmGCTime}%5d ms  $query  ${scopes(si)}")
       }
     }
     spark.sparkContext.addSparkListener(stages)
@@ -48,6 +58,7 @@ object TimeQuery {
     val failed = scala.collection.mutable.TreeMap[String, String]()
     for (p <- 1 to passes; n <- names) {
       staged.set(p == passes)
+      spark.sparkContext.setJobDescription(n)
       Bench.timeCount(spark, sfDir, SparkEntry.queries(n)(_, _)) match {
         case Right(dt) =>
           // let stage-completed events drain before the time line
@@ -64,6 +75,7 @@ object TimeQuery {
           println(s"[time] pass$p $n failed: $msg")
           failed(n) = msg
       }
+      spark.sparkContext.setJobDescription(null)
       spark.catalog.clearCache()
     }
     best.foreach { case (n, t) =>
@@ -72,4 +84,12 @@ object TimeQuery {
     spark.sparkContext.removeSparkListener(stages)
     spark.stop()
   }
+
+  /** The distinct operator scopes of a stage's RDDs in the order the
+    * rows flow (`Scan parquet -> WholeStageCodegen (1) -> Exchange`): the
+    * physical operators the stage ran.
+    */
+  private def scopes(si: StageInfo): String =
+    si.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
+      .mkString(" -> ")
 }

@@ -107,6 +107,17 @@ class BenchSpec extends SparkSpec {
     assert(b.get("n").asInt == 2)
   }
 
+  test("deadlines: the scale probes start only when what they take ends by the JSON line, the decade point only when it fits too") {
+    import Bench.{DecadeSec, GraceSec, ProbeSec, probeGate}
+    // 100 s left is far short of what the probes take
+    assert(probeGate(100.0).isEmpty)
+    assert(probeGate(ProbeSec - GraceSec - 1.0).isEmpty)
+    assert(probeGate(ProbeSec - GraceSec).contains(false))
+    assert(probeGate(ProbeSec + DecadeSec - GraceSec - 1.0).contains(false))
+    assert(probeGate(ProbeSec + DecadeSec - GraceSec).contains(true))
+    assert(probeGate(-GraceSec.toDouble).isEmpty)
+  }
+
   test("contract lines: a failure message with quote, backslash, newline and tab parses back exactly") {
     val msg = "Bad \"x\" at C:\\tmp\nnext line\tcol"
     val s = Bench.Section(Nil, Map("a_ok" -> 1.0), Map("a_ok" -> 1.0), 1,
