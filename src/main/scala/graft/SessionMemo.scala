@@ -36,11 +36,23 @@ import org.apache.spark.sql.SparkSession
   * loser releases its copy, and a memoized compute may itself consult
   * the memo (no `computeIfAbsent` re-entrancy hazard — see the
   * "Recursive update" note at TextSuite.DedupShared).
+  *
+  * DEPENDENCY RECORDING, for the plan memo ([[PlanMemo]]): inside
+  * [[recorded]], every slot a lookup on this thread consults (read-plan
+  * entries and RestMemo/SessionMemo memos, nested lookups included) is
+  * recorded with the entry it held. Such a set of [[Dep]]s stays
+  * [[current]] while every slot still holds that entry over an unchanged
+  * fingerprint. A memoized plan is a [[slot]] of its own, so it shares
+  * the lifecycle above (rules 2-4; it holds no data, so there is nothing
+  * to release), and its validity is its dependencies' and its confs'.
+  * A compute runs with the plan-build job tag ([[BuildTag]]) cleared, so
+  * the jobs a memo compute launches are the memo's, not the build's.
   */
 object SessionMemo {
 
-  private final class Entry(
+  private[graft] final class Entry(
       val fp: String,
+      val paths: Seq[String],
       val sessionRef: WeakReference[SparkSession],
       val ttlMillis: Long,
       val value: AnyRef,
@@ -183,26 +195,138 @@ object SessionMemo {
       what: String)(compute: => T)(release: T => Unit): T = {
     sweep(System.currentTimeMillis())
     hookContext(s)
-    val k = s"${sessionKey(s)}:${dataPaths.mkString("\u0000")}:$what"
+    val k = slotKey(s, dataPaths, what)
     val fp = dataPaths.map(fingerprint).mkString("|")
     val cur = entries.get(k)
     if (cur != null && cur.fp == fp) {
       cur.lastAccess = System.currentTimeMillis()
+      record(k, cur)
       cur.value.asInstanceOf[T]
     } else {
       if (cur != null && entries.remove(k, cur)) safeRelease(cur)
-      val ttl = math.max(1L,
-        (try s.conf.get("graft.memo.ttlSeconds", "1800").toLong
-         catch { case _: Throwable => 1800L }) * 1000L)
+      val ttl = ttlOf(s)
       // memoized builds run OUTSIDE any active cacheScope: their persists
       // are long-lived memo state owned by this lifecycle, and must not
       // be drained when a scoped caller (a micro-batch loop) exits
-      val v = Graft.withoutCacheScope(compute)
-      val e = new Entry(fp, new WeakReference(s), ttl, v, () => release(v))
+      val v = Graft.withoutCacheScope(untagged(s)(compute))
+      val e = new Entry(fp, dataPaths, new WeakReference(s), ttl, v,
+        () => release(v))
       val prev = entries.putIfAbsent(k, e)
-      if (prev == null) v
-      else if (prev.fp == fp) { safeRelease(e); prev.value.asInstanceOf[T] }
-      else { entries.put(k, e); safeRelease(prev); v }
+      if (prev == null) { record(k, e); v }
+      else if (prev.fp == fp) {
+        safeRelease(e); record(k, prev); prev.value.asInstanceOf[T]
+      }
+      else { entries.put(k, e); safeRelease(prev); record(k, e); v }
+    }
+  }
+
+  private def slotKey(s: SparkSession, dataPaths: Seq[String],
+      what: String): String =
+    s"${sessionKey(s)}:${dataPaths.mkString("\u0000")}:$what"
+
+  private def ttlOf(s: SparkSession): Long = math.max(1L,
+    (try s.conf.get("graft.memo.ttlSeconds", "1800").toLong
+     catch { case _: Throwable => 1800L }) * 1000L)
+
+  /** One slot a [[recorded]] body consulted: its key and the entry it
+    * held at the time.
+    */
+  private[graft] final case class Dep(key: String, entry: Entry) {
+    def isReadPlan: Boolean = key.endsWith(":read-plan")
+  }
+
+  private val recorders =
+    ThreadLocal.withInitial[List[java.util.ArrayList[Dep]]](() => Nil)
+
+  private def record(k: String, e: Entry): Unit =
+    recorders.get().foreach(_.add(Dep(k, e)))
+
+  /** Run `body` and return what it made with every slot it consulted on
+    * this thread, in lookup order, each once. Recordings nest: a lookup
+    * is recorded in every recording open on the thread.
+    */
+  private[graft] def recorded[T](body: => T): (T, Seq[Dep]) = {
+    val buf = new java.util.ArrayList[Dep]()
+    val outer = recorders.get()
+    recorders.set(buf :: outer)
+    val v = try body finally recorders.set(outer)
+    import scala.jdk.CollectionConverters._
+    (v, buf.asScala.toSeq.distinct)
+  }
+
+  /** Record `deps` in the recordings open on this thread, as if the slots
+    * had been consulted again (a plan hit inside an outer build).
+    */
+  private[graft] def recordAll(deps: Seq[Dep]): Unit =
+    deps.foreach(d => record(d.key, d.entry))
+
+  /** True when every dep's slot still holds the recorded entry over an
+    * unchanged fingerprint; then their idle clocks restart, so the TTL
+    * sweep never releases what a memoized plan still reads.
+    */
+  private[graft] def current(deps: Seq[Dep]): Boolean = {
+    val ok = deps.forall { d =>
+      (entries.get(d.key) eq d.entry) &&
+        d.entry.paths.map(fingerprint).mkString("|") == d.entry.fp
+    }
+    if (ok) {
+      val now = System.currentTimeMillis()
+      deps.foreach(_.entry.lastAccess = now)
+    }
+    ok
+  }
+
+  /** The value of this session's (dataPath, what) slot when `valid`
+    * accepts it; a rejected value is dropped. Unlike [[getOrCompute]], no
+    * fingerprint is kept: `valid` decides. Runs the sweep first.
+    */
+  private[graft] def slot[P <: AnyRef](s: SparkSession, dataPath: String,
+      what: String)(valid: P => Boolean): Option[P] = {
+    val now = System.currentTimeMillis()
+    sweep(now)
+    val k = slotKey(s, Seq(dataPath), what)
+    entries.get(k) match {
+      case null => None
+      case e if valid(e.value.asInstanceOf[P]) =>
+        e.lastAccess = now
+        Some(e.value.asInstanceOf[P])
+      case e => entries.remove(k, e); None
+    }
+  }
+
+  /** Store `value` in this session's (dataPath, what) slot for [[slot]]. */
+  private[graft] def putSlot(s: SparkSession, dataPath: String, what: String,
+      value: AnyRef): Unit = {
+    hookContext(s)
+    entries.put(slotKey(s, Seq(dataPath), what),
+      new Entry("", Nil, new WeakReference(s), ttlOf(s), value, () => ()))
+  }
+
+  /** Drop (and release) every entry, of any session, whose value `p`
+    * accepts.
+    */
+  private[graft] def dropWhere(p: AnyRef => Boolean): Unit = {
+    val it = entries.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next().getValue
+      if (p(e.value)) { it.remove(); safeRelease(e) }
+    }
+  }
+
+  /** SparkContext local property naming the plan builds open on the
+    * thread (comma-separated tokens); [[PlanMemo]] counts the jobs that
+    * carry it.
+    */
+  private[graft] val BuildTag = "graft.plan.builds"
+
+  /** Run `body` with [[BuildTag]] cleared on this thread. */
+  private def untagged[T](s: SparkSession)(body: => T): T = {
+    val sc = s.sparkContext
+    val tag = sc.getLocalProperty(BuildTag)
+    if (tag == null) body
+    else {
+      sc.setLocalProperty(BuildTag, null)
+      try body finally sc.setLocalProperty(BuildTag, tag)
     }
   }
 

@@ -29,12 +29,15 @@ object OsmFixture {
 
   /** Run `body` with the fixture rooted at `dir` instead — for specs
     * that build and rewrite a small private fixture without touching
-    * the shared one.
+    * the shared one. The root is an input of every o* plan that no plan
+    * memo dependency records, so the memoized plans are dropped on the
+    * way in and out (`PlanMemo.dropAll`).
     */
   private[graft] def withRoot[T](dir: String)(body: => T): T = synchronized {
     val prev = rootOverride
     rootOverride = Some(dir)
-    try body finally rootOverride = prev
+    graft.PlanMemo.dropAll()
+    try body finally { rootOverride = prev; graft.PlanMemo.dropAll() }
   }
   def xmlPath: String = s"$root/synth.osm"
   def docsPath: String = s"$root/docs.parquet"

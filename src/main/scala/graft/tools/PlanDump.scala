@@ -21,6 +21,11 @@ import graft.operators.Dedup
   * memo-backed queries only show as a reloaded scan (`op_x7_memo_build`
   * is x7's memo build itself).
   *
+  * With the suffix `repeat` it dumps, instead, the named queries built
+  * and collected twice in one session: `<name>_miss.txt` and
+  * `<name>_hit.txt`, each the plan memo's outcome (`PlanMemo`), the
+  * query's tracker phases and its final executed plan.
+  *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [sfDir] [names]
   *          [key=value ... session confs]
   */
@@ -33,28 +38,44 @@ object PlanDump {
     val only = pos.lift(3).map(_.split(",").toSeq)
     val spark = Graft.session(confs = confs)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    def write(name: String, text: String): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/$name.txt"),
+        text.getBytes("UTF-8"))
+    def selected(names: Iterable[String]): Seq[String] =
+      names.toSeq.sorted.filter(n => only.forall(_.exists(n.startsWith)))
     def dump(plans: Map[String, (SparkSession, String) => DataFrame]): Unit =
-      plans.keys.toSeq.sorted
-        .filter(n => only.forall(_.exists(n.startsWith)))
-        .foreach { n =>
-          try {
-            val plan = plans(n)(spark, sfDir).queryExecution
-              .explainString(org.apache.spark.sql.execution.FormattedMode)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),
-              plan.getBytes("UTF-8"))
-            System.err.println(s"[plan] $n ok")
-          } catch { case e: Throwable =>
-            System.err.println(s"[plan] $n FAILED: ${e.getMessage}")
-          }
+      selected(plans.keys).foreach { n =>
+        try {
+          write(s"${n}_$suffix", plans(n)(spark, sfDir).queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode))
+          System.err.println(s"[plan] $n ok")
+        } catch { case e: Throwable =>
+          System.err.println(s"[plan] $n FAILED: ${e.getMessage}")
         }
+      }
     SparkEntry.warm(spark)
-    // operator plans first, before any memo build: a build's cached
-    // intermediates (released by RestMemo.frame, not by every memo form)
-    // would show up in them
-    dump(operators)
-    SparkEntry.prebuild(spark, sfDir)
-    dump(SparkEntry.queries)
+    if (suffix == "repeat")
+      selected(SparkEntry.queries.keys)
+        .foreach(n => Seq("miss", "hit").foreach { tag =>
+          val df = SparkEntry.queries(n)(spark, sfDir)
+          val outcome = graft.PlanMemo.drainOutcomes().getOrElse(n, "-")
+          df.collect()
+          val qe = df.queryExecution
+          val phases = qe.tracker.phases.toSeq.sortBy(_._2.startTimeMs)
+            .map { case (p, t) => s"$p ${t.durationMs} ms" }
+          write(s"${n}_$tag", s"plan memo: $outcome\n" +
+            s"tracker phases: ${phases.mkString(", ")}\n\n" +
+            qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+          System.err.println(s"[plan] $n $tag: $outcome")
+        })
+    else {
+      // operator plans first, before any memo build: a build's cached
+      // intermediates (released by RestMemo.frame, not by every memo
+      // form) would show up in them
+      dump(operators)
+      SparkEntry.prebuild(spark, sfDir)
+      dump(SparkEntry.queries)
+    }
     spark.stop()
   }
 

@@ -15,7 +15,10 @@ import graft.{Bench, Graft, SparkEntry}
   * without the (disabled) Spark UI: every completed stage of ≥ 50 ms
   * with its task count, input/shuffle bytes and records and GC
   * (`[stage]`), and the query's driver-side analyze+optimize+plan time
-  * on a fresh identical frame (`[plan ]`). Each pass's jobs carry the
+  * on a fresh identical frame (`[plan ]`; a plan memo hit skips analyze
+  * and optimize). Every `[time]` line carries the plan memo's outcome
+  * for that pass (`plan=hit|built|uncacheable:<reason>`, see
+  * `PlanMemo`). Each pass's jobs carry the
   * query's name as their job description, and a `[stage]` line names
   * its query and the operator scopes of its RDDs (`Exchange`,
   * `WholeStageCodegen (n)`, ...): the stage's call site on this Spark
@@ -63,13 +66,16 @@ object TimeQuery {
         case Right(dt) =>
           // let stage-completed events drain before the time line
           if (p == passes) Thread.sleep(300)
-          println(f"[time] pass$p $n%-28s $dt%8.2f s")
+          println(f"[time] pass$p $n%-28s $dt%8.2f s  plan=${planOutcome(n)}")
           best(n) = math.min(best.getOrElse(n, Double.MaxValue), dt)
           if (p == passes) {
             val f2 = SparkEntry.queries(n)(spark, sfDir)
+            val outcome = planOutcome(n)
             val t1 = System.nanoTime()
             f2.queryExecution.executedPlan
-            println(f"[plan ] $n ${(System.nanoTime() - t1) / 1e9}%8.2f s (analyze+optimize+plan)")
+            val phases = if (outcome == "hit") "plan" else "analyze+optimize+plan"
+            println(f"[plan ] $n ${(System.nanoTime() - t1) / 1e9}%8.2f s " +
+              s"($phases; plan=$outcome)")
           }
         case Left(msg) =>
           println(s"[time] pass$p $n failed: $msg")
@@ -84,6 +90,12 @@ object TimeQuery {
     spark.sparkContext.removeSparkListener(stages)
     spark.stop()
   }
+
+  /** The plan memo's outcome for `n`'s last build (`hit`, `built` or
+    * `uncacheable:<reason>`): a repeat that rebuilt shows here.
+    */
+  private def planOutcome(n: String): String =
+    graft.PlanMemo.drainOutcomes().getOrElse(n, "-")
 
   /** The distinct operator scopes of a stage's RDDs in the order the
     * rows flow (`Scan parquet -> WholeStageCodegen (1) -> Exchange`): the
