@@ -3,51 +3,66 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native SimHash signature computation.
   *
-  * Deliberately built on ENGINE-REPLICABLE integer arithmetic (two 31-bit
-  * polynomial rolling hashes + an LCG finalizer, all mod 2^31) rather than
-  * xxhash64: the identical signature is computable in ANSI-ish SQL
+  * Deliberately built on ENGINE-REPLICABLE integer arithmetic (31-bit
+  * polynomial rolling hashes + an LCG finalizer, all mod 2^31) rather
+  * than xxhash64: the identical signature is computable in ANSI-ish SQL
   * (list_reduce over codepoints), so the DuckDB oracle can mirror the
-  * whole near-dup pipeline bit-for-bit. The previous expression-library
-  * form (aggregate×zip_with over 64-long arrays per token) was evaluated
-  * by the interpreted higher-order-function machinery at ~ms/row; this is
-  * one compiled loop, ~µs/row.
+  * whole near-dup pipeline bit-for-bit.
   *
-  * Signature layout: 62 bits. Bit b (0-61) is 1 iff the sign-sum over
-  * tokens of (tokenhash bit b ? +1 : -1) is strictly positive, where bits
-  * 0-30 come from hash1 and bits 31-61 from hash2.
+  * Definition (what the SQL mirror computes). The text is trimmed of
+  * chars <= U+0020 at both ends and split on runs of the six regex `\s`
+  * chars (U+0020 and U+0009 to U+000D). A feature is a
+  * `shingleSize`-token shingle, its tokens joined by single spaces. A
+  * hash (init I, multiplier m) of a feature is `mix31(P)`, where
+  * `P = I`, then `P = P*m + c` for each code point c of the feature, all
+  * mod 2^31. Bit b (0-30) of a hash votes +1 if set and -1 if not;
+  * signature bit b is 1 iff its votes over all features sum to more
+  * than 0. Lane A takes bits 0-30 from hash (0, 31) and bits 31-61 from
+  * (7, 37); lane B takes them from (13, 41) and (29, 43).
+  *
+  * Evaluation: one pass, and no shingle strings. A polynomial hash
+  * composes over concatenation. Let `R(t)` be token t's hash from init
+  * 0 and `|t|` its code-point count; then `P_I(s t) = P_I(s)·m^|t| +
+  * R(t)`, and the joining space is one more step, `P·m + 32`. So each
+  * token's `R` and `m^|t|` are computed once per multiplier, and a
+  * shingle's hash is composed from its tokens' in k steps, instead of
+  * re-reading every token once for each shingle that contains it.
+  * Every step runs in `Int` arithmetic, which wraps mod 2^32. Since
+  * 2^31 divides 2^32, the value mod 2^31 stays exact throughout, and
+  * `& 0x7FFFFFFF` at the end recovers it; mix31 is affine, so it takes
+  * the unmasked value as well.
+  *
+  * Code points are read with `String.codePointAt` over the whole text.
+  * A token ends at a whitespace char or at the trimmed end, and neither
+  * can be a low surrogate. So a token decodes here exactly as it does as
+  * its own string and inside a joined shingle, lone surrogates included.
   */
 object SimHashImpl {
 
-  private final val M31 = 0x7FFFFFFFL + 1L // 2^31
+  // the four (init, multiplier) hashes: lane A is hashes 0-1, lane B 2-3
+  private val Inits = Array(0, 7, 13, 29)
+  private val Mults = Array(31, 37, 41, 43)
 
-  /** Two LCG mixing rounds mod 2^31 — shared by the SQL mirror. */
-  def mix31(x0: Long): Long = {
-    val x1 = (x0 * 2654435761L + 2654435769L) % M31
-    (x1 * 2654435761L + 40503L) % M31
-  }
+  /** Two LCG mixing rounds mod 2^31 — shared by the SQL mirror — of
+    * `x0` in [0, 2^31) (every caller's domain).
+    */
+  def mix31(x0: Long): Long = (mix(x0.toInt) & 0x7FFFFFFF).toLong
 
-  /** Polynomial rolling hash of the token's codepoints, mod 2^31. */
-  private def polyHash(s: String, init: Long, mult: Long): Long = {
-    var h = init
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      h = (h * mult + cp) % M31
-      i += Character.charCount(cp)
-    }
-    mix31(h)
-  }
+  // mix31 mod 2^32; 2654435761 and 2654435769 as Ints
+  private def mix(x: Int): Int =
+    (x * -1640531535 - 1640531527) * -1640531535 + 40503
 
   /** SimHash over `shingleSize`-token shingles (shingleSize=1 → plain
     * tokens). Fewer tokens than shingleSize → signature 0.
     */
   def simhash(text: UTF8String, shingleSize: Int): Long =
-    simhashSeeded(text, shingleSize, 0L, 31L, 7L, 37L)
+    signatures(text.toString, shingleSize, 0, 1)(0)
 
   /** Lane-B signature: same construction over an INDEPENDENT feature
     * hash family (different polynomial seeds/multipliers). (simhash,
@@ -55,111 +70,110 @@ object SimHashImpl {
     * near-dup path verifies on — see Dedup.simhashNearDups128.
     */
   def simhashB(text: UTF8String, shingleSize: Int): Long =
-    simhashSeeded(text, shingleSize, 13L, 41L, 29L, 43L)
+    signatures(text.toString, shingleSize, 1, 1)(0)
 
-  /** BOTH lanes in one tokenize+shingle pass: value-identical to
-    * `array(simhash(text, k), simhashB(text, k))` (same seeds, same
-    * polynomial hashes, same sign-sum), but the text is split and the
-    * shingle strings are built ONCE instead of once per lane — over half
-    * the per-row signature cost on typical documents (optimization
-    * round 17, guide §1.2 per-task work). SimHashSpec pins lane
-    * equality against the single-lane expressions.
+  /** BOTH lanes from one pass: value-identical to
+    * `array(simhash(text, k), simhashB(text, k))`, but the text is
+    * decoded and tokenized once for the two lanes.
     */
-  def simhashBoth(text: UTF8String, shingleSize: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val out = new Array[Long](2)
-    val t = text.toString.trim
-    if (t.isEmpty)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    val toks = t.split("\\s+")
-    val n = toks.length - shingleSize + 1
-    if (n <= 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    val counts = new Array[Int](124) // 0-61 lane A, 62-123 lane B
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i < n) {
-      val feature: String =
-        if (shingleSize == 1) toks(i)
-        else {
-          sb.setLength(0)
-          var j = 0
-          while (j < shingleSize) {
-            if (j > 0) sb.append(' ')
-            sb.append(toks(i + j))
-            j += 1
-          }
-          sb.toString
+  def simhashBoth(text: UTF8String, shingleSize: Int): ArrayData =
+    new GenericArrayData(signatures(text.toString, shingleSize, 0, 2))
+
+  /** Lanes `lane0 until lane0 + lanes` of the signature of the
+    * decoded text `s`.
+    */
+  private[graft] def signatures(s: String, k: Int, lane0: Int,
+      lanes: Int): Array[Long] = {
+    val out = new Array[Long](lanes)
+    var lo = 0
+    var hi = s.length
+    while (lo < hi && s.charAt(lo) <= ' ') lo += 1
+    while (hi > lo && s.charAt(hi - 1) <= ' ') hi -= 1
+    // token boundaries: starts(t) until ends(t)
+    var starts = new Array[Int](16)
+    var ends = new Array[Int](16)
+    var nTok = 0
+    var i = lo
+    while (i < hi) {
+      while (i < hi && isSpace(s.charAt(i))) i += 1
+      if (i < hi) {
+        if (nTok == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, nTok * 2)
+          ends = java.util.Arrays.copyOf(ends, nTok * 2)
         }
-      // lane A: seeds (0, 31) / (7, 37); lane B: (13, 41) / (29, 43) —
-      // the simhash/simhashB constants, unchanged
-      val a1 = polyHash(feature, 0L, 31L)
-      val a2 = polyHash(feature, 7L, 37L)
-      val b1 = polyHash(feature, 13L, 41L)
-      val b2 = polyHash(feature, 29L, 43L)
+        starts(nTok) = i
+        while (i < hi && !isSpace(s.charAt(i))) i += 1
+        ends(nTok) = i
+        nTok += 1
+      }
+    }
+    val n = nTok - k + 1
+    if (nTok == 0 || n <= 0) return out
+    val hashes = 2 * lanes
+    val h0 = 2 * lane0
+    // per token and hash: R (init 0) and m^len, at t * hashes + h
+    val raw = new Array[Int](nTok * hashes)
+    val pow = new Array[Int](nTok * hashes)
+    java.util.Arrays.fill(pow, 1)
+    var t = 0
+    while (t < nTok) {
+      var j = starts(t)
+      while (j < ends(t)) {
+        val cp = s.codePointAt(j)
+        var h = 0
+        while (h < hashes) {
+          val m = Mults(h0 + h)
+          val at = t * hashes + h
+          raw(at) = raw(at) * m + cp
+          pow(at) *= m
+          h += 1
+        }
+        j += Character.charCount(cp)
+      }
+      t += 1
+    }
+    // ones(h * 31 + b): features whose hash h has bit b set
+    val ones = new Array[Int](hashes * 31)
+    var f = 0
+    while (f < n) {
+      var h = 0
+      while (h < hashes) {
+        val m = Mults(h0 + h)
+        var x = Inits(h0 + h)
+        var j = 0
+        while (j < k) {
+          if (j > 0) x = x * m + ' '
+          val at = (f + j) * hashes + h
+          x = x * pow(at) + raw(at)
+          j += 1
+        }
+        x = mix(x)
+        var b = 0
+        while (b < 31) {
+          ones(h * 31 + b) += (x >>> b) & 1
+          b += 1
+        }
+        h += 1
+      }
+      f += 1
+    }
+    var l = 0
+    while (l < lanes) {
+      var sig = 0L
       var b = 0
-      while (b < 31) {
-        if (((a1 >> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        if (((a2 >> b) & 1L) == 1L) counts(31 + b) += 1 else counts(31 + b) -= 1
-        if (((b1 >> b) & 1L) == 1L) counts(62 + b) += 1 else counts(62 + b) -= 1
-        if (((b2 >> b) & 1L) == 1L) counts(93 + b) += 1 else counts(93 + b) -= 1
+      while (b < 62) {
+        if (2 * ones(l * 62 + b) > n) sig |= 1L << b
         b += 1
       }
-      i += 1
+      out(l) = sig
+      l += 1
     }
-    var siga = 0L
-    var sigb = 0L
-    var b = 0
-    while (b < 62) {
-      if (counts(b) > 0) siga |= (1L << b)
-      if (counts(62 + b) > 0) sigb |= (1L << b)
-      b += 1
-    }
-    out(0) = siga
-    out(1) = sigb
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    out
   }
 
-  private def simhashSeeded(text: UTF8String, shingleSize: Int,
-      i1: Long, m1: Long, i2: Long, m2: Long): Long = {
-    val t = text.toString.trim
-    if (t.isEmpty) return 0L
-    val toks = t.split("\\s+")
-    val n = toks.length - shingleSize + 1
-    if (n <= 0) return 0L
-    val counts = new Array[Int](62)
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i < n) {
-      val feature: String =
-        if (shingleSize == 1) toks(i)
-        else {
-          sb.setLength(0)
-          var j = 0
-          while (j < shingleSize) {
-            if (j > 0) sb.append(' ')
-            sb.append(toks(i + j))
-            j += 1
-          }
-          sb.toString
-        }
-      val h1 = polyHash(feature, i1, m1)
-      val h2 = polyHash(feature, i2, m2)
-      var b = 0
-      while (b < 31) {
-        if (((h1 >> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        if (((h2 >> b) & 1L) == 1L) counts(31 + b) += 1 else counts(31 + b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 62) {
-      if (counts(b) > 0) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
+  // the six chars of regex `\s`
+  private def isSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
 }
 
 /** simhash64(text, shingleSize) → long (62-bit signature; see SimHashImpl). */

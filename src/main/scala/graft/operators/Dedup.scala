@@ -175,6 +175,14 @@ object Dedup {
   private def asCross(pairs: DataFrame): DataFrame =
     pairs.withColumnsRenamed(Map("id1" -> "index_id", "id2" -> "batch_id"))
 
+  // The band builders below spell out one element per band in an
+  // `array(...)` of plain expressions, so the band Generate runs inside
+  // whole-stage codegen (a `transform` lambda would keep it interpreted).
+
+  /** `bits`-bit block `b` of the long column `sig`. */
+  private def block(sig: String, b: Int, bits: Int): Column =
+    shiftright(col(sig), b * bits).bitwiseAND(lit((1L << bits) - 1))
+
   /** Bucket values of a 64-bit `sig` cut into `bands` equal blocks
     * (64/bands bits each). Pigeonhole: a pair at Hamming distance
     * d <= bands - 1 has at least one clean block, so banded Hamming
@@ -183,10 +191,7 @@ object Dedup {
     */
   private def hammingBand(bands: Int): Column = {
     require(bands >= 2 && 64 % bands == 0, s"bands must divide 64: $bands")
-    val blockBits = 64 / bands
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => call_function("shiftright", col("sig"), b.cast("int") * blockBits)
-        .bitwiseAND(lit((1L << blockBits) - 1)))
+    array((0 until bands).map(block("sig", _, 64 / bands)): _*)
   }
 
   /** Two-lane SimHash bucket values: 8 × 16-bit blocks, bands 0–3 from
@@ -195,19 +200,15 @@ object Dedup {
     * serve both lanes in [[simhashNearDupsAgreement]].
     */
   private def twoLaneBand: Column =
-    transform(sequence(lit(0), lit(7)), b =>
-      when(b < 4,
-        call_function("shiftright", col("siga"), b.cast("int") * 16))
-        .otherwise(call_function("shiftright", col("sigb"),
-          (b.cast("int") - 4) * 16))
-        .bitwiseAND(lit(0xFFFFL)))
+    array((0 until 4).map(block("siga", _, 16)) ++
+      (0 until 4).map(block("sigb", _, 16)): _*)
 
   /** MinHash bucket values: the signature cut into `bands` slices of
     * k/bands components, each slice hashed with its band number. */
   private def minhashBand(k: Int, bands: Int): Column = {
     val rowsPerBand = k / bands
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))
+    array((0 until bands).map(b =>
+      hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand), lit(b))): _*)
   }
 
   /** MinHash's (id, set, sig) frame — ONE tokenize+shingle pass: the

@@ -767,9 +767,11 @@ object VectorSuite {
     // TextDedupSpec recall measurement for v7 compares against it).
     "v5_cosine_neardups" -> Q(
       (s, dir) => {
-        val cells = CellsShared.seed16(s, dir)
-        val target = cells.agg(min(col("cell")).as("cell"))
-        val members = cells.join(broadcast(target), "cell")
+        // the lowest cell by a window over all rows, not a one-row
+        // aggregate joined back: one stage, no broadcast job
+        val members = CellsShared.seed16(s, dir)
+          .withColumn("first", min(col("cell")).over())
+          .filter(col("cell") === col("first"))
         Similarity.cosineNearDups(members, "id", "vec", threshold = 0.4)
           .orderBy("id1", "id2")
       },

@@ -92,13 +92,62 @@ class ExpressionSpec extends AnyFunSuite {
     }
   }
 
+  test("simhash kernel equals the split-and-join reference on random, malformed and edge-case texts") {
+    import org.apache.spark.unsafe.types.UTF8String
+    import ExpressionSpec.RefSimHash
+    def check(u: UTF8String, k: Int): Unit = {
+      val (a, b) = (RefSimHash.simhash(u, k), RefSimHash.simhashB(u, k))
+      def what = s"k=$k text=${u.getBytes.map(x => f"$x%02x").mkString}"
+      assert(SimHashImpl.simhash(u, k) == a, s"lane A: $what")
+      assert(SimHashImpl.simhashB(u, k) == b, s"lane B: $what")
+      val both = SimHashImpl.simhashBoth(u, k)
+      assert(both.numElements() == 2 && both.getLong(0) == a &&
+        both.getLong(1) == b, s"both lanes: $what")
+    }
+    // every regex `\s` char, other C0 controls that trim (not split)
+    // drops, Unicode spaces that are token chars, BMP non-ASCII,
+    // surrogate pairs and lone surrogates
+    val alphabet = Seq(" ", "\t", "\n", "\u000B", "\f", "\r", "\u0001",
+      "\u001C", "\u00A0", "\u2003", "a", "b", "c", "ab", "Z", "9", "é",
+      "北", "ß", "\uD83D\uDE00", "\uD834\uDD1E", "\uD800", "\uDC00",
+      "\uDBFF", "\uFFFD")
+    val rnd = new scala.util.Random(20261020L)
+    def text(maxLen: Int): String =
+      Seq.fill(rnd.nextInt(maxLen + 1))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    // the String-level kernel: lone surrogates survive only here (the
+    // UTF-8 round trip replaces them)
+    for (i <- 0 until 100000) {
+      val s = text(if (i % 100 == 0) 400 else 40)
+      val k = 1 + i % 5
+      val want = Array(RefSimHash.sig(s, k, 0, 31, 7, 37),
+        RefSimHash.sig(s, k, 13, 41, 29, 43))
+      assert(SimHashImpl.signatures(s, k, 0, 2).sameElements(want),
+        s"k=$k text=${s.map(c => f"${c.toInt}%04x").mkString(" ")}")
+      check(UTF8String.fromString(s), k)
+    }
+    // malformed UTF-8: stray continuation bytes, overlongs, encoded
+    // surrogates, truncated sequences, bytes past U+10FFFF
+    val bytes = Array[Byte](0x20, 0x09, 0x0A, 0x61, 0x62, 0x80.toByte,
+      0xBF.toByte, 0xC0.toByte, 0xC3.toByte, 0xA9.toByte, 0xE2.toByte,
+      0x82.toByte, 0xAC.toByte, 0xED.toByte, 0xA0.toByte, 0xF0.toByte,
+      0x9F.toByte, 0xF4.toByte, 0x90.toByte, 0xFF.toByte)
+    for (i <- 0 until 20000)
+      check(UTF8String.fromBytes(Array.fill(rnd.nextInt(48))(bytes(rnd.nextInt(bytes.length)))),
+        1 + i % 5)
+    val edges = Seq("", " ", "   \t\n ", "\u0001\u001C", " \u0001 a \u001C ",
+      "a", "a b", "a  b\tc", "a b c", "a b c d", " a b c d e ",
+      "\u00A0a\u00A0 b", "\uD83D\uDE00 \uD83D", "a\uD83D \uDE00b c d e f")
+    for (s <- edges; k <- 1 to 5) check(UTF8String.fromString(s), k)
+  }
+
   test("mix31 stays in [0, 2^31) across the input domain") {
     val rnd = new scala.util.Random(42)
     val samples = Seq(0L, 1L, (1L << 31) - 1) ++
-      Seq.fill(500)(math.abs(rnd.nextLong()) % (1L << 31))
+      Seq.fill(100000)(math.abs(rnd.nextLong()) % (1L << 31))
     samples.foreach { x =>
       val v = SimHashImpl.mix31(x)
       assert(v >= 0L && v < (1L << 31), s"mix31($x) = $v out of range")
+      assert(v == ExpressionSpec.RefSimHash.mix31(x), s"mix31($x) differs from the reference")
     }
   }
 
@@ -139,5 +188,56 @@ class ExpressionSpec extends AnyFunSuite {
 
   test("simhash shingleSize=1 hashes tokens (order-insensitive by multiset)") {
     assert(sig("a b c a b c", 1) == sig("c b a c b a", 1))
+  }
+}
+
+object ExpressionSpec {
+
+  /** The SimHash signature as first written — `trim.split("\\s+")`,
+    * space-joined shingle strings and a 64-bit polynomial hash taken
+    * `% 2^31` per code point — kept as the reference the one-pass
+    * kernel must equal bit for bit.
+    */
+  object RefSimHash {
+    import org.apache.spark.unsafe.types.UTF8String
+    private final val M31 = 1L << 31
+
+    def mix31(x0: Long): Long = {
+      val x1 = (x0 * 2654435761L + 2654435769L) % M31
+      (x1 * 2654435761L + 40503L) % M31
+    }
+
+    private def polyHash(s: String, init: Long, mult: Long): Long = {
+      var h = init
+      var i = 0
+      while (i < s.length) {
+        val cp = s.codePointAt(i)
+        h = (h * mult + cp) % M31
+        i += Character.charCount(cp)
+      }
+      mix31(h)
+    }
+
+    def sig(text: String, k: Int, i1: Long, m1: Long, i2: Long, m2: Long): Long = {
+      val t = text.trim
+      if (t.isEmpty) return 0L
+      val toks = t.split("\\s+")
+      val n = toks.length - k + 1
+      if (n <= 0) return 0L
+      val counts = new Array[Int](62)
+      for (i <- 0 until n) {
+        val feature = toks.slice(i, i + k).mkString(" ")
+        val h1 = polyHash(feature, i1, m1)
+        val h2 = polyHash(feature, i2, m2)
+        for (b <- 0 until 31) {
+          counts(b) += (if (((h1 >> b) & 1L) == 1L) 1 else -1)
+          counts(31 + b) += (if (((h2 >> b) & 1L) == 1L) 1 else -1)
+        }
+      }
+      (0 until 62).foldLeft(0L)((sig, b) => if (counts(b) > 0) sig | (1L << b) else sig)
+    }
+
+    def simhash(text: UTF8String, k: Int): Long = sig(text.toString, k, 0, 31, 7, 37)
+    def simhashB(text: UTF8String, k: Int): Long = sig(text.toString, k, 13, 41, 29, 43)
   }
 }

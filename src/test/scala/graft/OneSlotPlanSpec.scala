@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -17,7 +18,8 @@ import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExcha
   * The suites share one `local[4]` context, and a JVM holds one context,
   * so the one-slot side runs in a child JVM on this JVM's class path
   * (the companion's `main`) with its own at-rest memo dir, so x7's and
-  * v5's memos are built, not reloaded, under `local[1]`.
+  * v5's memos are built, not reloaded, under `local[1]`. Once its memos
+  * are built, v5 runs as one job there.
   */
 class OneSlotPlanSpec extends SparkSpec {
   import OneSlotPlanSpec._
@@ -40,10 +42,13 @@ class OneSlotPlanSpec extends SparkSpec {
       if (!done) child.destroyForcibly()
       def tail = Files.readAllLines(log).asScala.takeRight(40).mkString("\n")
       assert(done && child.exitValue == 0, s"one-slot child failed:\n$tail")
-      val one = Files.readAllLines(out).asScala.map(_.split("\t")).map {
+      val lines = Files.readAllLines(out).asScala.map(_.split("\t"))
+      val one = lines.collect {
         case Array(n, exchanges, digest) => n -> (exchanges.toInt, digest)
       }.toMap
       assert(one.keySet == Queries.toSet)
+      assert(lines.collect { case Array("v5 jobs", n) => n.toInt } == Seq(1),
+        "v5 at one slot does not run as one job")
       Queries.foreach { n =>
         val (exchanges, digest) = one(n)
         assert(exchanges == 0, s"$n: $exchanges shuffle exchanges at one slot")
@@ -97,8 +102,28 @@ object OneSlotPlanSpec {
     case _ => p +: (p.children ++ p.subqueries).flatMap(flatten)
   }
 
+  /** Jobs a repeat run of v5 starts, its memos built. */
+  def v5Jobs(spark: SparkSession): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val df = SparkEntry.queries("v5_cosine_neardups")(spark, SfDir)
+    org.apache.spark.ListenerBusProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      df.collect()
+      org.apache.spark.ListenerBusProbe.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
   /** The one-slot side: `<restDir> <out>`; writes one
-    * `name<TAB>exchanges<TAB>digest` line per query.
+    * `name<TAB>exchanges<TAB>digest` line per query, then
+    * `v5 jobs<TAB>n`.
     */
   def main(args: Array[String]): Unit = {
     val spark = Graft.session("local[1]", 1, Seq("graft.memo.restDir" -> args(0)))
@@ -108,7 +133,7 @@ object OneSlotPlanSpec {
         val (digest, exchanges) = answer(spark, n)
         s"$n\t$exchanges\t$digest"
       }
-      Files.write(Path.of(args(1)), lines.asJava)
+      Files.write(Path.of(args(1)), (lines :+ s"v5 jobs\t${v5Jobs(spark)}").asJava)
     } finally spark.stop()
   }
 }

@@ -42,7 +42,7 @@ class PlanGuardSpec extends SparkSpec {
   // plan-node facts):
   //   v5 — the exact parity witness joins the members of ONE quantizer
   //     cell on id1 < id2 alone; the bound is the cell-membership
-  //     semi-join;
+  //     filter;
   //   v2 — the brute-force baseline broadcasts a query side filtered to
   //     vec_id < 5: at most 5 rows at ANY corpus size (unique key), but
   //     a Filter node carries no cardinality bound
@@ -263,6 +263,23 @@ class PlanGuardSpec extends SparkSpec {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
       case m: InMemoryRelation => m
     }.isEmpty, logical)
+    // the band Generate runs in generated code: no transform lambda
+    // anywhere, and the (band, block) posexplode sits in a codegen stage
+    val nodes = flatten(plan)
+    assert(!nodes.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayTransform]))), plan)
+    def isBand(p: SparkPlan) = p match {
+      case g: GenerateExec => g.generatorOutput.map(_.name) == Seq("band", "block")
+      case _ => false
+    }
+    // a codegen stage's own operators: its subtree down to InputAdapters
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(fused)
+    }
+    val compiled = nodes.collect { case w: WholeStageCodegenExec => fused(w.child) }.flatten
+    assert(nodes.exists(isBand), plan)
+    assert(nodes.filter(isBand).forall(g => compiled.exists(_ eq g)), plan)
   }
 
   test("x7's memo build leaves no cached intermediates behind") {
