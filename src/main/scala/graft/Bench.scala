@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 import graft.Json.{arr, num, obj, str}
 
@@ -54,18 +55,22 @@ object Bench {
   }
 
   /** One pass over `queries` in the given order while `keepGoing()`
-    * holds: the per-query seconds of the queries that returned, and the
+    * holds: the per-query seconds of the queries that returned, the
     * error message of each one that threw (left out of the times, so no
-    * total counts it).
+    * total counts it), and the memo-shared queries: those whose build
+    * consulted a memo slot holding built state (`SessionMemo.recorded`).
     */
   private[graft] def runPass(spark: SparkSession, tag: String, dir: String,
       queries: Seq[(String, Query)], keepGoing: () => Boolean = () => true)
-      : (Map[String, Double], Map[String, String]) = {
+      : (Map[String, Double], Map[String, String], Set[String]) = {
     val times = Map.newBuilder[String, Double]
     val failed = Map.newBuilder[String, String]
+    val shared = Set.newBuilder[String]
     queries.iterator.takeWhile(_ => keepGoing()).foreach { case (name, fn) =>
       val g0 = gcMillis()
-      timeCount(spark, dir, fn) match {
+      val (outcome, deps) = SessionMemo.recorded(timeCount(spark, dir, fn))
+      if (deps.exists(holdsState)) shared += name
+      outcome match {
         case Right(dt) =>
           System.err.println(f"[$tag] $name%-28s $dt%8.2f s  gc=${gcMillis() - g0}%5d ms")
           times += name -> dt
@@ -82,18 +87,30 @@ object Bench {
       // unpersists non-blocking and empties the entry list.
       spark.catalog.clearCache()
     }
-    (times.result(), failed.result())
+    (times.result(), failed.result(), shared.result())
+  }
+
+  /** False for a slot that holds only a plan over table reads (a
+    * read-plan or lane entry); true for a memo of built state, each of
+    * which a prebuild item also resolves.
+    */
+  private def holdsState(d: SessionMemo.Dep): Boolean = d.entry.value match {
+    case df: Dataset[_] =>
+      !df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LogicalRelation])
+    case _ => true
   }
 
   /** One section's outcome: build seconds per item (with the
     * [[Prebuild]] sentinels), min seconds per query over the passes,
     * pass-1 seconds, how many queries pass 2 timed, the message of every
-    * query that threw in any pass (out of both time maps), and the
-    * at-rest memo outcomes (name → built/reloaded).
+    * query that threw in any pass (out of both time maps), the at-rest
+    * memo outcomes (name → built/reloaded), and the memo-shared queries
+    * of every pass ([[runPass]]).
     */
   private[graft] final case class Section(builds: Seq[(String, Double)],
       times: Map[String, Double], pass1: Map[String, Double], pass2N: Int,
-      failed: Map[String, String], memoRest: Map[String, String])
+      failed: Map[String, String], memoRest: Map[String, String],
+      memoShared: Set[String])
 
   /** One section: the timed builds phase (`build` gets the go-test,
     * which stops it halfway to `until`), so the queries are timed warm;
@@ -114,16 +131,18 @@ object Bench {
     builds.foreach { case (n, s) => System.err.println(f"[$tag-build] $n%-28s $s%8.2f s") }
     mark("after_builds")
     var failed = Map.empty[String, String]
+    var shared = Set.empty[String]
     val runs = (1 to passes).map { p =>
-      val (t, f) = runPass(spark, if (p == 1) tag else s"$tag$p", dir, queries,
+      val (t, f, m) = runPass(spark, if (p == 1) tag else s"$tag$p", dir, queries,
         if (p == 1 && !cutFirst) () => true else () => System.nanoTime() < until)
       failed ++= f
+      shared ++= m
       if (p == 1) mark("after_pass1")
       t
     }
     val pass1 = runs.head -- failed.keys
     Section(builds, pass1.transform((q, _) => runs.flatMap(_.get(q)).min),
-      pass1, runs.lift(1).fold(0)(_.size), failed, RestMemo.drainOutcomes())
+      pass1, runs.lift(1).fold(0)(_.size), failed, RestMemo.drainOutcomes(), shared)
   }
 
   private def nums(kvs: Seq[(String, Double)]): String =
@@ -182,7 +201,7 @@ object Bench {
     val line = obj(Seq("metric" -> str("total"), "value" -> total, "unit" -> str("sec"),
       "queries" -> nums(primary.times.toSeq.sortBy(_._1)),
       "failed" -> strs(primary.failed), "pass2_n" -> primary.pass2N.toString,
-      "memo_shared" -> arr(SparkEntry.memoSharedQueries.toSeq.sorted),
+      "memo_shared" -> arr(primary.memoShared.toSeq.sorted),
       "sf" -> str(sfDir)) ++ sectionFields("", primary) ++ sf1Fields ++
       perDir("layout_skip", graft.queries.Core.layoutSkip) { (read, rows) =>
         Seq("rows_read" -> read.toString, "rows_total" -> rows.toString,

@@ -272,14 +272,16 @@ object RestMemo {
     }
 
   /** One-DataFrame memo, lineage-truncated in memory either way (the
-    * CellsShared/DedupShared form). `build` must return an EAGERLY
-    * TRUNCATED frame (Graft.truncate/localCheckpoint); the reload path
-    * reads the sidecar and truncates it into the identical in-memory
-    * form. Released via [[Graft.releaseTruncated]] by the SessionMemo
-    * lifecycle. `build` runs inside its own [[Graft.cacheScope]]: the
-    * intermediates it persists (e.g. MinHash's shingle-set cache) are
-    * released once the truncated result exists, instead of staying
-    * cached behind the memo for the rest of the session.
+    * dedup pairs/closures and cell-assignment form). `build` returns a
+    * plain plan; the memo truncates it eagerly (Graft.truncate) on the
+    * build path, and the reload path reads the sidecar and truncates it
+    * into the identical in-memory form. Released via
+    * [[Graft.releaseTruncated]] by the SessionMemo lifecycle. The build
+    * and its truncation run inside one [[Graft.cacheScope]]: what the
+    * build persists through [[Graft.trackedPersist]] (e.g. MinHash's
+    * shingle-set cache, a corpus its branches share) is released once
+    * the truncated value exists, instead of staying cached behind the
+    * memo for the rest of the session.
     *
     * The sidecar key carries the engine's code stamp, so a rebuilt
     * engine rebuilds. Within one engine build, two different computes
@@ -303,9 +305,9 @@ object RestMemo {
   def frame(s: SparkSession, dataPaths: Seq[String], what: String)(
       build: => DataFrame): DataFrame =
     SessionMemo.getOrCompute(s, dataPaths, what) {
-      Graft.oneSlotFrame(loadOrBuild(s, dataPaths, what)(Graft.cacheScope(build))(
-        v => (Seq("data" -> v), Map.empty),
-        (fs, _) => Graft.truncate(fs("data"), eager = true)))
+      Graft.oneSlotFrame(loadOrBuild(s, dataPaths, what)(
+        Graft.cacheScope(truncated(build)))(
+        v => (Seq("data" -> v), Map.empty), (fs, _) => truncated(fs("data"))))
     }(Graft.releaseTruncated)
 
   /** Collected-LITERAL memo (the IvfShared quantizer form): the value
@@ -343,8 +345,8 @@ object RestMemo {
       loadOrBuild(s, Seq(dataPath), what)(build)(parts, reassemble)
     }(release)
 
-  /** Reload helper for [[multi]] reassemblers: truncated in-memory form
-    * for data-sized frames.
+  /** Eager truncation: the in-memory form of [[frame]] values, and the
+    * reload helper for data-sized [[multi]] parts.
     */
   def truncated(df: DataFrame): DataFrame = Graft.truncate(df, eager = true)
 
@@ -354,13 +356,11 @@ object RestMemo {
   def literal(s: SparkSession, df: DataFrame): DataFrame = localize(s, df)
 
   // --- marker-based reuse for caller-written derived COPIES -------------
-  // The layout memos (sorted/z-ordered/bloom lineitem copies) write
-  // their at-rest artifact themselves; RestMemo only supplies the
-  // fingerprint bookkeeping: `freshCopy` says whether `path` already
-  // holds a copy of the CURRENT `srcPath` contents, `stampCopy` records
-  // it after a successful write, and the caller re-runs its (cheap)
-  // evidence query either way so the bench artifact's layout_skip
-  // section stays populated in reloading runs too.
+  // The layout memos (sorted/z-ordered/bloom/bucketed lineitem copies)
+  // write their at-rest artifact themselves; RestMemo only supplies the
+  // fingerprint bookkeeping through [[copy]], and the caller re-runs its
+  // (cheap) evidence query either way so the bench artifact's
+  // layout_skip section stays populated in reloading runs too.
 
   private val CopyMarker = "_GRAFT_REST_SRC"
 
@@ -381,7 +381,24 @@ object RestMemo {
     base.toString
   }
 
-  def freshCopy(srcPath: String, path: String, tag: String = "v1"): Boolean =
+  /** Reuse-or-write for caller-written copies: each `src -> path` pair
+    * is fresh when `path` carries a marker of `src`'s current contents
+    * under tag `what`. When every pair is fresh nothing is written;
+    * otherwise `write` runs and every marker is stamped. The outcome is
+    * recorded under `what`. True when the copies were reused.
+    */
+  def copy(what: String, copies: Seq[(String, String)])(
+      write: => Unit): Boolean = {
+    val fresh = copies.forall { case (src, path) => freshCopy(src, path, what) }
+    if (!fresh) {
+      write
+      copies.foreach { case (src, path) => stampCopy(src, path, what) }
+    }
+    outcomes.put(what, if (fresh) "reloaded" else "built")
+    fresh
+  }
+
+  private def freshCopy(srcPath: String, path: String, tag: String): Boolean =
     try {
       val f = Paths.get(path, CopyMarker)
       Files.isRegularFile(f) && ownedByUs(Paths.get(path)) &&
@@ -389,15 +406,9 @@ object RestMemo {
           restFingerprint(srcPath) + ":" + tag
     } catch { case _: Throwable => false }
 
-  def stampCopy(srcPath: String, path: String, tag: String = "v1"): Unit =
+  private def stampCopy(srcPath: String, path: String, tag: String): Unit =
     try Files.write(Paths.get(path, CopyMarker),
       (restFingerprint(srcPath) + ":" + tag).getBytes(UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"[rest-memo] stamp $path failed: ${e.getMessage}") }
-
-  /** Outcome hook for copy-style memos (the frame/multi paths record
-    * their own).
-    */
-  def recordOutcome(what: String, outcome: String): Unit =
-    outcomes.put(what, outcome)
 }

@@ -19,20 +19,6 @@ object SparkEntry {
       EventSuite.queries ++ CleanSuite.queries ++ OsmSuite.queries ++
       MultimodalSuite.queries ++ ErcotSuite.queries
 
-  /** Queries whose per-query bench time reads per-session memoized
-    * state (trained indexes, dedup pipelines) rather than standing
-    * alone — the first family member executed pays the build. Disclosed
-    * as `memo_shared` in the bench artifact so cross-round per-query
-    * comparisons stay interpretable.
-    */
-  val memoSharedQueries: Set[String] =
-    TextSuite.memoShared ++ VectorSuite.memoShared ++
-      MultimodalSuite.memoShared +
-      "p14_layout_range_skip" + // first run pays the range-sorted write
-      "p15_zorder_two_col_skip" + // first run pays the z-ordered write
-      "p16_bloom_point_lookup" + // first run pays the bloom-layout write
-      "p17_bucketed_join_zero_shuffle" // first run pays the bucketed writes
-
   /** One-time fixture builds (the ~50 MB OSM extract) — called by
     * Bench/Verify up front so no single query's timing pays the build.
     */

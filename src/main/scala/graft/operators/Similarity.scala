@@ -392,35 +392,19 @@ object Similarity {
     centroids
   }
 
-  /** `prebuiltCells` — a precomputed corpus assignment (id, vec, cell),
-    * e.g. a session memo of [[quantizerCells]]: the ingest-time half of
-    * IVF (quantizer training + corpus assignment both happen once at
-    * index build); query time is then probe-assignment + the cell
-    * equi-join only. Must have been built with the SAME quantizer the
-    * probe side uses (pass its centroids via `prebuiltCentroids` when
-    * they aren't the deterministic seeds).
+  /** FLAT IVF top-k over the `nCells` lowest-id seed centroids: every
+    * corpus vector and probe is assigned by the full corpus×centroid
+    * scan — the reference [[ivfTopKHier]] is checked against.
     */
   def ivfTopK(queries: DataFrame, candidates: DataFrame,
       idCol: String, vecCol: String, topK: Int,
-      nCells: Int = 16, nProbe: Int = 2, exact: Boolean = false,
-      kmeansIterations: Int = 0,
-      prebuiltCentroids: Option[DataFrame] = None,
-      prebuiltCells: Option[DataFrame] = None): DataFrame = {
-    val c0 = graft.Graft.ensureParallelism(candidates)
+      nCells: Int = 16, nProbe: Int = 2, exact: Boolean = false): DataFrame = {
+    val c = graft.Graft.ensureParallelism(candidates)
       .select(col(idCol).as("vec_id"), col(vecCol).as("cvec"))
-    // persisted only when training runs here (every Lloyd iteration
-    // re-reads it); with prebuilt centroids the corpus is read once
-    val needTrain = prebuiltCentroids.isEmpty && kmeansIterations > 0
-    val c = if (needTrain) c0.persist(StorageLevel.MEMORY_AND_DISK) else c0
-    val centroids = prebuiltCentroids.getOrElse(
-      if (kmeansIterations > 0)
-        kmeansCentroids(c, "vec_id", "cvec", nCells, kmeansIterations)
-      else lowestIdCentroids(c, "vec_id", "cvec", nCells))
+    val centroids = lowestIdCentroids(c, "vec_id", "cvec", nCells)
     def assign(df: DataFrame, id: String, vec: String, keep: Int): DataFrame =
       assignToCells(df, id, vec, centroids, keep)
-    val assigned = prebuiltCells
-      .map(_.select(col("id").as("vec_id"), col("vec").as("cvec"), col("cell")))
-      .getOrElse(assign(c, "vec_id", "cvec", keep = 1))
+    val assigned = assign(c, "vec_id", "cvec", keep = 1)
     val probes = assign(
       queries.select(col(idCol).as("qid"), col(vecCol).as("qvec")),
       "qid", "qvec", keep = nProbe)
@@ -1455,7 +1439,7 @@ object Similarity {
       m: Int, nCodes: Int, iterations: Int): DataFrame =
     ivfPqTopK(queries,
       ivfPqIndex(corpus, idCol, vecCol, nCells, m, nCodes, iterations),
-      idCol, vecCol, topK, nProbe, hierProbes = false, superProbe = 3)
+      idCol, vecCol, topK, nProbe, superProbe = 3)
 
   /** The at-rest state of residual-encoded IVF-PQ (IVFADC — Jégou et
     * al., "Product Quantization for Nearest Neighbor Search", §III):
@@ -1481,18 +1465,17 @@ object Similarity {
     * state (a trained kmeansCentroids broadcast; a (id, vec, cell)
     * corpus assignment under it): the at-rest split that lets the
     * IVFADC index share its coarse stage with the plain IVF topK (v8)
-    * instead of re-deriving both per build. `hierAssign=true` runs any
-    * self-built corpus assignment through the two-level hierarchy
-    * (O(n·√nCells)) — required once `nCells` follows [[cellsFor]],
-    * where the flat product is O(n²/cellSize).
+    * instead of re-deriving both per build. Without them the quantizer
+    * is the `nCells` lowest-id seeds and the corpus is assigned through
+    * the two-level hierarchy (O(n·√nCells)) — required once `nCells`
+    * follows [[cellsFor]], where the flat product is O(n²/cellSize).
     */
   def ivfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, m: Int = 8, nCodes: Int = 16,
-      iterations: Int = 1, coarseKmeansIterations: Int = 0,
-      trainCap: Int = 2048,
+      iterations: Int = 1, trainCap: Int = 2048,
       prebuiltCentroids: Option[DataFrame] = None,
       prebuiltCells: Option[DataFrame] = None,
-      hierAssign: Boolean = false, superProbe: Int = 3): IvfPqIndex = {
+      superProbe: Int = 3): IvfPqIndex = {
     val c = graft.Graft.ensureParallelism(corpus)
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1504,17 +1487,11 @@ object Similarity {
     // removes the cell's explained variance, while vec − sample_vec on
     // near-random data roughly DOUBLES it
     val cents = prebuiltCentroids.getOrElse(
-      if (coarseKmeansIterations > 0)
-        kmeansCentroids(c, "id", "vec", nCells, coarseKmeansIterations,
-          trainCap = trainCap, hierTrain = hierAssign,
-          superProbe = superProbe)
-      else lowestIdCentroids(c, "id", "vec", nCells))
+      lowestIdCentroids(c, "id", "vec", nCells))
     val cells = prebuiltCells.getOrElse(
-      if (hierAssign)
-        assignWithHierarchy(c, hierarchyOfCentroids(cents, nCells),
-          nProbe = 1, superProbe = superProbe)
-          .select("id", "vec", "cell")
-      else assignToCells(c, "id", "vec", cents, keep = 1))
+      assignWithHierarchy(c, hierarchyOfCentroids(cents, nCells),
+        nProbe = 1, superProbe = superProbe)
+        .select("id", "vec", "cell"))
     // residuals: vec − centroid(cell), exact double differences of
     // floats — engine-replicable elementwise arithmetic
     val res = cells
@@ -1544,11 +1521,11 @@ object Similarity {
     * broadcast. Integer-grid quantized entries keep the per-pair sum
     * exact BIGINT arithmetic, deterministic under any partitioning.
     */
-  /** `hierProbes=true` assigns queries to their probed cells through the
-    * index's two-level hierarchy (O(√nCells) comparisons per query)
-    * instead of the flat centroid scan — the query-side half of the
-    * [[cellsFor]] contract (flat probing re-grows O(nCells) = O(n) per
-    * query once cells scale with the corpus).
+  /** Queries are assigned to their probed cells through the index's
+    * two-level hierarchy (O(√nCells) comparisons per query, `superProbe`
+    * supers) — the query-side half of the [[cellsFor]] contract (flat
+    * probing re-grows O(nCells) = O(n) per query once cells scale with
+    * the corpus).
     *
     * `refine > 1` adds the exact re-rank tier over the IVFADC shortlist
     * (FAISS `IndexRefineFlat` over `IVFx,PQy` — the full production
@@ -1562,18 +1539,11 @@ object Similarity {
     */
   def ivfPqTopK(queries: DataFrame, idx: IvfPqIndex,
       idCol: String, vecCol: String, topK: Int, nProbe: Int,
-      hierProbes: Boolean = false, superProbe: Int = 3,
-      refine: Int = 1): DataFrame = {
-    val probes =
-      if (hierProbes)
-        assignWithHierarchy(
-          queries.select(col(idCol).as("id"), col(vecCol).as("vec")),
-          hierarchyOfCentroids(idx.centroids, idx.nCells),
-          nProbe, superProbe)
-          .select(col("id").as("qid"), col("vec").as("qvec"), col("cell"))
-      else assignToCells(
-        queries.select(col(idCol).as("qid"), col(vecCol).as("qvec")),
-        "qid", "qvec", idx.centroids, keep = nProbe)
+      superProbe: Int = 3, refine: Int = 1): DataFrame = {
+    val probes = assignWithHierarchy(
+        queries.select(col(idCol).as("id"), col(vecCol).as("vec")),
+        hierarchyOfCentroids(idx.centroids, idx.nCells), nProbe, superProbe)
+      .select(col("id").as("qid"), col("vec").as("qvec"), col("cell"))
     val qres = probes.join(idx.centroids, "cell")
       .select(col("qid"), col("cell"),
         zip_with(col("qvec"), col("centroid"),

@@ -675,9 +675,7 @@ object Core {
         // the copy is an AT-REST artifact: a fresh marker (fingerprint
         // of the source table) means a previous session already wrote
         // this exact layout — skip the write, keep the evidence query
-        if (RestMemo.freshCopy(src, path, "layout-sorted-v1"))
-          RestMemo.recordOutcome("layout-sorted-v1", "reloaded")
-        else {
+        RestMemo.copy("layout-sorted-v1", Seq(src -> path)) {
           // block size rides the WRITE's own options (per-job hadoop
           // conf), never the session-shared configuration — a concurrent
           // parquet write in the same session must not inherit 1 MiB
@@ -687,8 +685,6 @@ object Core {
               "l_quantity", "l_extendedprice"),
             path, Seq("l_orderkey"), numFiles = 8,
             options = Map("parquet.block.size" -> (1 << 20).toString))
-          RestMemo.stampCopy(src, path, "layout-sorted-v1")
-          RestMemo.recordOutcome("layout-sorted-v1", "built")
         }
         // measure the skip once per session (cheap — the narrow pruned
         // scan itself): rows the pushed BETWEEN actually decodes
@@ -746,17 +742,13 @@ object Core {
           dir.replaceAll("[^A-Za-z0-9.]", "_") + "_z"
         val li = table(s, dir, "lineitem")
           .select("l_orderkey", "l_partkey", "l_quantity")
-        if (RestMemo.freshCopy(src, path, "layout-zorder-v1"))
-          RestMemo.recordOutcome("layout-zorder-v1", "reloaded")
-        else {
+        RestMemo.copy("layout-zorder-v1", Seq(src -> path)) {
           val mx = li.agg(max("l_orderkey"), max("l_partkey")).head()
           val z = Sinks.zValue(
             Sinks.quantize(col("l_orderkey"), 0, mx.getLong(0).toDouble, 12),
             Sinks.quantize(col("l_partkey"), 0, mx.getLong(1).toDouble, 12), 12)
           Sinks.writeZOrdered(li, path, z, numFiles = 8,
             options = Map("parquet.block.size" -> (1 << 20).toString))
-          RestMemo.stampCopy(src, path, "layout-zorder-v1")
-          RestMemo.recordOutcome("layout-zorder-v1", "built")
         }
         // bare read: a fresh scan of the just-written copy, measured once
         val narrow = s.read.parquet(path)
@@ -791,17 +783,13 @@ object Core {
               col("l_linenumber").cast("int")).as("k"),
             col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         val total = li.count()
-        if (RestMemo.freshCopy(src, path, "layout-bloom-v2"))
-          RestMemo.recordOutcome("layout-bloom-v2", "reloaded")
-        else {
+        RestMemo.copy("layout-bloom-v2", Seq(src -> path)) {
           li.repartition(8).write.mode("overwrite")
             .option("parquet.block.size", (1 << 20).toString)
             .option("parquet.bloom.filter.enabled#k", "true")
             .option("parquet.bloom.filter.expected.ndv#k",
               math.max(1024L, total).toString)
             .parquet(path)
-          RestMemo.stampCopy(src, path, "layout-bloom-v2")
-          RestMemo.recordOutcome("layout-bloom-v2", "built")
         }
         // CAVEAT (driver scalar): this full-table MIN exists only to
         // derive a literal the bloom pushdown requires — in production
@@ -887,12 +875,8 @@ object Core {
             s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS " +
             s"LOCATION '$path'")
         }
-        if (RestMemo.freshCopy(liSrc, liPath, "layout-bucketed-v1") &&
-            RestMemo.freshCopy(orSrc, orPath, "layout-bucketed-v1")) {
-          register(lt, liPath, "l_orderkey")
-          register(ot, orPath, "o_orderkey")
-          RestMemo.recordOutcome("layout-bucketed-v1", "reloaded")
-        } else {
+        val reused = RestMemo.copy("layout-bucketed-v1",
+            Seq(liSrc -> liPath, orSrc -> orPath)) {
           table(s, dir, "lineitem").select("l_orderkey", "l_extendedprice")
             .repartition(8, col("l_orderkey"))
             .write.mode("overwrite").option("path", liPath)
@@ -901,9 +885,11 @@ object Core {
             .repartition(8, col("o_orderkey"))
             .write.mode("overwrite").option("path", orPath)
             .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
-          RestMemo.stampCopy(liSrc, liPath, "layout-bucketed-v1")
-          RestMemo.stampCopy(orSrc, orPath, "layout-bucketed-v1")
-          RestMemo.recordOutcome("layout-bucketed-v1", "built")
+        }
+        // saveAsTable registered written copies; reused ones register here
+        if (reused) {
+          register(lt, liPath, "l_orderkey")
+          register(ot, orPath, "o_orderkey")
         }
         // evidence run (built AND reloaded paths): execute the declared
         // join once, then count shuffle exchanges below the join in the

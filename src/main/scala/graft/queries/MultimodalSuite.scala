@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Graft, SessionMemo}
-import graft.operators.Multimodal
+import graft.{Graft, RestMemo, SessionMemo}
+import graft.operators.{Dedup, Multimodal}
 import graft.pipelines.MultimodalFixture
 
 /** Multimodal binary-column queries over the ≥100 MB asset fixture
@@ -73,6 +73,26 @@ object MultimodalSuite {
   private def AT = rp(MultimodalFixture.atrimPath)
   private def AP = rp(MultimodalFixture.apercPath)
 
+  /** Every memo below: ensure the fixture (it must exist BEFORE the
+    * memo fingerprints its directories), then [[RestMemo.frame]] over
+    * the lanes the build reads. A clusters memo resolves its pairs
+    * BEFORE the clusters slot computes (the DedupShared re-entrancy
+    * rule at TextSuite), so its pairs are never passed by name.
+    */
+  private def memo(s: SparkSession, paths: Seq[String], what: String)(
+      build: => DataFrame): DataFrame = {
+    MultimodalFixture.ensure(s)
+    RestMemo.frame(s, paths, what)(build)
+  }
+
+  /** (id, sig) from a per-asset hash dataset. */
+  private def idSig(sigs: DataFrame): DataFrame =
+    sigs.select(col("asset_id").as("id"), col("dhash").as("sig"))
+
+  /** (id, slot, sig) from a per-(asset, slot) hash dataset. */
+  private def idSlotSig(sigs: DataFrame): DataFrame =
+    sigs.select(col("asset_id").as("id"), col("slot"), col("dhash").as("sig"))
+
   /** Per-session memo of m4's chunk-fingerprint table — the ingest-time
     * artifact of media dedup (chunk fingerprints are computed once when
     * an asset lands, then every dedup pass reads fingerprints, not
@@ -91,28 +111,22 @@ object MultimodalSuite {
     * concat per chunk — O(len²/chunk) byte copying (~50× slower
     * measured on this fixture).
     */
-  private object ChunkShared {
-    import graft.{Graft, RestMemo}
-    private val ch = 1024 // bytes per chunk
-    def table(s: SparkSession): DataFrame = {
-      // fixture must exist BEFORE the memo fingerprints its directory
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.assetsPath, "m4-chunks") {
-        val zeroFp = {
-          val md = java.security.MessageDigest.getInstance("MD5")
-          md.digest(Array.fill[Byte](ch)(0.toByte)).map("%02x".format(_)).mkString
-        }
-        val base = assets(s).select(col("asset_id").cast("long").as("doc_id"),
-          Multimodal.chunkFingerprintDoc(col("media"), ch).as("chunks"))
-        val variants = base.filter(col("doc_id") < 64)
-          .select((col("doc_id") + 10000).as("doc_id"),
-            when(col("chunks") === "", lit(zeroFp))
-              .otherwise(concat(lit(zeroFp), expr("substring(chunks, 33)")))
-              .as("chunks"))
-        Graft.truncate(base.unionByName(variants), eager = true)
+  private def chunks(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.assetsPath), "m4-chunks") {
+      val ch = 1024 // bytes per chunk
+      val zeroFp = {
+        val md = java.security.MessageDigest.getInstance("MD5")
+        md.digest(Array.fill[Byte](ch)(0.toByte)).map("%02x".format(_)).mkString
       }
+      val base = assets(s).select(col("asset_id").cast("long").as("doc_id"),
+        Multimodal.chunkFingerprintDoc(col("media"), ch).as("chunks"))
+      val variants = base.filter(col("doc_id") < 64)
+        .select((col("doc_id") + 10000).as("doc_id"),
+          when(col("chunks") === "", lit(zeroFp))
+            .otherwise(concat(lit(zeroFp), expr("substring(chunks, 33)")))
+            .as("chunks"))
+      base.unionByName(variants)
     }
-  }
 
   /** Per-session memos of the media near-dup PAIRS (the m4 output —
     * one MinHash+LSH+verify pass per session, ONE parameter set) and
@@ -120,71 +134,36 @@ object MultimodalSuite {
     * the text side's DedupShared.pairs/clusters: m4 and m5 read the
     * identical pair computation, so the parameters cannot drift apart.
     */
-  private object MediaDedupShared {
-    import graft.{Graft, RestMemo}
-    private val K = 32; private val Bands = 16
-    private val Shingle = 1; private val Threshold = 0.5
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.assetsPath, "m4-pairs") {
-        Graft.truncate(graft.operators.Dedup.minhashNearDups(
-          ChunkShared.table(s), "doc_id", "chunks",
-          k = K, bands = Bands, shingleSize = Shingle,
-          threshold = Threshold), eager = true)
-      }
-    }
-    def clusters(s: SparkSession): DataFrame = {
-      val p = pairs(s) // resolved first — the DedupShared re-entrancy rule
-      RestMemo.frame(s, MultimodalFixture.assetsPath, "m4-clusters") {
-        Graft.truncate(graft.operators.Dedup.dupClusters(p), eager = true)
-      }
-    }
+  private def mediaPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.assetsPath), "m4-pairs")(
+      Dedup.minhashNearDups(chunks(s), "doc_id", "chunks",
+        k = 32, bands = 16, shingleSize = 1, threshold = 0.5))
+
+  private def mediaClusters(s: SparkSession): DataFrame = {
+    val p = mediaPairs(s)
+    memo(s, Seq(MultimodalFixture.assetsPath), "m4-clusters")(Dedup.dupClusters(p))
   }
 
-  /** Queries reading per-session memos — ChunkShared / MediaDedupShared
-    * (byte-chunk domain) and PercShared / VPercShared / APercShared
-    * (perceptual domain); see Bench's memo_shared disclosure.
-    */
-  val memoShared: Set[String] = Set("m4_chunk_fingerprint_neardups",
-    "m5_media_dedup_clusters", "m11_perceptual_neardups",
-    "m13_perceptual_dedup_clusters", "m14_video_perceptual_neardups",
-    "m15_audio_perceptual_neardups", "m15b_audio_prefix_full",
-    "m15c_audio_trim_neardups", "m15d_audio_prefix_trim_full",
-    "m16_video_dedup_clusters",
-    "m17_crop_perceptual_neardups", "m18_video_fps_neardups",
-    "m19_crop_dedup_clusters", "m20_video_trim_neardups",
-    "m22_orient_perceptual_neardups", "m23_orient_dedup_clusters",
-    "m24_rotcrop_perceptual_neardups", "m25_video_framedrop_neardups",
-    "m26_rotcrop_dedup_clusters", "m27_video_trimdrop_neardups")
-
-  /** Per-session memo of the VIDEO perceptual pair table (m14 — frame
+  /** Per-session memos of the VIDEO perceptual pair table (m14 — frame
     * seek + per-slot dHash + temporal banding over vperc ∪ mjpeg, once
-    * per session) — the PercShared split for the temporal domain.
+    * per session) and its closure (m16) — the perceptual split for the
+    * temporal domain.
     */
-  private object VPercShared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.vpercPath,
-          MultimodalFixture.mjpegPath), "m14-pairs") {
-        import s.implicits._
-        val corpus = vpercAssets(s).unionByName(mjpegAssets(s))
-        val sigs = Multimodal.videoDHash(corpus.as[Multimodal.Asset], 4).toDF()
-          .select(col("asset_id").as("id"), col("slot"),
-            col("dhash").as("sig"))
-        Graft.truncate(graft.operators.Dedup.temporalNearDupsSig(sigs,
-          maxHamming = 15, maxBucketSize = 256, bands = 16), eager = true)
-      }
+  private def vpercPaths =
+    Seq(MultimodalFixture.vpercPath, MultimodalFixture.mjpegPath)
+
+  private def vpercPairs(s: SparkSession): DataFrame =
+    memo(s, vpercPaths, "m14-pairs") {
+      import s.implicits._
+      val corpus = vpercAssets(s).unionByName(mjpegAssets(s))
+      Dedup.temporalNearDupsSig(
+        idSlotSig(Multimodal.videoDHash(corpus.as[Multimodal.Asset], 4).toDF()),
+        maxHamming = 15, maxBucketSize = 256, bands = 16)
     }
-    def clusters(s: SparkSession): DataFrame = {
-      // pairs resolved BEFORE the clusters slot computes (the
-      // DedupShared re-entrancy rule)
-      val p = pairs(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.vpercPath,
-          MultimodalFixture.mjpegPath), "m14-clusters") {
-        Graft.truncate(graft.operators.Dedup.dupClusters(p), eager = true)
-      }
-    }
+
+  private def vpercClusters(s: SparkSession): DataFrame = {
+    val p = vpercPairs(s)
+    memo(s, vpercPaths, "m14-clusters")(Dedup.dupClusters(p))
   }
 
   /** Per-session memo of the FULL-CORPUS prefix-hash audio pair
@@ -193,27 +172,23 @@ object MultimodalSuite {
     * path). The memo value is the tiny histogram frame (pair distances
     * ≤ 7 plus the hashed-asset count), not the pair table.
     */
-  private object APercFullShared {
-    import graft.{Graft, RestMemo}
-    def hist(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.assetsPath,
-          MultimodalFixture.apercPath), "m15b-hist") {
-        import s.implicits._
-        val corpus = assets(s).filter(col("media_type") === "audio")
-          .unionByName(apercAssets(s))
-        val sigs = Multimodal.audioDHash(corpus.as[Multimodal.Asset],
-          windows = 65, maxFrames = 4096).toDF()
-          .select(col("asset_id").as("id"), col("dhash").as("sig"))
-        val pairs = graft.operators.Dedup.hammingNearDupsSig(sigs,
-          maxHamming = 7, maxBucketSize = 256, bands = 8)
-        val nHashed = sigs.agg(count(lit(1)).as("n_hashed"))
-        Graft.truncate(
-          pairs.groupBy("hamming").agg(count(lit(1)).as("n_pairs"))
-            .crossJoin(nHashed), eager = true)
-      }
+  private def audioPrefixHist(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.assetsPath, MultimodalFixture.apercPath),
+        "m15b-hist") {
+      import s.implicits._
+      val corpus = assets(s).filter(col("media_type") === "audio")
+        .unionByName(apercAssets(s))
+      val sigs = idSig(Multimodal.audioDHash(corpus.as[Multimodal.Asset],
+        windows = 65, maxFrames = 4096).toDF())
+      val pairs = Dedup.hammingNearDupsSig(sigs,
+        maxHamming = 7, maxBucketSize = 256, bands = 8)
+      val nHashed = sigs.agg(count(lit(1)).as("n_hashed"))
+      pairs.groupBy("hamming").agg(count(lit(1)).as("n_pairs"))
+        .crossJoin(nHashed)
     }
-  }
+
+  private def audioTrimPaths = Seq(MultimodalFixture.assetsPath,
+    MultimodalFixture.apercPath, MultimodalFixture.atrimPath)
 
   /** Per-session memo of the FULL-CORPUS PREFIX-CAPPED span-family
     * pair HISTOGRAM (m15d — VERDICT r14 #6: m15b's production prefix
@@ -225,81 +200,54 @@ object MultimodalSuite {
     * to the min-over-cross-product banding, aggregated to the pair
     * histogram + hashed-asset count (the m15b value shape).
     */
-  private object ATrimFullShared {
-    import graft.{Graft, RestMemo}
-    def hist(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.assetsPath,
-          MultimodalFixture.apercPath,
-          MultimodalFixture.atrimPath), "m15d-hist") {
-        import s.implicits._
-        val corpus = assets(s).filter(col("media_type") === "audio")
-          .unionByName(apercAssets(s))
-          .unionByName(atrimAssets(s))
-        val sigs = Multimodal.audioSpanDHash(corpus.as[Multimodal.Asset],
-          windows = 65, maxFrames = 4096).toDF()
-          .select(col("asset_id").as("id"), col("dhash").as("sig"))
-        val pairs = graft.operators.Dedup.regionNearDupsSig(sigs,
-          maxHamming = 7, maxBucketSize = 256, bands = 8)
-        val nHashed = sigs.select("id").distinct()
-          .agg(count(lit(1)).as("n_hashed"))
-        Graft.truncate(
-          pairs.groupBy("min_hamming").agg(count(lit(1)).as("n_pairs"))
-            .crossJoin(nHashed), eager = true)
-      }
+  private def audioTrimPrefixHist(s: SparkSession): DataFrame =
+    memo(s, audioTrimPaths, "m15d-hist") {
+      import s.implicits._
+      val corpus = assets(s).filter(col("media_type") === "audio")
+        .unionByName(apercAssets(s))
+        .unionByName(atrimAssets(s))
+      val sigs = idSig(Multimodal.audioSpanDHash(corpus.as[Multimodal.Asset],
+        windows = 65, maxFrames = 4096).toDF())
+      val pairs = Dedup.regionNearDupsSig(sigs,
+        maxHamming = 7, maxBucketSize = 256, bands = 8)
+      val nHashed = sigs.select("id").distinct()
+        .agg(count(lit(1)).as("n_hashed"))
+      pairs.groupBy("min_hamming").agg(count(lit(1)).as("n_pairs"))
+        .crossJoin(nHashed)
     }
-  }
 
   /** Per-session memo of the TRIM-ROBUSTNESS audio pair table (m15c —
     * the span-offset hash family fed to the min-over-cross-product
     * banding, once per session: the m17 machinery in the time domain).
     */
-  private object ATrimShared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.assetsPath,
-          MultimodalFixture.apercPath,
-          MultimodalFixture.atrimPath), "m15c-pairs") {
-        import s.implicits._
-        val corpus = assets(s)
-          .filter(col("media_type") === "audio" && col("asset_id") < 30)
-          .unionByName(apercAssets(s))
-          .unionByName(atrimAssets(s))
-        val sigs = Multimodal.audioSpanDHash(corpus.as[Multimodal.Asset])
-          .toDF()
-          .select(col("asset_id").as("id"), col("dhash").as("sig"))
-        Graft.truncate(graft.operators.Dedup.regionNearDupsSig(sigs,
-          maxHamming = 7, maxBucketSize = 256, bands = 8), eager = true)
-      }
+  private def audioTrimPairs(s: SparkSession): DataFrame =
+    memo(s, audioTrimPaths, "m15c-pairs") {
+      import s.implicits._
+      val corpus = assets(s)
+        .filter(col("media_type") === "audio" && col("asset_id") < 30)
+        .unionByName(apercAssets(s))
+        .unionByName(atrimAssets(s))
+      Dedup.regionNearDupsSig(
+        idSig(Multimodal.audioSpanDHash(corpus.as[Multimodal.Asset]).toDF()),
+        maxHamming = 7, maxBucketSize = 256, bands = 8)
     }
-  }
 
-  /** Per-session memo of the CROP-ROBUSTNESS pair table (m17 — the
+  /** Per-session memos of the CROP-ROBUSTNESS pair table (m17 — the
     * overlapping multi-scale region-dHash family fed to the
-    * min-over-region-pairs banding, once per session).
+    * min-over-region-pairs banding, once per session) and its closure
+    * (m19).
     */
-  private object CPercShared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.cpercPath, "m17-pairs") {
-        import s.implicits._
-        val sigs = Multimodal.regionDHash(
-          cpercAssets(s).as[Multimodal.Asset]).toDF()
-          .select(col("asset_id").as("id"), col("dhash").as("sig"))
-        Graft.truncate(graft.operators.Dedup.regionNearDupsSig(sigs,
-          maxHamming = 7, maxBucketSize = 256, bands = 8), eager = true)
-      }
+  private def cropPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.cpercPath), "m17-pairs") {
+      import s.implicits._
+      Dedup.regionNearDupsSig(
+        idSig(Multimodal.regionDHash(cpercAssets(s).as[Multimodal.Asset]).toDF()),
+        maxHamming = 7, maxBucketSize = 256, bands = 8)
     }
-    def clusters(s: SparkSession): DataFrame = {
-      // pairs resolved BEFORE the clusters slot computes (the
-      // DedupShared re-entrancy rule)
-      val p = pairs(s)
-      RestMemo.frame(s, MultimodalFixture.cpercPath, "m17-clusters") {
-        Graft.truncate(graft.operators.Dedup.dupClusters(p), eager = true)
-      }
-    }
+
+  private def cropClusters(s: SparkSession): DataFrame = {
+    val p = cropPairs(s)
+    memo(s, Seq(MultimodalFixture.cpercPath), "m17-clusters")(Dedup.dupClusters(p))
   }
 
   /** Per-session memo of the FPS-ROBUSTNESS pair table (m18 — the
@@ -307,110 +255,90 @@ object MultimodalSuite {
     * vperc2 corpus: full-rate, 2×-downscaled, and frame-duplicated
     * double-rate encodings of the same clips).
     */
-  private object VPerc2Shared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.vpercPath,
-          MultimodalFixture.vperc2Path), "m18-pairs") {
-        import s.implicits._
-        val corpus = vpercAssets(s).unionByName(vperc2Assets(s))
-        val sigs = Multimodal.videoDHash(corpus.as[Multimodal.Asset], 4).toDF()
-          .select(col("asset_id").as("id"), col("slot"),
-            col("dhash").as("sig"))
-        Graft.truncate(graft.operators.Dedup.temporalNearDupsSig(sigs,
-          maxHamming = 15, maxBucketSize = 256, bands = 16), eager = true)
-      }
+  private def fpsPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.vpercPath, MultimodalFixture.vperc2Path),
+        "m18-pairs") {
+      import s.implicits._
+      val corpus = vpercAssets(s).unionByName(vperc2Assets(s))
+      Dedup.temporalNearDupsSig(
+        idSlotSig(Multimodal.videoDHash(corpus.as[Multimodal.Asset], 4).toDF()),
+        maxHamming = 15, maxBucketSize = 256, bands = 16)
     }
-  }
 
-  /** Per-session memo of the ORIENTATION-ROBUSTNESS pair table (m22 —
+  /** Per-session memos of the ORIENTATION-ROBUSTNESS pair table (m22 —
     * the 8-orientation dihedral hash family fed to the same
-    * min-over-cross-product banding as m17/m15c, once per session).
+    * min-over-cross-product banding as m17/m15c, once per session) and
+    * its closure (m23).
     */
-  private object OPercShared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.opercPath, "m22-pairs") {
-        import s.implicits._
-        val sigs = Multimodal.orientDHash(
-          opercAssets(s).as[Multimodal.Asset]).toDF()
-          .select(col("asset_id").as("id"), col("dhash").as("sig"))
-        Graft.truncate(graft.operators.Dedup.regionNearDupsSig(sigs,
-          maxHamming = 7, maxBucketSize = 256, bands = 8), eager = true)
-      }
+  private def orientPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.opercPath), "m22-pairs") {
+      import s.implicits._
+      Dedup.regionNearDupsSig(
+        idSig(Multimodal.orientDHash(opercAssets(s).as[Multimodal.Asset]).toDF()),
+        maxHamming = 7, maxBucketSize = 256, bands = 8)
     }
-    def clusters(s: SparkSession): DataFrame = {
-      // pairs resolved BEFORE the clusters slot computes (the
-      // DedupShared re-entrancy rule)
-      val p = pairs(s)
-      RestMemo.frame(s, MultimodalFixture.opercPath, "m22-clusters") {
-        Graft.truncate(graft.operators.Dedup.dupClusters(p), eager = true)
-      }
-    }
+
+  private def orientClusters(s: SparkSession): DataFrame = {
+    val p = orientPairs(s)
+    memo(s, Seq(MultimodalFixture.opercPath), "m22-clusters")(Dedup.dupClusters(p))
   }
 
   /** Per-session memo of the FRAME-DROP pair table (m25 — the m18
     * duration-fraction temporal signature over the temporally-
     * correlated vdrop corpus, once per session).
     */
-  private object VDropShared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.vdropPath, "m25-pairs") {
-        import s.implicits._
-        val sigs = Multimodal.videoDHash(
-          vdropAssets(s).as[Multimodal.Asset], 4).toDF()
-          .select(col("asset_id").as("id"), col("slot"),
-            col("dhash").as("sig"))
-        Graft.truncate(graft.operators.Dedup.temporalNearDupsSig(sigs,
-          maxHamming = 15, maxBucketSize = 256, bands = 16), eager = true)
-      }
+  private def framedropPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.vdropPath), "m25-pairs") {
+      import s.implicits._
+      Dedup.temporalNearDupsSig(
+        idSlotSig(Multimodal.videoDHash(vdropAssets(s).as[Multimodal.Asset], 4).toDF()),
+        maxHamming = 15, maxBucketSize = 256, bands = 16)
     }
+
+  /** The COMPOSED-EDIT hash family (m24/m26): the union of the m17
+    * region family and the m22 orientation family.
+    */
+  private def rotcropSigs(s: SparkSession): DataFrame = {
+    import s.implicits._
+    idSig(Multimodal.rotCropDHash(rcpercAssets(s).as[Multimodal.Asset]).toDF())
   }
 
-  /** Per-session memo of the COMPOSED-EDIT pair table (m24 — the union
-    * of the m17 region family and the m22 orientation family fed to
-    * the same min-over-cross-product banding, once per session).
+  /** Per-session memo of the COMPOSED-EDIT pair table (m24 — the
+    * rot-crop family fed to the same min-over-cross-product banding,
+    * once per session).
     */
-  private object RCPercShared {
-    import graft.{Graft, RestMemo}
-    private def sigs(s: SparkSession): DataFrame = {
-      import s.implicits._
-      Multimodal.rotCropDHash(rcpercAssets(s).as[Multimodal.Asset]).toDF()
-        .select(col("asset_id").as("id"), col("dhash").as("sig"))
-    }
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.rcpercPath, "m24-pairs") {
-        Graft.truncate(graft.operators.Dedup.regionNearDupsSig(sigs(s),
-          maxHamming = 7, maxBucketSize = 256, bands = 8), eager = true)
-      }
-    }
-    /** The PRODUCTION-radius pair table (radius 3 — the m26 APPLY
-      * input): composition matches are exact 0s, so the tighter radius
-      * keeps every planted pair while the demo radius's measured
-      * smooth-content grazes (two same-base sibling crops at 5/7, one
-      * cross-base graze at 5 — pinned in PerceptualDedupSpec) fall
-      * outside, and the closure ships exact per-picture components.
-      */
-    def pairsProd(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.rcpercPath, "m26-pairs-r3") {
-        Graft.truncate(graft.operators.Dedup.regionNearDupsSig(sigs(s),
-          maxHamming = 3, maxBucketSize = 256, bands = 8), eager = true)
-      }
-    }
-    def clusters(s: SparkSession): DataFrame = {
-      // pairs resolved BEFORE the clusters slot computes (the
-      // DedupShared re-entrancy rule)
-      val p = pairsProd(s)
-      RestMemo.frame(s, MultimodalFixture.rcpercPath, "m26-clusters") {
-        Graft.truncate(graft.operators.Dedup.dupClusters(p), eager = true)
-      }
-    }
+  private def rotcropPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.rcpercPath), "m24-pairs")(
+      Dedup.regionNearDupsSig(rotcropSigs(s),
+        maxHamming = 7, maxBucketSize = 256, bands = 8))
+
+  /** The PRODUCTION-radius pair table (radius 3 — the m26 APPLY
+    * input): composition matches are exact 0s, so the tighter radius
+    * keeps every planted pair while the demo radius's measured
+    * smooth-content grazes (two same-base sibling crops at 5/7, one
+    * cross-base graze at 5 — pinned in PerceptualDedupSpec) fall
+    * outside, and the closure ships exact per-picture components.
+    */
+  private def rotcropPairsProd(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.rcpercPath), "m26-pairs-r3")(
+      Dedup.regionNearDupsSig(rotcropSigs(s),
+        maxHamming = 3, maxBucketSize = 256, bands = 8))
+
+  private def rotcropClusters(s: SparkSession): DataFrame = {
+    val p = rotcropPairsProd(s)
+    memo(s, Seq(MultimodalFixture.rcpercPath), "m26-clusters")(Dedup.dupClusters(p))
+  }
+
+  /** The span-slot pipeline shared by m20 and m27 — videoSpanDHash
+    * into the min-over-span-pairs worst-slot banding.
+    */
+  private def spanPairs(s: SparkSession, corpus: DataFrame): DataFrame = {
+    import s.implicits._
+    val sigs = Multimodal.videoSpanDHash(corpus.as[Multimodal.Asset], 4).toDF()
+      .select(col("asset_id").as("id"), col("span"), col("slot"),
+        col("dhash").as("sig"))
+    Dedup.spanTemporalNearDupsSig(sigs,
+      maxHamming = 15, maxBucketSize = 256, bands = 16)
   }
 
   /** Per-session memo of the TRIM-ROBUSTNESS video pair table (m20 —
@@ -418,93 +346,55 @@ object MultimodalSuite {
     * worst-slot banding, once per session: m15c's geometry composed
     * with m18's duration-fraction slots).
     */
-  private object VTrimShared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.vtrimPath, "m20-pairs") {
-        spanPairs(s, vtrimAssets(s))
-      }
-    }
-    /** The span-slot pipeline shared by m20 and m27 — videoSpanDHash
-      * into the min-over-span-pairs worst-slot banding.
-      */
-    def spanPairs(s: SparkSession, corpus: DataFrame): DataFrame = {
-      import s.implicits._
-      val sigs = Multimodal.videoSpanDHash(
-        corpus.as[Multimodal.Asset], 4).toDF()
-        .select(col("asset_id").as("id"), col("span"), col("slot"),
-          col("dhash").as("sig"))
-      Graft.truncate(graft.operators.Dedup.spanTemporalNearDupsSig(sigs,
-        maxHamming = 15, maxBucketSize = 256, bands = 16), eager = true)
-    }
-  }
+  private def videoTrimPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.vtrimPath), "m20-pairs")(
+      spanPairs(s, vtrimAssets(s)))
 
   /** Per-session memo of the COMPOSED trim∘frame-drop pair table (m27 —
     * the UNCHANGED m20 span-slot pipeline over the vtd corpus: both
     * edit axes are duration-fraction geometry, so the composition is
     * caught with no new construction).
     */
-  private object VTDShared {
-    import graft.RestMemo
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, MultimodalFixture.vtdPath, "m27-pairs") {
-        VTrimShared.spanPairs(s, vtdAssets(s))
-      }
-    }
-  }
+  private def trimdropPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.vtdPath), "m27-pairs")(
+      spanPairs(s, vtdAssets(s)))
 
   /** Per-session memo of the AUDIO perceptual pair table (m15 — the
     * 65-window amplitude-delta sign hash fed to the UNCHANGED
     * hammingNearDupsSig banding, once per session).
     */
-  private object APercShared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.assetsPath,
-          MultimodalFixture.apercPath), "m15-pairs") {
-        import s.implicits._
-        val corpus = assets(s)
-          .filter(col("media_type") === "audio" && col("asset_id") < 30)
-          .unionByName(apercAssets(s))
-        val sigs = Multimodal.audioDHash(corpus.as[Multimodal.Asset]).toDF()
-          .select(col("asset_id").as("id"), col("dhash").as("sig"))
-        Graft.truncate(graft.operators.Dedup.hammingNearDupsSig(sigs,
-          maxHamming = 7, maxBucketSize = 256, bands = 8), eager = true)
-      }
+  private def audioPairs(s: SparkSession): DataFrame =
+    memo(s, Seq(MultimodalFixture.assetsPath, MultimodalFixture.apercPath),
+        "m15-pairs") {
+      import s.implicits._
+      val corpus = assets(s)
+        .filter(col("media_type") === "audio" && col("asset_id") < 30)
+        .unionByName(apercAssets(s))
+      Dedup.hammingNearDupsSig(
+        idSig(Multimodal.audioDHash(corpus.as[Multimodal.Asset]).toDF()),
+        maxHamming = 7, maxBucketSize = 256, bands = 8)
     }
-  }
 
   /** Per-session memos of the PERCEPTUAL pair table (m11 — decode +
     * dHash + exact-recall banding over gif∪perc, once per session) and
-    * its component closure (m13) — the MediaDedupShared split for the
-    * pixel domain.
+    * its component closure (m13) — the media-dedup split for the pixel
+    * domain.
     */
-  private object PercShared {
-    import graft.{Graft, RestMemo}
-    def pairs(s: SparkSession): DataFrame = {
-      MultimodalFixture.ensure(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.gifPath,
-          MultimodalFixture.percPath), "m11-pairs") {
-        import s.implicits._
-        val corpus = gifAssets(s).unionByName(percAssets(s))
-        val sigs = Multimodal.dHash(corpus.as[Multimodal.Asset]).toDF()
-          .select(col("asset_id").as("id"), col("dhash").as("sig"))
-        Graft.truncate(graft.operators.Dedup.hammingNearDupsSig(sigs,
-          maxHamming = 7, maxBucketSize = 256, bands = 8), eager = true)
-      }
+  private def percPaths =
+    Seq(MultimodalFixture.gifPath, MultimodalFixture.percPath)
+
+  private def percPairs(s: SparkSession): DataFrame =
+    memo(s, percPaths, "m11-pairs") {
+      import s.implicits._
+      val corpus = gifAssets(s).unionByName(percAssets(s))
+      Dedup.hammingNearDupsSig(
+        idSig(Multimodal.dHash(corpus.as[Multimodal.Asset]).toDF()),
+        maxHamming = 7, maxBucketSize = 256, bands = 8)
     }
-    def clusters(s: SparkSession): DataFrame = {
-      // pairs resolved BEFORE the clusters slot computes (the
-      // DedupShared re-entrancy rule)
-      val p = pairs(s)
-      RestMemo.frame(s, Seq(MultimodalFixture.gifPath,
-          MultimodalFixture.percPath), "m11-clusters") {
-        Graft.truncate(graft.operators.Dedup.dupClusters(p), eager = true)
-      }
-    }
+
+  private def percClusters(s: SparkSession): DataFrame = {
+    val p = percPairs(s)
+    memo(s, percPaths, "m11-clusters")(Dedup.dupClusters(p))
   }
 
   /** Force the media-dedup memos, timed — Bench's `sf1_builds` section
@@ -516,27 +406,27 @@ object MultimodalSuite {
   private[graft] def prebuild(s: SparkSession,
       go: () => Boolean): Seq[(String, Double)] = {
     val items: Seq[(String, () => Unit)] = Seq(
-      "media_chunks" -> (() => { ChunkShared.table(s); () }),
-      "media_minhash_pairs" -> (() => { MediaDedupShared.pairs(s); () }),
-      "media_dup_clusters" -> (() => { MediaDedupShared.clusters(s); () }),
-      "media_dhash_pairs" -> (() => { PercShared.pairs(s); () }),
-      "media_perc_clusters" -> (() => { PercShared.clusters(s); () }),
-      "media_video_dhash_pairs" -> (() => { VPercShared.pairs(s); () }),
-      "media_vperc_clusters" -> (() => { VPercShared.clusters(s); () }),
-      "media_video_fps_pairs" -> (() => { VPerc2Shared.pairs(s); () }),
-      "media_crop_region_pairs" -> (() => { CPercShared.pairs(s); () }),
-      "media_crop_clusters" -> (() => { CPercShared.clusters(s); () }),
-      "media_audio_dhash_pairs" -> (() => { APercShared.pairs(s); () }),
-      "media_audio_prefix_hist" -> (() => { APercFullShared.hist(s); () }),
-      "media_audio_trim_pairs" -> (() => { ATrimShared.pairs(s); () }),
-      "media_audio_trim_prefix_hist" -> (() => { ATrimFullShared.hist(s); () }),
-      "media_video_trim_pairs" -> (() => { VTrimShared.pairs(s); () }),
-      "media_orient_pairs" -> (() => { OPercShared.pairs(s); () }),
-      "media_orient_clusters" -> (() => { OPercShared.clusters(s); () }),
-      "media_rotcrop_pairs" -> (() => { RCPercShared.pairs(s); () }),
-      "media_rotcrop_clusters" -> (() => { RCPercShared.clusters(s); () }),
-      "media_framedrop_pairs" -> (() => { VDropShared.pairs(s); () }),
-      "media_trimdrop_pairs" -> (() => { VTDShared.pairs(s); () }))
+      "media_chunks" -> (() => { chunks(s); () }),
+      "media_minhash_pairs" -> (() => { mediaPairs(s); () }),
+      "media_dup_clusters" -> (() => { mediaClusters(s); () }),
+      "media_dhash_pairs" -> (() => { percPairs(s); () }),
+      "media_perc_clusters" -> (() => { percClusters(s); () }),
+      "media_video_dhash_pairs" -> (() => { vpercPairs(s); () }),
+      "media_vperc_clusters" -> (() => { vpercClusters(s); () }),
+      "media_video_fps_pairs" -> (() => { fpsPairs(s); () }),
+      "media_crop_region_pairs" -> (() => { cropPairs(s); () }),
+      "media_crop_clusters" -> (() => { cropClusters(s); () }),
+      "media_audio_dhash_pairs" -> (() => { audioPairs(s); () }),
+      "media_audio_prefix_hist" -> (() => { audioPrefixHist(s); () }),
+      "media_audio_trim_pairs" -> (() => { audioTrimPairs(s); () }),
+      "media_audio_trim_prefix_hist" -> (() => { audioTrimPrefixHist(s); () }),
+      "media_video_trim_pairs" -> (() => { videoTrimPairs(s); () }),
+      "media_orient_pairs" -> (() => { orientPairs(s); () }),
+      "media_orient_clusters" -> (() => { orientClusters(s); () }),
+      "media_rotcrop_pairs" -> (() => { rotcropPairs(s); () }),
+      "media_rotcrop_clusters" -> (() => { rotcropClusters(s); () }),
+      "media_framedrop_pairs" -> (() => { framedropPairs(s); () }),
+      "media_trimdrop_pairs" -> (() => { trimdropPairs(s); () }))
     graft.Prebuild.timed(items, go)
   }
 
@@ -638,7 +528,7 @@ object MultimodalSuite {
     // is identical, so the exact-Jaccard oracle checks the full
     // MinHash+LSH+verify pipeline.
     "m4_chunk_fingerprint_neardups" -> Q(
-      (s, _) => MediaDedupShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => mediaPairs(s).orderBy("id1", "id2"),
       Some(sqlM4Pairs + "\nORDER BY id1, id2"),
       "Multimodal near-dup: 1 KiB chunk md5 fingerprints -> MinHash+LSH " +
         "over fingerprint sets; exact-Jaccard oracle on the same planted corpus"),
@@ -652,7 +542,7 @@ object MultimodalSuite {
     // at-rest grouping). The oracle embeds m4's exact-Jaccard pair
     // query whole and closes it with the recursive CTE.
     "m5_media_dedup_clusters" -> Q(
-      (s, _) => MediaDedupShared.clusters(s)
+      (s, _) => mediaClusters(s)
         .orderBy("canonical_id", "member_id"),
       Some(s"""WITH RECURSIVE pairs AS (
         |$sqlM4Pairs
@@ -987,7 +877,7 @@ object MultimodalSuite {
     // simhashNearDups default) — 8-bit bands would mega-bucket there
     // (see hammingNearDupsSig's scaladoc).
     "m11_perceptual_neardups" -> Q(
-      (s, _) => PercShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => percPairs(s).orderBy("id1", "id2"),
       Some(sqlM11),
       "Perceptual image near-dup: genuine cross-format decode -> " +
         "integer-exact 64-bit dHash -> banded Hamming pairs; the oracle " +
@@ -1004,7 +894,7 @@ object MultimodalSuite {
     // demonstration corpus is gradient-dense, so the radius-7 graph is
     // well-connected; production thresholds sit much tighter.)
     "m13_perceptual_dedup_clusters" -> Q(
-      (s, _) => PercShared.clusters(s)
+      (s, _) => percClusters(s)
         .orderBy("canonical_id", "member_id"),
       Some(s"""WITH RECURSIVE pairs AS (
         |$sqlM11
@@ -1085,7 +975,7 @@ object MultimodalSuite {
     // and breaks the match. At 100 TB only (id, slot, 8-byte hash)
     // rows shuffle; frames never leave their scan.
     "m14_video_perceptual_neardups" -> Q(
-      (s, _) => VPercShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => vpercPairs(s).orderBy("id1", "id2"),
       Some(sqlM14),
       "Perceptual video near-dup: container frame seek -> per-slot " +
         "dHash -> temporal banding (all slots within radius); lossless " +
@@ -1111,7 +1001,7 @@ object MultimodalSuite {
     // purely to keep the oracle's hex walk cheap (the m7 rationale);
     // the operator itself is the full-corpus mapPartitions path.
     "m15_audio_perceptual_neardups" -> Q(
-      (s, _) => APercShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => audioPairs(s).orderBy("id1", "id2"),
       Some(sqlM15),
       "Perceptual audio near-dup: decoded-PCM window-amplitude delta " +
         "sign hash -> banded Hamming pairs; the oracle rebuilds the " +
@@ -1135,7 +1025,7 @@ object MultimodalSuite {
     // histogram; n_hashed is independently derivable from each WAV's
     // data-size header field, proving the scan covered every asset.
     "m15b_audio_prefix_full" -> Q(
-      (s, _) => APercFullShared.hist(s).orderBy("hamming"),
+      (s, _) => audioPrefixHist(s).orderBy("hamming"),
       Some(sqlM15b),
       "Full-corpus audio near-dup aggregate: every audio asset prefix-" +
         "hashed, complete radius-7 pair histogram + hashed-asset count, " +
@@ -1157,7 +1047,7 @@ object MultimodalSuite {
     // (asset, span) hash from hex(media) with the window-sliced walk
     // and demands the complete radius-7 pair set with exact minima.
     "m15c_audio_trim_neardups" -> Q(
-      (s, _) => ATrimShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => audioTrimPairs(s).orderBy("id1", "id2"),
       Some(sqlM15c),
       "Trim-robust audio near-dup: span-offset sign-hash family, pairs " +
         "by minimum Hamming over the span cross product; complete " +
@@ -1179,7 +1069,7 @@ object MultimodalSuite {
     // with the window-sliced walk and must land on the identical
     // histogram, n_hashed re-derived from the WAV header field alone.
     "m15d_audio_prefix_trim_full" -> Q(
-      (s, _) => ATrimFullShared.hist(s).orderBy("min_hamming"),
+      (s, _) => audioTrimPrefixHist(s).orderBy("min_hamming"),
       Some(sqlM15d),
       "Full-corpus prefix-capped trim-robust audio aggregate: every " +
         "audio asset's span family hashed over duration-anchored " +
@@ -1197,7 +1087,7 @@ object MultimodalSuite {
     // triple collapses to one canonical (the mjpeg id: 30000+i is the
     // group minimum by construction).
     "m16_video_dedup_clusters" -> Q(
-      (s, _) => VPercShared.clusters(s)
+      (s, _) => vpercClusters(s)
         .orderBy("canonical_id", "member_id"),
       Some(s"""WITH RECURSIVE pairs AS (
         |$sqlM14
@@ -1245,7 +1135,7 @@ object MultimodalSuite {
     // approximately — full off-grid crop robustness needs keypoint
     // anchoring, not a fixed grid.
     "m17_crop_perceptual_neardups" -> Q(
-      (s, _) => CPercShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => cropPairs(s).orderBy("id1", "id2"),
       Some(sqlM17),
       "Crop-robust perceptual near-dup: overlapping multi-scale region " +
         "dHash family, pairs by minimum Hamming over the region cross " +
@@ -1261,7 +1151,7 @@ object MultimodalSuite {
     // CTE; the crop/crop sibling pairs the region family finds directly
     // only tighten the same components.
     "m19_crop_dedup_clusters" -> Q(
-      (s, _) => CPercShared.clusters(s)
+      (s, _) => cropClusters(s)
         .orderBy("canonical_id", "member_id"),
       Some(s"""WITH RECURSIVE pairs AS (
         |$sqlM17
@@ -1305,7 +1195,7 @@ object MultimodalSuite {
     // retained frames cover the slot timestamps — frame-dropping
     // robustness on hard-cut content needs scene-aware signatures.
     "m18_video_fps_neardups" -> Q(
-      (s, _) => VPerc2Shared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => fpsPairs(s).orderBy("id1", "id2"),
       Some(sqlM18),
       "Fps-robust video near-dup: duration-fraction slot sampling makes " +
         "a frame-duplicated double-rate re-encode align slot-for-slot; " +
@@ -1336,7 +1226,7 @@ object MultimodalSuite {
     // 8 B) per clip shuffle, frames never leave the scan; the S× band
     // rows and ≤S² candidate factor are the m17 patch-hash trade.
     "m20_video_trim_neardups" -> Q(
-      (s, _) => VTrimShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => videoTrimPairs(s).orderBy("id1", "id2"),
       Some(sqlM20),
       "Trim-robust video near-dup: duration-fraction slots sampled " +
         "within each span of the offset family, pairs by minimum over " +
@@ -1365,7 +1255,7 @@ object MultimodalSuite {
     // shuffle, pixels never leave the scan — the m17 patch-hash cost
     // shape with R=8.
     "m22_orient_perceptual_neardups" -> Q(
-      (s, _) => OPercShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => orientPairs(s).orderBy("id1", "id2"),
       Some(sqlM22),
       "Rotation/flip-robust perceptual near-dup: 8-orientation dihedral " +
         "dHash family, pairs by minimum Hamming over the orientation " +
@@ -1382,7 +1272,7 @@ object MultimodalSuite {
     // CTE; the rot/flip sibling pairs group closure finds directly only
     // tighten the same components.
     "m23_orient_dedup_clusters" -> Q(
-      (s, _) => OPercShared.clusters(s)
+      (s, _) => orientClusters(s)
         .orderBy("canonical_id", "member_id"),
       Some(s"""WITH RECURSIVE pairs AS (
         |$sqlM22
@@ -1425,7 +1315,7 @@ object MultimodalSuite {
     // m17 patch-hash cost shape with R = 14; candidates stay banded
     // (band, block) bucket collisions, never all-pairs.
     "m24_rotcrop_perceptual_neardups" -> Q(
-      (s, _) => RCPercShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => rotcropPairs(s).orderBy("id1", "id2"),
       Some(sqlM24),
       "Composed-edit perceptual near-dup: union of region and " +
         "orientation dHash families catches crop-of-rotation reposts " +
@@ -1450,7 +1340,7 @@ object MultimodalSuite {
     // far beyond it on per-frame-independent textures — is measured in
     // VideoAudioPerceptualSpec, the m18 scaladoc claim as an artifact.
     "m25_video_framedrop_neardups" -> Q(
-      (s, _) => VDropShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => framedropPairs(s).orderBy("id1", "id2"),
       Some(s"""SELECT id1, id2 FROM (
         |${sqlTemporalDibPairs(
           s"SELECT asset_id AS id, hex(media) AS hx FROM $VD")}
@@ -1473,7 +1363,7 @@ object MultimodalSuite {
     // the consolidated oriented-family walk at radius 3 and closes it
     // with the recursive CTE.
     "m26_rotcrop_dedup_clusters" -> Q(
-      (s, _) => RCPercShared.clusters(s)
+      (s, _) => rotcropClusters(s)
         .orderBy("canonical_id", "member_id"),
       Some(s"""WITH RECURSIVE pairs AS (
         |${sqlOrientedFamilyPairs(RC, sqlM24Fam, radius = 3)}
@@ -1514,7 +1404,7 @@ object MultimodalSuite {
     // Oracle: the complete radius-15 pair set via the factored span
     // walk over vtd — the same builder as m20, which is the point.
     "m27_video_trimdrop_neardups" -> Q(
-      (s, _) => VTDShared.pairs(s).orderBy("id1", "id2"),
+      (s, _) => trimdropPairs(s).orderBy("id1", "id2"),
       Some(sqlM27),
       "Composed-edit video near-dup: the span-slot family catches " +
         "trim AND half-rate re-encode composed — spans absorb the " +

@@ -19,7 +19,7 @@ object TextSuite {
     * consume. Per-query isolation was re-running the identical
     * shingle→minhash→band→verify computation four times (~100 s of the
     * cold bench); the memoized frames are lineage-truncated
-    * (Graft.truncate), so each is computed once per session and
+    * (RestMemo.frame), so each is computed once per session and
     * downstream queries reference a truncated plan. Deterministic
     * pipeline + fixed inputs ⇒ caching cannot change any query's
     * result. Lifecycle (eviction on session end / data change / idle
@@ -28,14 +28,11 @@ object TextSuite {
     * has no within-side pairs to reuse.
     */
   private object DedupShared {
-    import graft.{Graft, RestMemo}
+    import graft.RestMemo
     def pairs(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-      RestMemo.frame(s, s"$dir/documents.parquet", "minhash-pairs") {
-        Graft.truncate(
-          Dedup.minhashNearDups(table(s, dir, "documents"), "doc_id", "text",
-            k = 32, bands = 16, shingleSize = 3, threshold = 0.5),
-          eager = true)
-      }
+      RestMemo.frame(s, s"$dir/documents.parquet", "minhash-pairs")(
+        Dedup.minhashNearDups(table(s, dir, "documents"), "doc_id", "text",
+          k = 32, bands = 16, shingleSize = 3, threshold = 0.5))
     def clusters(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
       // pairs() resolved BEFORE the clusters slot computes (kept from the
       // computeIfAbsent era; also saves a wasted duplicate pairs run when
@@ -43,9 +40,8 @@ object TextSuite {
       // skips the pairs build entirely only when pairs also reloads —
       // both sidecars carry the same corpus fingerprint, so they agree.
       val p = pairs(s, dir)
-      RestMemo.frame(s, s"$dir/documents.parquet", "minhash-clusters") {
-        Graft.truncate(Dedup.dupClusters(p), eager = true)
-      }
+      RestMemo.frame(s, s"$dir/documents.parquet", "minhash-clusters")(
+        Dedup.dupClusters(p))
     }
   }
 
@@ -85,16 +81,6 @@ object TextSuite {
     * BEFORE the `queries` val below, which reads it.
     */
   private final val X8bShardBound = 16384
-
-  /** Queries that read the per-session DedupShared memo — disclosed in
-    * the bench artifact (the first family member executed pays the
-    * MinHash pipeline; the rest read shared state).
-    */
-  val memoShared: Set[String] = Set(
-    "x7_minhash_neardups", "x18_dup_clusters", "x27_leakage_safe_split",
-    "x28_dedup_apply", "x38_curation_pipeline",
-    "x40_bpe_train", "x16_bpe_fertility",
-    "x41_bpe_vocab") // all three read BpeShared's trained state
 
   /** Per-(session, dir) memo of the LEARNED BPE state (operators.Bpe —
     * 8 merge rounds on the documents vocabulary): x40 reports the merge

@@ -421,12 +421,12 @@ object ScaleStress {
       val ncq = Similarity.indexCellsFor(n)
       val idx = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
         nCells = ncq, m = 8, nCodes = 64, iterations = 1,
-        trainCap = 2048, hierAssign = true) // untimed: the ingest half
+        trainCap = 2048) // untimed: the ingest half
       (1 to 2).foreach { _ =>
         run("ivfpq_warm_query", m, n)(
           Similarity.ivfPqTopK(emb.filter(col("vec_id") < 5), idx,
             "vec_id", "embedding", topK = 5,
-            nProbe = Similarity.indexProbesFor(ncq), hierProbes = true,
+            nProbe = Similarity.indexProbesFor(ncq),
             superProbe = Similarity.indexSuperProbesFor(ncq)).count())
       }
       graft.Graft.releaseTruncated(idx.codes)
@@ -472,12 +472,12 @@ object ScaleStress {
       val ncq = Similarity.indexCellsFor(n)
       val idx = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
         nCells = ncq, m = 8, nCodes = 64, iterations = 1,
-        trainCap = 2048, hierAssign = true) // untimed: the ingest half
+        trainCap = 2048) // untimed: the ingest half
       (1 to 2).foreach { _ =>
         run("ivfpq_warm_query", m, n)(
           Similarity.ivfPqTopK(emb.filter(col("vec_id") < 5), idx,
             "vec_id", "embedding", topK = 5,
-            nProbe = Similarity.indexProbesFor(ncq), hierProbes = true,
+            nProbe = Similarity.indexProbesFor(ncq),
             superProbe = Similarity.indexSuperProbesFor(ncq)).count())
       }
       graft.Graft.releaseTruncated(idx.codes)

@@ -45,14 +45,14 @@ class BenchSpec extends SparkSpec {
   }
 
   test("runPass: failed queries carry their message and stay out of the times") {
-    val (times, failed) = Bench.runPass(spark, "spec", "",
+    val (times, failed, _) = Bench.runPass(spark, "spec", "",
       Seq("a_ok" -> ok, "b_boom" -> boom, "c_throws" -> throwsOnBuild))
     assert(times.keySet == Set("a_ok"))
     assert(failed.keySet == Set("b_boom", "c_throws"))
     assert(failed("c_throws").contains("no such table"))
     // the cut stops the pass before the next query
     var n = 0
-    val (cut, _) = Bench.runPass(spark, "spec", "", Seq("a_ok" -> ok, "d_ok" -> ok),
+    val (cut, _, _) = Bench.runPass(spark, "spec", "", Seq("a_ok" -> ok, "d_ok" -> ok),
       () => { n += 1; n <= 1 })
     assert(cut.keySet == Set("a_ok"))
   }
@@ -107,6 +107,18 @@ class BenchSpec extends SparkSpec {
     assert(b.get("n").asInt == 2)
   }
 
+  test("section: memo_shared holds the queries whose build consults a memo of built state, whether or not the builds phase ran") {
+    val dir = OneSlotPlanSpec.SfDir
+    val qs = Seq("o4_top_contributors", "v5_cosine_neardups", "x7_minhash_neardups")
+    // no builds phase: x7 and v5 build their memos lazily, as after a cut
+    val s = Bench.section(spark, "spec", dir, qs.map(q => q -> SparkEntry.queries(q)),
+      passes = 1, farFuture, cutFirst = false, _ => Nil)
+    assert(s.failed.isEmpty, s.failed)
+    // x7 reads the MinHash pairs memo and v5 the 16-cell assignment memo;
+    // o4 reads only tables (read-plan entries hold no built state)
+    assert(s.memoShared == Set("v5_cosine_neardups", "x7_minhash_neardups"))
+  }
+
   test("deadlines: the scale probes start only when what they take ends by the JSON line, the decade point only when it fits too") {
     import Bench.{DecadeSec, GraceSec, ProbeSec, probeGate}
     // 100 s left is far short of what the probes take
@@ -121,7 +133,7 @@ class BenchSpec extends SparkSpec {
   test("contract lines: a failure message with quote, backslash, newline and tab parses back exactly") {
     val msg = "Bad \"x\" at C:\\tmp\nnext line\tcol"
     val s = Bench.Section(Nil, Map("a_ok" -> 1.0), Map("a_ok" -> 1.0), 1,
-      Map("b_bad" -> msg), Map("some-memo" -> "reloaded"))
+      Map("b_bad" -> msg), Map("some-memo" -> "reloaded"), Set("a_ok"))
     val (line, summary) = Bench.lines("dir", "dir1", s, Left(msg),
       Seq("start" -> 0.5))
     assert(!line.contains('\n') && !summary.contains('\n'))
@@ -129,6 +141,7 @@ class BenchSpec extends SparkSpec {
     assert(l.get("failed").get("b_bad").asText == msg)
     assert(l.get("sf1_skipped").asText == msg)
     assert(names(l.get("memo_rest").get("reloaded")) == Seq("some-memo"))
+    assert(names(l.get("memo_shared")) == Seq("a_ok"))
     assert(json(summary).get("queries_file").asText == "BENCH_LAST.json")
   }
 

@@ -110,10 +110,10 @@ class IndexRecallSpec extends SparkSpec {
       hierTrain = true)
     val idx = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
       nCells = nc, m = 8, nCodes = 64, iterations = 1, trainCap = 2048,
-      prebuiltCentroids = Some(cents), hierAssign = true, superProbe = sp)
+      prebuiltCentroids = Some(cents), superProbe = sp)
     val approx = Similarity.ivfPqTopK(q, idx, "vec_id", "embedding",
         topK = 5, nProbe = Similarity.indexProbesFor(nc),
-        hierProbes = true, superProbe = sp, refine = refine)
+        superProbe = sp, refine = refine)
       .select("qid", "vec_id")
     val hit = exact.join(approx, Seq("qid", "vec_id"), "left_semi").count()
     hit.toDouble / exact.count()

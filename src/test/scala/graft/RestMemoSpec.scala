@@ -36,8 +36,7 @@ class RestMemoSpec extends SparkSpec {
       var builds = 0
       def get() = RestMemo.frame(spark, src, "spec-frame-v1") {
         builds += 1
-        Graft.truncate(spark.read.parquet(src)
-          .groupBy(col("s")).agg(count(lit(1)).as("n")), eager = true)
+        spark.read.parquet(src).groupBy(col("s")).agg(count(lit(1)).as("n"))
       }
       val first = get().orderBy("s").collect().toSeq
       assert(builds == 1)
@@ -53,13 +52,37 @@ class RestMemoSpec extends SparkSpec {
     }
   }
 
+  test("frame: the build returns a plain plan; the memo holds it truncated, built and reloaded, and releases the build's tracked persists") {
+    withRestDir { _ =>
+      val src = writeSource(Seq((1L, "a"), (2L, "b"), (3L, "a")))
+      var persisted: org.apache.spark.sql.DataFrame = null
+      def get() = RestMemo.frame(spark, src, "spec-frame-plain") {
+        persisted = Graft.trackedPersist(spark.read.parquet(src))
+        persisted.groupBy(col("s")).agg(count(lit(1)).as("n"))
+      }
+      def truncated(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.analyzed.collectLeaves().exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      val built = get()
+      assert(truncated(built), built.queryExecution.analyzed.toString)
+      assert(persisted.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "the build's tracked persist outlived the build")
+      val rows = built.orderBy("s").collect().toSeq
+      SessionMemo.endSession(spark)
+      val reloaded = get()
+      assert(RestMemo.drainOutcomes().get("spec-frame-plain").contains("reloaded"))
+      assert(truncated(reloaded), reloaded.queryExecution.analyzed.toString)
+      assert(reloaded.orderBy("s").collect().toSeq == rows)
+    }
+  }
+
   test("frame: changed source data invalidates the sidecar") {
     withRestDir { _ =>
       val src = writeSource(Seq((1L, "a")))
       var builds = 0
       def get() = RestMemo.frame(spark, src, "spec-frame-inval") {
         builds += 1
-        Graft.truncate(spark.read.parquet(src), eager = true)
+        spark.read.parquet(src)
       }
       assert(get().count() == 1 && builds == 1)
       SessionMemo.endSession(spark)
@@ -77,7 +100,7 @@ class RestMemoSpec extends SparkSpec {
       var builds = 0
       def get() = RestMemo.frame(spark, src, "spec-frame-corrupt") {
         builds += 1
-        Graft.truncate(spark.read.parquet(src), eager = true)
+        spark.read.parquet(src)
       }
       get(); assert(builds == 1)
       SessionMemo.endSession(spark)
@@ -103,8 +126,7 @@ class RestMemoSpec extends SparkSpec {
       def get(what: String, v2: Boolean) = RestMemo.frame(spark, src, what) {
         builds += 1
         val agg = if (v2) sum(col("id")).as("n") else count(lit(1)).as("n")
-        Graft.truncate(spark.read.parquet(src).groupBy(col("s")).agg(agg),
-          eager = true)
+        spark.read.parquet(src).groupBy(col("s")).agg(agg)
       }
       val v1Rows = get("spec-tag", v2 = false).orderBy("s").collect().toSeq
       assert(builds == 1)
@@ -184,7 +206,7 @@ class RestMemoSpec extends SparkSpec {
       var builds = 0
       def get() = RestMemo.frame(spark, src, "spec-code-stamp") {
         builds += 1
-        Graft.truncate(spark.read.parquet(src), eager = true)
+        spark.read.parquet(src)
       }
       val prev = RestMemo.CodeStampOverride
       try {
