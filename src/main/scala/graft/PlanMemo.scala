@@ -13,19 +13,30 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd,
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, GraftPlanBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{CurrentCatalog, CurrentDatabase,
   CurrentDate, CurrentTime, CurrentTimeZone, CurrentTimestamp, CurrentUser, Expression,
-  LocalTimestamp, Now}
+  LocalTimestamp, Now, PlanExpression}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD, QueryExecution,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
+  ResultQueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 
 /** Session PLAN memo: each declared query's analyzed and optimized
   * logical plan, kept per (session, query, dir). A repeat of a query over
-  * unchanged inputs skips analysis and optimization and gets a fresh
-  * DataFrame over the kept plans ([[GraftPlanBridge.replay]]), which is
-  * physically planned and executed anew: metadata reuse only, like the
-  * read-plan memo. Physical plans, broadcasts, subquery results, shuffle
-  * outputs and cached data are never reused.
+  * unchanged inputs skips analysis and optimization.
+  *   - When the executed plan of the miss holds no data (see
+  *     [[holdsData]]), the slot keeps it, and each repeat gets a fresh
+  *     DataFrame that runs that plan again ([[GraftPlanBridge.rerun]],
+  *     outcome `rerun`): no physical planning, and the plan's scans, read
+  *     metadata and final adaptive plan are reused. Every execution still
+  *     builds its own RDD chain and reads its scans anew.
+  *   - Otherwise the repeat gets a fresh DataFrame over the kept logical
+  *     plans ([[GraftPlanBridge.replay]], outcome `hit`), which is
+  *     physically planned and executed anew.
+  * Nothing that holds data is kept: shuffle outputs, broadcast relations,
+  * subquery results, observed metrics and cached data are never reused.
   *
   * The plan is a [[SessionMemo]] slot (dropped at session end, context
   * stop or idle TTL). A lookup hits while
@@ -58,18 +69,23 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * An input that is none of these is a hidden input and must drop the
   * plans itself ([[dropAll]]; `OsmFixture.withRoot` does).
   *
-  * On a miss the plan is optimized when the query is built rather than
-  * at its first action; the caller's DataFrame keeps that plan, so
-  * nothing is optimized twice.
+  * On a miss the plan is optimized and physically planned when the query
+  * is built rather than at its first action; the caller's DataFrame keeps
+  * those plans, so nothing is planned twice. The slot's executed plan is
+  * the caller's own, so a miss and its reruns share one executed plan.
   */
 object PlanMemo {
 
+  /** `executed`: the miss's query execution, kept only when its executed
+    * plan holds no data.
+    */
   private final class Plan(val analyzed: logical.LogicalPlan,
       val optimized: logical.LogicalPlan, val encoder: Encoder[Row],
-      val deps: Seq[SessionMemo.Dep], val confs: Map[String, String])
+      val deps: Seq[SessionMemo.Dep], val confs: Map[String, String],
+      val executed: Option[QueryExecution])
 
-  /** Query name → `hit` | `built` | `uncacheable:<reason>` of its last
-    * lookup in this JVM since the last [[drainOutcomes]].
+  /** Query name → `rerun` | `hit` | `built` | `uncacheable:<reason>` of
+    * its last lookup in this JVM since the last [[drainOutcomes]].
     */
   private val outcomes = new ConcurrentHashMap[String, String]()
 
@@ -96,8 +112,14 @@ object PlanMemo {
         p.confs == confs && SessionMemo.current(p.deps)) match {
       case Some(p) =>
         SessionMemo.recordAll(p.deps)
-        outcomes.put(name, "hit")
-        GraftPlanBridge.replay(s, p.analyzed, p.optimized, p.encoder)
+        p.executed match {
+          case Some(qe) =>
+            outcomes.put(name, "rerun")
+            GraftPlanBridge.rerun(s, qe, p.encoder)
+          case None =>
+            outcomes.put(name, "hit")
+            GraftPlanBridge.replay(s, p.analyzed, p.optimized, p.encoder)
+        }
       case None =>
         val sc = s.sparkContext
         hookContext(sc)
@@ -112,8 +134,9 @@ object PlanMemo {
             finally sc.setLocalProperty(SessionMemo.BuildTag, outer)
           verdict(s, df, deps, confs, jobsOutsideMemos(sc, token)) match {
             case Right(optimized) =>
-              SessionMemo.putSlot(s, dir, what, new Plan(
-                df.queryExecution.analyzed, optimized, df.encoder, deps, confs))
+              val qe = df.queryExecution
+              SessionMemo.putSlot(s, dir, what, new Plan(qe.analyzed, optimized,
+                df.encoder, deps, confs, Some(qe).filter(dataFree)))
               outcomes.put(name, "built")
             case Left(why) => outcomes.put(name, s"uncacheable:$why")
           }
@@ -126,6 +149,44 @@ object PlanMemo {
     * neither a recorded dependency nor a conf.
     */
   def dropAll(): Unit = SessionMemo.dropWhere(_.isInstanceOf[Plan])
+
+  /** The executed plan the (`s`, `name`, `dir`) slot keeps for reruns, if
+    * any (inspection hook for specs).
+    */
+  private[graft] def keptPlan(s: SparkSession, name: String,
+      dir: String): Option[SparkPlan] =
+    SessionMemo.slot[Plan](s, dir, s"plan:$name")(_ => true)
+      .flatMap(_.executed).map(_.executedPlan)
+
+  /** True when `qe`'s executed plan, planned now if the caller has not
+    * yet, holds no data; false when planning fails.
+    */
+  private def dataFree(qe: QueryExecution): Boolean =
+    try !holdsData(qe.executedPlan) catch { case NonFatal(_) => false }
+
+  /** True when `plan` holds data that a later execution of the same plan
+    * object would reuse or that would outlive its execution: an exchange
+    * (shuffle output or broadcast relation), a query stage over one, a
+    * subquery (scalar, IN, dynamic pruning or runtime bloom filter; its
+    * result is kept), cached data or observed metrics. Looks through the
+    * adaptive wrapper (its input plan and its current plan, which before
+    * the first execution is the initial plan with its exchanges, after
+    * it the final plan with its stages) and through every subquery.
+    */
+  private def holdsData(plan: SparkPlan): Boolean = {
+    def nodes(p: SparkPlan): Iterator[SparkPlan] = Iterator(p) ++ (p match {
+      case a: AdaptiveSparkPlanExec =>
+        nodes(a.inputPlan) ++ nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => (p.children ++ p.subqueries).iterator.flatMap(nodes)
+    })
+    nodes(plan).exists {
+      case _: Exchange | _: ReusedExchangeExec | _: InMemoryTableScanExec |
+           _: CollectMetricsExec => true
+      case q: QueryStageExec => !q.isInstanceOf[ResultQueryStageExec]
+      case p => p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]]))
+    }
+  }
 
   /** The optimized plan when the build qualifies, else the reason. The
     * cheap checks run first; the job count, which waits for the listener

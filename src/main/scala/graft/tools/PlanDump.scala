@@ -22,9 +22,11 @@ import graft.operators.Dedup
   * is x7's memo build itself).
   *
   * With the suffix `repeat` it dumps, instead, the named queries built
-  * and collected twice in one session: `<name>_miss.txt` and
-  * `<name>_hit.txt`, each the plan memo's outcome (`PlanMemo`), the
-  * query's tracker phases and its final executed plan.
+  * and collected three times in one session: `<name>_miss.txt`,
+  * `<name>_hit.txt` and `<name>_hit2.txt`, each the plan memo's outcome
+  * (`PlanMemo`: `built`, then `rerun` or `hit`), the query's tracker
+  * phases, whether its executed plan is the miss's own object, and its
+  * final executed plan.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [sfDir] [names]
   *          [key=value ... session confs]
@@ -55,19 +57,28 @@ object PlanDump {
       }
     SparkEntry.warm(spark)
     if (suffix == "repeat")
-      selected(SparkEntry.queries.keys)
-        .foreach(n => Seq("miss", "hit").foreach { tag =>
+      selected(SparkEntry.queries.keys).foreach { n =>
+        val runs = Seq("miss", "hit", "hit2").map { tag =>
           val df = SparkEntry.queries(n)(spark, sfDir)
           val outcome = graft.PlanMemo.drainOutcomes().getOrElse(n, "-")
           df.collect()
-          val qe = df.queryExecution
+          System.err.println(s"[plan] $n $tag: $outcome")
+          (tag, outcome, df.queryExecution)
+        }
+        val missPlan = runs.head._3.executedPlan
+        runs.foreach { case (tag, outcome, qe) =>
           val phases = qe.tracker.phases.toSeq.sortBy(_._2.startTimeMs)
             .map { case (p, t) => s"$p ${t.durationMs} ms" }
+          val shared =
+            if (tag == "miss") ""
+            else if (qe.executedPlan eq missPlan) "executed plan: the miss's\n"
+            else "executed plan: new\n"
           write(s"${n}_$tag", s"plan memo: $outcome\n" +
-            s"tracker phases: ${phases.mkString(", ")}\n\n" +
+            s"tracker phases: ${if (phases.isEmpty) "none" else phases.mkString(", ")}\n" +
+            shared + "\n" +
             qe.explainString(org.apache.spark.sql.execution.FormattedMode))
-          System.err.println(s"[plan] $n $tag: $outcome")
-        })
+        }
+      }
     else {
       // operator plans first, before any memo build: a build's cached
       // intermediates (released by RestMemo.frame, not by every memo

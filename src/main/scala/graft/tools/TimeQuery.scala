@@ -16,8 +16,9 @@ import graft.{Bench, Graft, SparkEntry}
   * with its task count, input/shuffle bytes and records and GC
   * (`[stage]`), and the query's driver-side analyze+optimize+plan time
   * on a fresh identical frame (`[plan ]`; a plan memo hit skips analyze
-  * and optimize). Every `[time]` line carries the plan memo's outcome
-  * for that pass (`plan=hit|built|uncacheable:<reason>`, see
+  * and optimize, a rerun all three: `none`). Every `[time]` line carries
+  * the plan memo's outcome for that pass
+  * (`plan=rerun|hit|built|uncacheable:<reason>`, see
   * `PlanMemo`). Each pass's jobs carry the
   * query's name as their job description, and a `[stage]` line names
   * its query and the operator scopes of its RDDs (`Exchange`,
@@ -73,7 +74,11 @@ object TimeQuery {
             val outcome = planOutcome(n)
             val t1 = System.nanoTime()
             f2.queryExecution.executedPlan
-            val phases = if (outcome == "hit") "plan" else "analyze+optimize+plan"
+            val phases = outcome match {
+              case "rerun" => "none"
+              case "hit" => "plan"
+              case _ => "analyze+optimize+plan"
+            }
             println(f"[plan ] $n ${(System.nanoTime() - t1) / 1e9}%8.2f s " +
               s"($phases; plan=$outcome)")
           }
@@ -91,8 +96,8 @@ object TimeQuery {
     spark.stop()
   }
 
-  /** The plan memo's outcome for `n`'s last build (`hit`, `built` or
-    * `uncacheable:<reason>`): a repeat that rebuilt shows here.
+  /** The plan memo's outcome for `n`'s last build (`rerun`, `hit`,
+    * `built` or `uncacheable:<reason>`): a repeat that rebuilt shows here.
     */
   private def planOutcome(n: String): String =
     graft.PlanMemo.drainOutcomes().getOrElse(n, "-")

@@ -14,12 +14,14 @@ import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExcha
 /** A one-slot session ([[Graft.oneSlot]]) runs each of these queries as
   * one stage: the final executed plan holds no `ShuffleExchangeExec`,
   * and every answer equals the four-slot one (order-insensitive digest).
+  * Their executed plans hold no data there, so the plan memo reruns
+  * them: a third call reports `rerun`, records no planning phase, runs
+  * one job and answers as four slots do.
   *
   * The suites share one `local[4]` context, and a JVM holds one context,
   * so the one-slot side runs in a child JVM on this JVM's class path
   * (the companion's `main`) with its own at-rest memo dir, so x7's and
-  * v5's memos are built, not reloaded, under `local[1]`. Once its memos
-  * are built, v5 runs as one job there.
+  * v5's memos are built, not reloaded, under `local[1]`.
   */
 class OneSlotPlanSpec extends SparkSpec {
   import OneSlotPlanSpec._
@@ -46,13 +48,20 @@ class OneSlotPlanSpec extends SparkSpec {
       val one = lines.collect {
         case Array(n, exchanges, digest) => n -> (exchanges.toInt, digest)
       }.toMap
-      assert(one.keySet == Queries.toSet)
-      assert(lines.collect { case Array("v5 jobs", n) => n.toInt } == Seq(1),
-        "v5 at one slot does not run as one job")
+      val third = lines.collect {
+        case Array("third", n, outcome, phases, jobs, digest) =>
+          n -> (outcome, phases, jobs.toInt, digest)
+      }.toMap
+      assert(one.keySet == Queries.toSet && third.keySet == Queries.toSet)
       Queries.foreach { n =>
         val (exchanges, digest) = one(n)
         assert(exchanges == 0, s"$n: $exchanges shuffle exchanges at one slot")
         assert(digest == four(n), s"$n: the one-slot answer differs from four slots'")
+        val (outcome, phases, jobs, digest3) = third(n)
+        assert(outcome == "rerun", s"$n: a third call at one slot reported $outcome")
+        assert(phases == "none", s"$n: a rerun recorded the phases $phases")
+        assert(jobs == 1, s"$n: a rerun at one slot ran $jobs jobs")
+        assert(digest3 == four(n), s"$n: the rerun answer differs from four slots'")
       }
     } finally deleteRecursively(tmp)
   }
@@ -75,7 +84,14 @@ object OneSlotPlanSpec {
     */
   def answer(spark: SparkSession, name: String): (String, Int) = {
     val df: DataFrame = SparkEntry.queries(name)(spark, SfDir)
-    val rows = df.collect()
+    val digest = digestOf(df.collect())
+    val exchanges = flatten(df.queryExecution.executedPlan)
+      .count(_.isInstanceOf[ShuffleExchangeExec])
+    spark.catalog.clearCache()
+    (digest, exchanges)
+  }
+
+  private def digestOf(rows: Array[Row]): String = {
     def canon(v: Any): String = v match {
       case null => "null"
       case r: Row => r.toSeq.map(canon).mkString("(", ",", ")")
@@ -87,11 +103,7 @@ object OneSlotPlanSpec {
     }
     val md = java.security.MessageDigest.getInstance("SHA-256")
     rows.map(canon).sorted.foreach(r => md.update((r + "\n").getBytes(UTF_8)))
-    val digest = md.digest().map(b => f"$b%02x").mkString
-    val exchanges = flatten(df.queryExecution.executedPlan)
-      .count(_.isInstanceOf[ShuffleExchangeExec])
-    spark.catalog.clearCache()
-    (digest, exchanges)
+    md.digest().map(b => f"$b%02x").mkString
   }
 
   /** Every node of a plan, through AQE's wrappers and subqueries. */
@@ -102,8 +114,11 @@ object OneSlotPlanSpec {
     case _ => p +: (p.children ++ p.subqueries).flatMap(flatten)
   }
 
-  /** Jobs a repeat run of v5 starts, its memos built. */
-  def v5Jobs(spark: SparkSession): Int = {
+  /** Call query `name` again and collect it: the plan memo's outcome,
+    * the tracker phases (`none` when there are none), the jobs the
+    * collect starts and the digest.
+    */
+  def repeat(spark: SparkSession, name: String): (String, String, Int, String) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
@@ -111,19 +126,25 @@ object OneSlotPlanSpec {
         jobs.incrementAndGet(); ()
       }
     }
-    val df = SparkEntry.queries("v5_cosine_neardups")(spark, SfDir)
+    PlanMemo.drainOutcomes()
+    val df = SparkEntry.queries(name)(spark, SfDir)
+    val outcome = PlanMemo.drainOutcomes().getOrElse(name, "-")
     org.apache.spark.ListenerBusProbe.drain(sc)
     sc.addSparkListener(listener)
-    try {
-      df.collect()
+    val rows = try {
+      val r = df.collect()
       org.apache.spark.ListenerBusProbe.drain(sc)
+      r
     } finally sc.removeSparkListener(listener)
-    jobs.get()
+    val phases = df.queryExecution.tracker.phases.keys.toSeq.sorted
+    (outcome, if (phases.isEmpty) "none" else phases.mkString(","), jobs.get(),
+      digestOf(rows))
   }
 
   /** The one-slot side: `<restDir> <out>`; writes one
-    * `name<TAB>exchanges<TAB>digest` line per query, then
-    * `v5 jobs<TAB>n`.
+    * `name<TAB>exchanges<TAB>digest` line per query, then, after a second
+    * call of each, one `third<TAB>name<TAB>outcome<TAB>phases<TAB>jobs<TAB>digest`
+    * line per query.
     */
   def main(args: Array[String]): Unit = {
     val spark = Graft.session("local[1]", 1, Seq("graft.memo.restDir" -> args(0)))
@@ -133,7 +154,12 @@ object OneSlotPlanSpec {
         val (digest, exchanges) = answer(spark, n)
         s"$n\t$exchanges\t$digest"
       }
-      Files.write(Path.of(args(1)), (lines :+ s"v5 jobs\t${v5Jobs(spark)}").asJava)
+      Queries.foreach(repeat(spark, _))
+      val third = Queries.map { n =>
+        val (outcome, phases, jobs, digest) = repeat(spark, n)
+        s"third\t$n\t$outcome\t$phases\t$jobs\t$digest"
+      }
+      Files.write(Path.of(args(1)), (lines ++ third).asJava)
     } finally spark.stop()
   }
 }
